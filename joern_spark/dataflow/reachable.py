@@ -8,7 +8,8 @@ iteration count is bounded by the longest DDG path in any document (small),
 NOT by corpus size.
 
 The loop is ADAPTIVE on the one statistic the driver learns for free each
-round — the frontier count from the emptiness check:
+round — the frontier count, which the round's one materializing job
+yields as the growth of the visited set:
 
 - **small frontier** (< `broadcast_threshold` rows): the round's joins get
   explicit `broadcast(frontier)` / `broadcast(visited)` hints (no shuffle
@@ -41,44 +42,45 @@ from pyspark.sql import functions as F
 
 def reachable_pairs(edges: DataFrame, sources: DataFrame, sinks: DataFrame,
                     max_iterations: int = 128,
-                    broadcast_threshold: int | None = None) -> DataFrame:
+                    broadcast_threshold: int | None = None,
+                    _stats: dict | None = None) -> DataFrame:
     """BFS backwards from sinks over REACHING_DEF edges.
 
     edges:   (url, src, dst, label, variable)
     sources: (url, node_id)
     sinks:   (url, node_id)
-    returns: (url, source_id, sink_id) pairs where source reaches sink.
+    returns: (url, source_id, sink_id) pairs where source reaches sink;
+             persisted and caller-owned.
 
     `max_iterations` bounds the total HOP count (default 128, matching
-    the pre-round-5 depth of 64 two-hop rounds).  Every round's frontier is
-    persisted + counted: the frontier is the SMALL set (≤ active chain
-    tips, never the corpus), so materializing it per round costs one tiny
-    job and buys (a) a free emptiness check, (b) the cardinality that
-    drives the adaptive plan above, (c) zero lineage growth — `visited`
-    stays a plain union of already-materialized frontiers, so no round
-    recomputes a prior join chain.  (localCheckpoint is the textbook tool
-    but Spark 4.1 fails to re-resolve EXCEPT/anti-join plans over unions
-    of checkpointed relations — "key not found: url#N" — so materialized
-    persist it is.)
+    the pre-round-5 depth of 64 two-hop rounds).  The loop state is ONE
+    frame, `visited` (url, cur, sink_id, new), with `new` marking the
+    rows the last round added — the frontier.  Each round's `visited` is
+    a `sparkutil.Rounds` checkpoint: its row count is the round's one
+    job and yields the frontier size (the growth) that drives the
+    adaptive plan above, and the next round plans from a single leaf.
+    Keeping the frontier inside `visited` also keeps the anti-join's
+    right side a single checkpointed relation: Spark 4.1 fails to
+    re-resolve an anti-join over a UNION of checkpointed relations
+    ("key not found: url#N").  `_stats`, when passed, receives the
+    per-round trace (`Rounds`).
+
+    Before the checkpoints each round persisted its frontier, and
+    `visited` stayed a union of persisted frames, so every plan embedded
+    the whole loop history (about 5x more plan leaves per round).
+    Measured with `perfbench/run.py --workload graph --trace 1` on a
+    4-core host, seeds 1, 13, 14 and 15: the reach phase took 14.7-17.4 s,
+    9.9-11.6 s of it outside any Spark job; with a leaf per round it
+    takes 4.7-6.6 s, 2.2-3.0 s outside jobs.
     """
-    from joern_spark.sparkutil import BROADCAST_THRESHOLD
+    from joern_spark.sparkutil import (BROADCAST_THRESHOLD, Rounds,
+                                       adaptive_paused)
     if broadcast_threshold is None:
         broadcast_threshold = BROADCAST_THRESHOLD
     spark = edges.sparkSession
     rd = (edges.where(F.col("label") == "REACHING_DEF")
           .select("url", "src", "dst"))
-
-    # distinct up front so the union-without-distinct invariant below holds
-    # even if the caller's sinks frame carries duplicate (url, node_id) rows
-    frontier = sinks.select("url", F.col("node_id").alias("cur"),
-                            F.col("node_id").alias("sink_id")).distinct().persist()
-    # COUNT the initial frontier: the sink set can itself be corpus-scale,
-    # and both the round's broadcast decision and the visited-size
-    # accounting must see its true cardinality (an unconditional "small"
-    # first round would broadcast a corpus-sized frame)
-    init_n = frontier.count()
-    visited = frontier
-    pinned = [frontier]  # every persisted frame; released before returning
+    keys = ["url", "cur", "sink_id"]
 
     def expand(fr, hint_broadcast):
         f = F.broadcast(fr) if hint_broadcast else fr
@@ -89,72 +91,60 @@ def reachable_pairs(edges: DataFrame, sources: DataFrame, sinks: DataFrame,
             .select(F.col("f.url").alias("url"), F.col("e.src").alias("cur"), "sink_id")
         )
 
-    frontier_n = init_n
-    visited_n = init_n
-    hops_done = 0
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    sp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        while hops_done < max_iterations:
+    with Rounds(max_iterations, _stats) as rounds:
+        # distinct up front so the union-without-distinct invariant below
+        # holds even if the caller's sinks frame carries duplicate rows.
+        # The seed is counted like every round: the sink set can itself be
+        # corpus-scale, and the first round's broadcast decision must see
+        # its true cardinality.
+        visited, visited_n = rounds.checkpoint(
+            sinks.select("url", F.col("node_id").alias("cur"),
+                         F.col("node_id").alias("sink_id"))
+            .distinct().withColumn("new", F.lit(True)))
+        frontier_n = visited_n
+        hops_done = 0
+        for _ in rounds:
             small = frontier_n < broadcast_threshold
-            spark.conf.set("spark.sql.adaptive.enabled",
-                           "false" if small else aqe_before)
-            # with AQE paused nothing coalesces post-shuffle: the round's
-            # one shuffle (the distinct) would otherwise schedule the full
-            # default partition count in near-empty tasks per round — the
-            # same small-regime narrowing the CC loop applies (sparkutil
-            # adaptive_paused(shuffle_partitions=8))
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           "8" if small else sp_before)
             k = min(4 if small else 2, max_iterations - hops_done)
-            # k hops per round; only the PERSISTED round frontier gets a
-            # broadcast hint — hinting (or persisting) the intra-round hop
-            # frames forces one driver materialization job per hop, which
-            # measured ~20x slower than letting the chain re-probe.
-            hops = [expand(frontier, small)]
-            for _ in range(k - 1):
-                hops.append(expand(hops[-1], False))
-            step = hops[0]
-            for h in hops[1:]:
-                step = step.union(h)
-            vis = F.broadcast(visited) if visited_n < broadcast_threshold else visited
-            # anti-join (vs everything seen) BEFORE distinct: the anti is
-            # broadcast/narrow in the small regime, so the one shuffle per
-            # round (the distinct) sees the already-reduced set
-            new_frontier = (step.join(vis, ["url", "cur", "sink_id"], "left_anti")
-                            .distinct().persist())
-            pinned.append(new_frontier)
-            n = new_frontier.count()
-            if n == 0:
-                break
-            # new_frontier is disjoint from visited by construction (anti-join
-            # above) — a plain union is exact; re-distincting the whole
-            # accumulated set every round would re-shuffle it per round.
-            visited = visited.union(new_frontier)
-            frontier = new_frontier
-            frontier_n = n
-            visited_n += n
+            # with AQE paused nothing coalesces post-shuffle: the round's
+            # one shuffle (the distinct) runs in 8 tasks, not the default
+            # partition count
+            with adaptive_paused(spark, small, shuffle_partitions=8):
+                frontier = visited.where("new").select(*keys)
+                # k hops per round; only the round's frontier gets a
+                # broadcast hint — hinting (or persisting) the intra-round
+                # hop frames forces one driver materialization job per
+                # hop, which measured ~20x slower than letting the chain
+                # re-probe.
+                hops = [expand(frontier, small)]
+                for _ in range(k - 1):
+                    hops.append(expand(hops[-1], False))
+                step = hops[0]
+                for h in hops[1:]:
+                    step = step.union(h)
+                vis = (F.broadcast(visited) if visited_n < broadcast_threshold
+                       else visited)
+                # anti-join (vs everything seen) BEFORE distinct: the anti
+                # is broadcast/narrow in the small regime, so the one
+                # shuffle per round (the distinct) sees the reduced set.
+                # The fresh rows are disjoint from `visited` by
+                # construction, so a plain union is exact.
+                fresh = step.join(vis, keys, "left_anti").distinct()
+                nxt, n = rounds.checkpoint(
+                    visited.withColumn("new", F.lit(False))
+                    .unionByName(fresh.withColumn("new", F.lit(True))))
+            rounds.release(visited)
+            visited, frontier_n, visited_n = nxt, n - visited_n, n
             hops_done += k
+            if frontier_n == 0 or hops_done >= max_iterations:
+                break
 
-        # The AQE pause is scoped to the LOOP body only: the final
-        # visited⋈sources join runs with the caller's AQE setting —
-        # `visited` is the accumulated set and can be far larger than the
-        # last (small) frontier, so it must get AQE's runtime coalescing
-        # and skew handling even when the loop ended in the small regime.
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_before)
+        # the final visited⋈sources join runs with the caller's AQE
+        # setting: `visited` can be far larger than the last frontier
         src = sources.select(F.col("url").alias("s_url"), F.col("node_id").alias("source_id"))
         result = (visited.join(src, on=[visited.url == src.s_url, visited.cur == src.source_id])
                   .select("url", "source_id", "sink_id").distinct().persist())
-        # Materialize the (pair-sized) result, then release every per-frontier
-        # cache — otherwise repeated calls in a long-lived session accumulate
-        # one cached block set per frontier per call (storage-memory creep).
-        # The returned frame stays persisted (single small cache, caller-owned).
+        # materialize the (pair-sized) result before `rounds` releases the
+        # checkpoint it is computed from
         result.count()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_before)
-        # release caches on the error path too, not just on success
-        for df in pinned:
-            df.unpersist(blocking=False)
     return result

@@ -365,171 +365,152 @@ def connected_dup_clusters(pairs: DataFrame,
 
     Returns (doc_id, cluster_id) for every doc in at least one pair,
     cluster_id = min doc_id of the component.  The returned frame is
-    persisted and caller-owned.  `_stats`, when passed, receives
-    {"rounds": r, "edges": n} for observability/tests.
+    persisted and caller-owned; `pairs` stays cached if the caller cached
+    it.  `_stats`, when passed, receives {"rounds": r, "edges": n} and the
+    per-round `sparkutil.Rounds` trace for observability/tests.
     """
     import logging
 
-    from joern_spark.sparkutil import BROADCAST_THRESHOLD, adaptive_paused
+    from joern_spark.sparkutil import (BROADCAST_THRESHOLD, Rounds,
+                                       adaptive_paused)
 
     spark = pairs.sparkSession
     if local_threshold is None:
         local_threshold = BROADCAST_THRESHOLD
-    # materialize the (expensive-lineage) pair frame ONCE: its count both
-    # decides the regime and pre-computes the input of either path
-    pairs_p = pairs.persist()
-    n_pairs = pairs_p.count()
-    if 2 * n_pairs < local_threshold:
-        # SMALL-GRAPH SHORT-CIRCUIT (r8): below the same row bound this
-        # loop already uses to broadcast the label frame, every round's
-        # `F.broadcast(labels)` collects a label set of this size to the
-        # driver anyway — r rounds of that traffic, plus 2-4 driver jobs
-        # per round, cost ~2 s at bench scale for a graph a union-find
-        # folds in milliseconds.  One bounded collect (≤ local_threshold
-        # rows of two int64s) replaces the whole loop; the large regime
-        # is untouched and tests force local_threshold=0 to pin the
-        # distributed algorithm against this solver's output.  The
-        # union-find is direction- and duplicate-insensitive, so the
-        # directed-dedup (stack + distinct) stage is skipped entirely,
-        # and the label frame goes back through Arrow (pandas input),
-        # not the pickled-list path (~1 s at 5k rows).
-        import uuid
+    with Rounds(max_iterations, _stats) as rounds:
+        # materialize the (expensive-lineage) pair frame ONCE: its count
+        # both decides the regime and pre-computes the input of either
+        # path.  A frame the caller already cached stays the caller's.
+        pairs_p = rounds.persist(pairs)
+        n_pairs = pairs_p.count()
+        if 2 * n_pairs < local_threshold:
+            # SMALL-GRAPH SHORT-CIRCUIT (r8): below the same row bound this
+            # loop already uses to broadcast the label frame, every round's
+            # `F.broadcast(labels)` collects a label set of this size to the
+            # driver anyway — r rounds of that traffic, plus 2-4 driver jobs
+            # per round, cost ~2 s at bench scale for a graph a union-find
+            # folds in milliseconds.  One bounded collect (≤ local_threshold
+            # rows of two int64s) replaces the whole loop; the large regime
+            # is untouched and tests force local_threshold=0 to pin the
+            # distributed algorithm against this solver's output.  The
+            # union-find is direction- and duplicate-insensitive, so the
+            # directed-dedup (stack + distinct) stage is skipped entirely,
+            # and the label frame goes back through Arrow (pandas input),
+            # not the pickled-list path (~1 s at 5k rows).
+            import uuid
 
-        import pandas as pd
+            import pandas as pd
 
-        labels_map = _local_components(
-            (r.doc_a, r.doc_b) for r in pairs_p.collect())
-        ids = sorted(labels_map)
-        out = spark.createDataFrame(
-            pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                          "cluster_id": pd.Series(
-                              [labels_map[i] for i in ids], dtype="int64")}),
-            schema="doc_id long, cluster_id long")
-        # plan-identity guard: two local-relation frames with identical rows
-        # canonicalize to the SAME plan, so unpersisting one (e.g.
-        # corpus_clean's own-clusters path releasing its internal frame)
-        # would evict a caller-owned twin from the cache.  A unique constant
-        # filter (always true, folded at runtime) makes each call's plan
-        # distinct — the distributed path gets this for free from its
-        # per-call localCheckpoint RDD ids.
-        tag = uuid.uuid4().hex
-        out = out.where(F.lit(tag) == F.lit(tag)).persist()
-        out.count()
-        pairs_p.unpersist(blocking=False)
-        logging.getLogger(__name__).info(
-            "connected_dup_clusters: %d pairs, local union-find", n_pairs)
-        if _stats is not None:
-            _stats["rounds"] = 0
-            _stats["edges"] = 2 * n_pairs
-            _stats["local"] = True
-        return out
-    # both edge directions in ONE pass over the (cached) pairs
-    edges = (pairs_p.selectExpr(
-                "stack(2, doc_a, doc_b, doc_b, doc_a) AS (a, b)")
-             .distinct().persist())
-    n_edges = edges.count()
-    pairs_p.unpersist(blocking=False)
-    small = n_edges < BROADCAST_THRESHOLD
-    pinned = [edges]
-    if small:
-        # a small CC problem should not schedule default-parallelism
-        # empty tasks per round: narrow the cached edge partitions once
-        # (coalesce reads the cache, no shuffle) so every per-round join
-        # over `edges` runs 8 tasks, not the cluster width
-        edges = edges.coalesce(8)
-    else:
-        # the edge frame is STATIC across rounds but is the largest side
-        # of every propagate join — pre-hash it on the join key once so
-        # each round's join reuses the cached partitioning (Exchange
-        # reuse) instead of re-shuffling all edges per round
-        e0 = edges
-        edges = edges.repartition(F.col("b")).persist()
-        edges.count()
-        e0.unpersist(blocking=False)
-        pinned = [edges]
-    labels = (edges.select(F.col("a").alias("doc_id")).distinct()
-              .withColumn("label", F.col("doc_id")).persist())
-    pinned.append(labels)
-    converged = False
-    rounds = 0
-    # small regime (same playbook as dataflow/reachable.py, shared
-    # threshold + AQE pause in sparkutil): the label/edge frames are
-    # chain-tip-sized, so broadcast the label side and skip AQE's
-    # per-stage re-planning round-trips; large graphs keep shuffle
-    # joins + AQE
-    with adaptive_paused(spark, small, shuffle_partitions=8):
-        for _ in range(max_iterations):
-            rounds += 1
-            # -- step 1: neighbor-min propagation ------------------------
-            lbl = F.broadcast(labels) if small else labels
-            nbr_min = (edges.join(lbl, edges.b == labels.doc_id)
-                       .groupBy(F.col("a").alias("doc_id"))
-                       .agg(F.min("label").alias("nbr_label")))
-            if small:
-                nbr_min = F.broadcast(nbr_min)
-            # fold the convergence test into the update (a separate
-            # new-vs-old join would cost one more stage per round)
-            prop = (labels.join(nbr_min, "doc_id", "left")
+            labels_map = _local_components(
+                (r.doc_a, r.doc_b) for r in pairs_p.collect())
+            ids = sorted(labels_map)
+            out = spark.createDataFrame(
+                pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
+                              "cluster_id": pd.Series(
+                                  [labels_map[i] for i in ids], dtype="int64")}),
+                schema="doc_id long, cluster_id long")
+            # plan-identity guard: two local-relation frames with identical
+            # rows canonicalize to the SAME plan, so unpersisting one (e.g.
+            # corpus_clean's own-clusters path releasing its internal frame)
+            # would evict a caller-owned twin from the cache.  A unique
+            # constant filter (always true, folded at runtime) makes each
+            # call's plan distinct — the distributed path gets this for
+            # free from its per-call localCheckpoint RDD ids.
+            tag = uuid.uuid4().hex
+            out = out.where(F.lit(tag) == F.lit(tag)).persist()
+            out.count()
+            logging.getLogger(__name__).info(
+                "connected_dup_clusters: %d pairs, local union-find", n_pairs)
+            if _stats is not None:
+                _stats["rounds"] = 0
+                _stats["edges"] = 2 * n_pairs
+                _stats["local"] = True
+            return out
+        # both edge directions in ONE pass over the (cached) pairs
+        edges = rounds.persist(pairs_p.selectExpr(
+            "stack(2, doc_a, doc_b, doc_b, doc_a) AS (a, b)").distinct())
+        n_edges = edges.count()
+        rounds.release(pairs_p)
+        small = n_edges < BROADCAST_THRESHOLD
+        if small:
+            # a small CC problem should not schedule default-parallelism
+            # empty tasks per round: narrow the cached edge partitions once
+            # (coalesce reads the cache, no shuffle) so every per-round
+            # join over `edges` runs 8 tasks, not the cluster width
+            edges = edges.coalesce(8)
+        else:
+            # the edge frame is STATIC across rounds but is the largest
+            # side of every propagate join — pre-hash it on the join key
+            # once so each round's join reuses the cached partitioning
+            # (Exchange reuse) instead of re-shuffling all edges per round
+            e0 = edges
+            edges = rounds.persist(edges.repartition(F.col("b")))
+            edges.count()
+            rounds.release(e0)
+        labels = rounds.persist(edges.select(F.col("a").alias("doc_id"))
+                                .distinct().withColumn("label", F.col("doc_id")))
+        converged = False
+        # small regime (same playbook as dataflow/reachable.py, shared
+        # threshold + AQE pause in sparkutil): the label/edge frames are
+        # chain-tip-sized, so broadcast the label side and skip AQE's
+        # per-stage re-planning round-trips; large graphs keep shuffle
+        # joins + AQE
+        with adaptive_paused(spark, small, shuffle_partitions=8):
+            for _ in rounds:
+                # -- step 1: neighbor-min propagation --------------------
+                lbl = F.broadcast(labels) if small else labels
+                nbr_min = (edges.join(lbl, edges.b == labels.doc_id)
+                           .groupBy(F.col("a").alias("doc_id"))
+                           .agg(F.min("label").alias("nbr_label")))
+                if small:
+                    nbr_min = F.broadcast(nbr_min)
+                # fold the convergence test into the update (a separate
+                # new-vs-old join would cost one more stage per round)
+                prop = rounds.persist(
+                    labels.join(nbr_min, "doc_id", "left")
                     .select("doc_id",
                             F.least(F.col("label"),
                                     F.coalesce("nbr_label", "label"))
                             .alias("label"),
                             (F.col("nbr_label") < F.col("label"))
-                            .alias("chg"))
-                    .persist())
-            pinned.append(prop)
-            # -- step 2: pointer jump (label := label-of-label) ----------
-            mapping = prop.select(F.col("doc_id").alias("m_id"),
-                                  F.col("label").alias("m_label"))
-            if small:
-                mapping = F.broadcast(mapping)
-            # localCheckpoint (NOT persist): the jump references `prop`
-            # on BOTH join sides, so without lineage truncation the
-            # logical plan DOUBLES per round — exponential tree growth
-            # that OOMs the driver's plan builder by ~round 10.  The
-            # eager checkpoint materializes the round (doubling as the
-            # free cardinality check) and restarts the plan from a leaf.
-            # (The Spark 4.1 localCheckpoint re-resolution bug hits
-            # EXCEPT/anti-join-over-union plans — reachable_pairs — not
-            # this loop's plain joins.)
-            new_labels = (prop.join(mapping,
-                                    prop.label == F.col("m_id"), "left")
-                          .select("doc_id",
-                                  F.least(F.col("label"),
-                                          F.coalesce("m_label", "label"))
-                                  .alias("label"),
-                                  (F.col("chg")
-                                   | (F.col("m_label") < F.col("label")))
-                                  .alias("chg"))
-                          .localCheckpoint(eager=True))
-            # NOT added to `pinned`: Dataset.unpersist routes through the
-            # CacheManager, which does not track RDD-level localCheckpoint
-            # storage — calling it on these frames is a no-op.  Their
-            # blocks are reclaimed by the ContextCleaner once the frame
-            # (and the result built on it) is garbage-collected; each
-            # round holds at most two checkpointed label generations.
-            changed = new_labels.where(F.col("chg")).count()
-            prop.unpersist(blocking=False)
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
-        logging.getLogger(__name__).info(
-            "connected_dup_clusters: %d edges, %d rounds, converged=%s",
-            n_edges, rounds, converged)
-        if _stats is not None:
-            _stats["rounds"] = rounds
-            _stats["edges"] = n_edges
-        try:
+                            .alias("chg")))
+                # -- step 2: pointer jump (label := label-of-label) ------
+                mapping = prop.select(F.col("doc_id").alias("m_id"),
+                                      F.col("label").alias("m_label"))
+                if small:
+                    mapping = F.broadcast(mapping)
+                # checkpointed, not persisted: the jump references `prop`
+                # on BOTH join sides, so without lineage truncation the
+                # logical plan DOUBLES per round — exponential tree growth
+                # that OOMs the driver's plan builder by ~round 10.
+                new_labels, _ = rounds.checkpoint(
+                    prop.join(mapping, prop.label == F.col("m_id"), "left")
+                    .select("doc_id",
+                            F.least(F.col("label"),
+                                    F.coalesce("m_label", "label"))
+                            .alias("label"),
+                            (F.col("chg")
+                             | (F.col("m_label") < F.col("label")))
+                            .alias("chg")))
+                changed = new_labels.where(F.col("chg")).count()
+                rounds.release(prop, labels)
+                labels = new_labels
+                if changed == 0:
+                    converged = True
+                    break
+            n_rounds = len(rounds.trace)
+            logging.getLogger(__name__).info(
+                "connected_dup_clusters: %d edges, %d rounds, converged=%s",
+                n_edges, n_rounds, converged)
+            if _stats is not None:
+                _stats["rounds"] = n_rounds
+                _stats["edges"] = n_edges
             if not converged:
                 raise RuntimeError(
                     f"connected_dup_clusters did not converge within "
                     f"{max_iterations} rounds ({n_edges} edges)")
+            # materialized before `rounds` releases the labels it reads
             out = (labels.select("doc_id", F.col("label").alias("cluster_id"))
                    .persist())
             out.count()
-        finally:
-            # release caches on the error path too, not just on success
-            for df in pinned:
-                df.unpersist(blocking=False)
     return out

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from joern_spark.sparkutil import Rounds
+
 ASSIGNMENT_NAMES = [
     "<operator>.assignment", "<operator>.assignmentOr", "<operator>.assignmentAnd",
     "<operator>.assignmentXor", "<operator>.assignmentDivision",
@@ -148,28 +150,35 @@ class Trav:
 
     # --- transitive closures (bounded iterative joins; SURVEY §2B `.ast`,
     # `.dominates`, `.controls`, ...) — one distributed hash join per hop,
-    # co-keyed on (url, node_id); `localCheckpoint` bounds lineage growth ---
+    # co-keyed on (url, node_id); every round is a `sparkutil.Rounds`
+    # checkpoint, so plans stay one round deep ---
     def closure(self, edge_label: str, forward: bool = True,
                 max_depth: int = 64, include_self: bool = True) -> "Trav":
         e = self.g.edges.where(F.col("label") == edge_label).select("url", "src", "dst")
         src_col, dst_col = ("src", "dst") if forward else ("dst", "src")
-        frontier = self.cursors()
-        acc = frontier
-        for i in range(max_depth):
-            step = (frontier.alias("f")
-                    .join(e.alias("e"),
-                          [F.col("f.url") == F.col("e.url"),
-                           F.col("f.node_id") == F.col(f"e.{src_col}")])
-                    .select(F.col("f.url").alias("url"),
-                            F.col(f"e.{dst_col}").alias("node_id"))
-                    .distinct())
-            new = step.subtract(acc)
-            if (i + 1) % 8 == 0:
-                new = new.localCheckpoint(eager=True)
-            if new.isEmpty():
-                break
-            acc = acc.union(new)
-            frontier = new
+        with Rounds(max_depth) as rounds:
+            # one state frame: everything reached, `new` marking the rows
+            # the last round added (the frontier)
+            acc, n = rounds.checkpoint(
+                self.cursors().withColumn("new", F.lit(True)))
+            for _ in rounds:
+                step = (acc.where("new").alias("f")
+                        .join(e.alias("e"),
+                              [F.col("f.url") == F.col("e.url"),
+                               F.col("f.node_id") == F.col(f"e.{src_col}")])
+                        .select(F.col("f.url").alias("url"),
+                                F.col(f"e.{dst_col}").alias("node_id"))
+                        .distinct())
+                new = step.subtract(acc.select("url", "node_id"))
+                nxt, m = rounds.checkpoint(
+                    acc.withColumn("new", F.lit(False))
+                    .unionByName(new.withColumn("new", F.lit(True))))
+                rounds.release(acc)
+                acc = nxt
+                if m == n:
+                    break
+                n = m
+            acc = rounds.keep(acc).select("url", "node_id")
         if not include_self:
             acc = acc.subtract(self.cursors())
         return Trav(self.g, acc.join(self.g.nodes, ["url", "node_id"]))
@@ -184,30 +193,35 @@ class Trav:
         chains are linear in the statement count, which makes per-hop BFS
         O(d) shuffles; doubling makes it O(log d).
 
-        Runs to FIXPOINT (the isEmpty early-exit makes converged extra
-        iterations free); max_doublings=16 bounds depth at 65536 as a
-        runaway backstop and raises rather than silently dropping pairs."""
+        Runs to FIXPOINT (a round that adds no pair ends the loop);
+        max_doublings=16 bounds depth at 65536 as a runaway backstop and
+        raises rather than silently dropping pairs."""
         e = self.g.edges.where(F.col("label") == edge_label)
         a, b = ("src", "dst") if forward else ("dst", "src")
-        pairs = e.select("url", F.col(a).alias("a"), F.col(b).alias("b")).distinct()
-        pairs = pairs.localCheckpoint(eager=True)
-        for it in range(max_doublings):
-            hop = (pairs.alias("l")
-                   .join(pairs.alias("r"),
-                         [F.col("l.url") == F.col("r.url"),
-                          F.col("l.b") == F.col("r.a")])
-                   .select(F.col("l.url").alias("url"), F.col("l.a").alias("a"),
-                           F.col("r.b").alias("b"))
-                   .distinct())
-            new = hop.subtract(pairs)
-            if new.isEmpty():
-                break
-            # new is disjoint from pairs (subtracted) — plain union is exact
-            pairs = pairs.union(new).localCheckpoint(eager=True)
-        else:
-            raise RuntimeError(
-                f"{edge_label} closure did not converge within "
-                f"{max_doublings} doublings (depth 2^{max_doublings})")
+        with Rounds(max_doublings) as rounds:
+            pairs, n = rounds.checkpoint(
+                e.select("url", F.col(a).alias("a"), F.col(b).alias("b")).distinct())
+            for _ in rounds:
+                hop = (pairs.alias("l")
+                       .join(pairs.alias("r"),
+                             [F.col("l.url") == F.col("r.url"),
+                              F.col("l.b") == F.col("r.a")])
+                       .select(F.col("l.url").alias("url"), F.col("l.a").alias("a"),
+                               F.col("r.b").alias("b"))
+                       .distinct())
+                # the new pairs are disjoint from `pairs` (subtracted) —
+                # plain union is exact
+                nxt, m = rounds.checkpoint(pairs.union(hop.subtract(pairs)))
+                rounds.release(pairs)
+                pairs = nxt
+                if m == n:
+                    break
+                n = m
+            else:
+                raise RuntimeError(
+                    f"{edge_label} closure did not converge within "
+                    f"{max_doublings} doublings (depth 2^{max_doublings})")
+            rounds.keep(pairs)
         reach = (self.cursors().alias("c")
                  .join(pairs.alias("p"),
                        [F.col("c.url") == F.col("p.url"),

@@ -6,8 +6,8 @@
    \\s semantics so they stay byte-identical to the DuckDB oracle
    (`regexp_split_to_array(trim(text), '\\s+')`, RE2 ASCII \\s).
 3. Sink bucket ids use `pmod`, never `abs(hash) % n` (Int.MinValue).
-4. `reachable_pairs` releases its per-frontier caches (no storage creep
-   across repeated calls).
+4. `reachable_pairs` and `connected_dup_clusters` release their
+   per-round caches (no storage creep across repeated calls).
 """
 
 from __future__ import annotations
@@ -97,18 +97,35 @@ def test_pmod_bucket_never_negative(spark):
 # -------------------------------------------------------- 4. cache hygiene
 
 def test_reachable_pairs_releases_frontier_caches(spark):
+    """Neither loop leaves a persistent RDD behind beyond the frame it
+    returns: reach in both regimes (per-round checkpoints) and the
+    distributed connected-components loop."""
     from joern_spark.dataflow.reachable import reachable_pairs
+    from joern_spark.pipeline.dedup import connected_dup_clusters
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def leaves_only_result(run, expect_rows):
+        before = persistent()
+        res = run()
+        assert res.count() == expect_rows
+        # only the (caller-owned) result frame may remain cached
+        assert len(persistent() - before) <= 1
+        res.unpersist(blocking=True)
+        assert not persistent() - before
 
     edges = spark.createDataFrame(
         [("u", 1, 2, "REACHING_DEF", "x"), ("u", 2, 3, "REACHING_DEF", "x")],
         "url string, src long, dst long, label string, variable string")
     sources = spark.createDataFrame([("u", 1)], "url string, node_id long")
     sinks = spark.createDataFrame([("u", 3)], "url string, node_id long")
+    for threshold in (None, 0):
+        leaves_only_result(
+            lambda: reachable_pairs(edges, sources, sinks,
+                                    broadcast_threshold=threshold), 1)
 
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    res = reachable_pairs(edges, sources, sinks)
-    assert res.count() == 1
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
-    # only the (caller-owned) result frame may remain cached
-    assert after <= before + 1
-    res.unpersist(blocking=True)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "doc_a long, doc_b long")
+    leaves_only_result(
+        lambda: connected_dup_clusters(pairs, local_threshold=0), 5)
