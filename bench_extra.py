@@ -23,6 +23,15 @@ import __spark_entry__ as entrymod  # noqa: E402
 from joern_spark.session import get_spark  # noqa: E402
 
 
+def vmstat_columns(out: str) -> dict:
+    """{column: value} of the last sample in `vmstat` output, read by the
+    header row's names: procps-ng 4.x appends a `gu` column after `st`,
+    so positions from the right are not stable."""
+    lines = out.strip().splitlines()
+    header = next(ln.split() for ln in lines if ln.split()[:2] == ["r", "b"])
+    return dict(zip(header, map(int, lines[-1].split())))
+
+
 def hoststate() -> dict:
     """Steal/load evidence for a measurement window (VERDICT r7 item 2:
     the graded bench JSON is frozen, so the host-state record rides this
@@ -30,8 +39,8 @@ def hoststate() -> dict:
     control (single-core busy-loop iterations) comparable across runs."""
     import subprocess
 
-    vm = subprocess.run(["vmstat", "1", "3"], capture_output=True, text=True)
-    last = vm.stdout.strip().splitlines()[-1].split()
+    vm = vmstat_columns(subprocess.run(["vmstat", "1", "3"],
+                                       capture_output=True, text=True).stdout)
     t0 = time.perf_counter()
     n = 0
     x = 0
@@ -40,8 +49,8 @@ def hoststate() -> dict:
             x = (x * 1103515245 + 12345) % 2147483648
         n += 10000
     return {
-        "vmstat_idle_pct": int(last[-3]),
-        "vmstat_steal_pct": int(last[-1]),
+        "vmstat_idle_pct": vm["id"],
+        "vmstat_steal_pct": vm["st"],
         "loadavg": open("/proc/loadavg").read().split()[:3],
         "cpu_control_iters_per_sec": n,
     }

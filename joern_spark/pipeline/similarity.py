@@ -565,7 +565,8 @@ def ann_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 def brute_pair_cosines(emb: DataFrame, threshold: float = 0.5,
                        id_col: str = "vec_id", emb_col: str = "embedding",
-                       n_blocks: int | None = None) -> DataFrame:
+                       n_blocks: int | None = None,
+                       _stats: dict | None = None) -> DataFrame:
     """All-pairs (vec_a < vec_b) cosine over a (sampled) vector set,
     thresholded — the exactness baseline behind `sim_near_dup_pairs`.
 
@@ -582,11 +583,22 @@ def brute_pair_cosines(emb: DataFrame, threshold: float = 0.5,
     bytes: N·G·dim, pairs never cross the wire; the kernel emits only the
     thresholded survivors.  (All-pairs stays O(N²) compute by design —
     this is the labeled brute-force baseline; the scale twins are
-    `ann_topk_lsh`/`embedding_near_dups`.)"""
+    `ann_topk_lsh`/`embedding_near_dups`.)
+
+    Bad vectors degrade, they never fail the group: a pair is scored only
+    between two vectors of one length (`cos_pandas_udf`'s rule), so a null
+    embedding scores no pairs and neither does a ragged one unless another
+    vector shares its length.  `_stats`, when passed, receives
+    {"bad_vectors": accumulator}; after an action its value counts the
+    null vectors plus those whose length is not the most common one of
+    their hash block."""
     import numpy as np
     import pandas as pd
 
     spark = emb.sparkSession
+    bad = spark.sparkContext.accumulator(0)
+    if _stats is not None:
+        _stats["bad_vectors"] = bad
     G = n_blocks or max(2, int((8 * spark.sparkContext.defaultParallelism) ** 0.5))
 
     base = emb.select(
@@ -603,12 +615,7 @@ def brute_pair_cosines(emb: DataFrame, threshold: float = 0.5,
 
     out_cols = ["vec_a", "vec_b", "cosine"]
 
-    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        within = bool(pdf["gp"].iloc[0] == pdf["gq"].iloc[0])
-        left = pdf[pdf["left_side"]]
-        right = left if within else pdf[~pdf["left_side"]]
-        if not len(left) or not len(right):
-            return pd.DataFrame(columns=out_cols)
+    def score(left, right, within):
         ids_l = left["vid"].to_numpy(dtype=np.int64)
         ids_r = right["vid"].to_numpy(dtype=np.int64)
         A = np.array(left["e"].tolist(), dtype=np.float64)
@@ -637,6 +644,25 @@ def brute_pair_cosines(emb: DataFrame, threshold: float = 0.5,
             "vec_b": np.maximum(ids_l[i], ids_r[j]),
             "cosine": cr[i, j],
         })
+
+    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        within = bool(pdf["gp"].iloc[0] == pdf["gq"].iloc[0])
+        left = pdf[pdf["left_side"]]
+        right = left if within else pdf[~pdf["left_side"]]
+        dim_l = left["e"].map(lambda v: 0 if v is None else len(v))
+        dim_r = dim_l if within else right["e"].map(
+            lambda v: 0 if v is None else len(v))
+        if within:
+            # every vector sits in exactly one within-block group: count
+            # its block's null and off-length vectors here
+            sized = dim_l[dim_l > 0]
+            usual = sized.mode().max() if len(sized) else 0
+            bad.add(int(((dim_l == 0) | (dim_l != usual)).sum()))
+        parts = [score(left[dim_l == d], right[dim_r == d], within)
+                 for d in sorted(set(dim_l) & set(dim_r) - {0})]
+        if not parts:
+            return pd.DataFrame(columns=out_cols)
+        return pd.concat(parts, ignore_index=True)
 
     return ex.groupBy("gp", "gq").applyInPandas(
         kernel, "vec_a bigint, vec_b bigint, cosine double")

@@ -7,8 +7,10 @@ All engine code paths assume the settings below:
 - AQE ON with skew-join handling: the corpus is Common-Crawl-shaped, i.e.
   zipf-skewed hot domains; AQE splits skewed shuffle partitions at runtime
   and our own salting (pipeline/skew.py) handles the planned side.
-- Shuffle partitions sized for the local harness; on a real cluster this is
-  overridden via spark-submit --conf (docs/DEPLOY.md).
+- Shuffle partitions sized for the local harness's batch joins; on a real
+  cluster this is overridden via spark-submit --conf (docs/DEPLOY.md).
+  Streams do not use this width: `streaming.job.start_stream` runs them
+  one state store per core.
 - RocksDB state store for streaming state (open windows, dedup keys,
   partial CPG fragments) so state size is bounded by disk, not heap.
 """

@@ -14,7 +14,9 @@ Design (per BASELINE.json north_star):
 - **State**: windows + stream dedup keys live in the RocksDB state store
   (configured in session.py); heavy CPG construction runs stateless inside
   the batch (mapInPandas), exactly as the north_star prescribes ("state:
-  open windows, partial CPG fragments, dedup keys").
+  open windows, partial CPG fragments, dedup keys").  Every stream starts
+  through `start_stream`, one state store per core, not one per batch
+  shuffle partition.
 - **Exactly-once**: the foreachBatch sink writes each epoch to a
   deterministic `epoch=<id>` path with overwrite — replays after a crash
   rewrite byte-identical content at the same path (idempotent), because
@@ -29,6 +31,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from joern_spark.query.scan import scan_findings
 from joern_spark.sources.corpus import PAGE_SCHEMA, make_pages
@@ -54,6 +57,46 @@ def pages_stream(spark: SparkSession, pages_dir: str, files_per_trigger: int = 1
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(pages_dir)
     )
+
+
+def start_stream(spark: SparkSession, build, checkpoint_dir: str, sink,
+                 mode: str = "update", available_now: bool = False):
+    """The one start path of every stream: `build(session)` returns the
+    streaming frame, `sink` is its foreachBatch function.
+
+    The stream runs on a clone of the caller's session (same context,
+    every conf the caller set) that is `defaultParallelism` shuffle
+    partitions wide: one state store per core.  A stateful operator
+    loads, changelogs and commits one RocksDB store per shuffle partition
+    every micro-batch, and with AQE off inside micro-batches nothing
+    coalesces them; the caller's width (32 by default, 8192 on a
+    cluster) is sized for batch joins and stays as it is.  A checkpoint
+    keeps the width it was written with (restored from the offset log).
+    `perfbench/run.py --workload stream`, 4-core host, ten alternating
+    pairs (seeds 71-80), 32 stores per operator -> 4: `wall_s` median
+    15.7 -> 6.7 s, `batch_p50_ms` 3858 -> 1725; traced seed 1:
+    `state.commit_ms_p50` 1838 -> 345 ms, `spark.tasks` 528 -> 80."""
+    session = SparkSession(spark.sparkContext,
+                           spark._jsparkSession.cloneSession())
+    session.conf.set("spark.sql.shuffle.partitions",
+                     str(spark.sparkContext.defaultParallelism))
+    writer = (build(session).writeStream.outputMode(mode)
+              .option("checkpointLocation", checkpoint_dir)
+              .foreachBatch(sink))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def latest_epoch(spark: SparkSession, out_dir: str, keys) -> DataFrame:
+    """The read side of the idempotent upsert sink: per key, the row of
+    the latest epoch (an Iceberg MERGE in a real deployment)."""
+    from pyspark.sql import Window as W
+
+    df = spark.read.parquet(os.path.join(out_dir, "findings"))
+    w = W.partitionBy(*keys).orderBy(F.desc("batch_id"))
+    return (df.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1).drop("rn"))
 
 
 def windowed_findings(pages: DataFrame, set_watermark: bool = True,
@@ -145,17 +188,12 @@ def run_salted_domain_stream(spark: SparkSession, pages_dir: str,
     """Start the salted per-domain rollup stream (update mode + the same
     idempotent epoch sink as the findings job, upsert-keyed on the SALTED
     key so hot domains never concentrate in one writer bucket either)."""
-    stream = pages_stream(spark, pages_dir, files_per_trigger=files_per_trigger)
-    partials = salted_domain_counts(stream, n_salt=n_salt)
-    writer = (
-        partials.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(exactly_once_batch_writer(
-            out_dir, key_cols=("window_start", "domain", "salt")))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(
+        spark, lambda s: salted_domain_counts(
+            pages_stream(s, pages_dir, files_per_trigger), n_salt=n_salt),
+        checkpoint_dir, exactly_once_batch_writer(
+            out_dir, key_cols=("window_start", "domain", "salt")),
+        available_now=available_now)
 
 
 def read_salted_domain_counts(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -163,14 +201,8 @@ def read_salted_domain_counts(spark: SparkSession, out_dir: str) -> DataFrame:
     domain, salt), then merge the salt partials.  n_salt rows per hot
     (window, domain) — merge cost is O(n_salt), independent of the hot
     domain's page count."""
-    from pyspark.sql import Window as W
-
-    df = spark.read.parquet(os.path.join(out_dir, "findings"))
-    w = W.partitionBy("window_start", "domain", "salt") \
-         .orderBy(F.desc("batch_id"))
-    latest = (df.withColumn("rn", F.row_number().over(w))
-              .where(F.col("rn") == 1))
-    return (latest.groupBy("window_start", "domain")
+    return (latest_epoch(spark, out_dir, ["window_start", "domain", "salt"])
+            .groupBy("window_start", "domain")
             .agg(F.sum("partial_docs").alias("n_docs")))
 
 
@@ -192,9 +224,9 @@ def exactly_once_batch_writer(out_dir: str, n_key_buckets: int | None = None,
     (a handful of rows) keeps coalesce(1)."""
 
     def write(batch_df: DataFrame, batch_id: int):
-        # writer parallelism follows the session's shuffle width unless the
-        # caller pins it (tiny local tests pass a small value; at cluster
-        # scale this yields one writer task per shuffle partition)
+        # writer parallelism follows the stream's shuffle width unless the
+        # caller pins it: one writer task per state store, i.e. the core
+        # count (start_stream), or the width an older checkpoint resumed at
         n_buckets = n_key_buckets or int(
             batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         rows = (batch_df
@@ -245,8 +277,6 @@ def write_findings_partitioned(findings: DataFrame, out_dir: str,
 # pages may carry an attachment blob (crawl corpora embed images/audio/
 # video alongside the html) — the findings stream reads PAGE_SCHEMA and
 # simply prunes the extra column at the scan
-from pyspark.sql.types import BinaryType, StructField, StructType  # noqa: E402
-
 MEDIA_PAGE_SCHEMA = StructType(
     list(PAGE_SCHEMA.fields) + [StructField("media", BinaryType())])
 
@@ -266,17 +296,8 @@ def media_status_rows(pages: DataFrame) -> DataFrame:
     WAV PCM / MP4 box walk, pipeline/multimodal.py) run inside one
     narrow mapInPandas; the `media IS NOT NULL` filter reaches the scan,
     and blobs never pass a shuffle (only the status rows do)."""
-    from pyspark.sql.types import (
-        LongType, StringType, StructField as SF, StructType as ST,
-        TimestampType,
-    )
-
-    out_schema = ST([
-        SF("url", StringType()),
-        SF("warc_ts", TimestampType()),
-        SF("decode_status", StringType()),
-        SF("media_bytes", LongType()),
-    ])
+    out_schema = ("url string, warc_ts timestamp, decode_status string, "
+                  "media_bytes bigint")
 
     def run(batches):
         import pandas as pd
@@ -327,30 +348,18 @@ def run_media_stream(spark: SparkSession, pages_dir: str, out_dir: str,
     source, Arrow decode UDF, RocksDB-backed windowed state, and the
     same idempotent exactly-once epoch sink keyed on
     (window_start, decode_status)."""
-    stream = media_pages_stream(spark, pages_dir,
-                                files_per_trigger=files_per_trigger)
-    counts = windowed_media_features(stream)
-    writer = (
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(exactly_once_batch_writer(
-            out_dir, key_cols=("window_start", "decode_status")))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(
+        spark, lambda s: windowed_media_features(
+            media_pages_stream(s, pages_dir, files_per_trigger)),
+        checkpoint_dir, exactly_once_batch_writer(
+            out_dir, key_cols=("window_start", "decode_status")),
+        available_now=available_now)
 
 
 def read_media_counts(spark: SparkSession, out_dir: str) -> DataFrame:
     """Latest-epoch-wins per (window, decode_status) — the media stream's
     read side."""
-    from pyspark.sql import Window as W
-
-    df = spark.read.parquet(os.path.join(out_dir, "findings"))
-    w = W.partitionBy("window_start", "decode_status") \
-         .orderBy(F.desc("batch_id"))
-    return (df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
+    return (latest_epoch(spark, out_dir, ["window_start", "decode_status"])
             .select("window_start", "decode_status", "n_media",
                     "media_bytes"))
 
@@ -358,7 +367,8 @@ def read_media_counts(spark: SparkSession, out_dir: str) -> DataFrame:
 def run_stream(spark: SparkSession, pages_dir: str, out_dir: str,
                checkpoint_dir: str, max_batches: int | None = None,
                available_now: bool = False, files_per_trigger: int = 1):
-    """Start the streaming job; returns the StreamingQuery.
+    """Start the findings stream (dedup + windowed counts, one state
+    store per core: `start_stream`); returns the StreamingQuery.
 
     `files_per_trigger` is the batch width AND the scan parallelism: the
     file source gives one task per file, so a single-file micro-batch
@@ -368,29 +378,17 @@ def run_stream(spark: SparkSession, pages_dir: str, out_dir: str,
     factor.  Watermark correctness: the watermark advances BETWEEN
     batches, so intra-batch file disorder is safe — only ACROSS batches
     must arrival roughly follow event time."""
-    stream = pages_stream(spark, pages_dir, files_per_trigger=files_per_trigger)
-    counts = windowed_findings(stream, set_watermark=True, dedup=True)
     # update mode: every batch emits the refreshed counts of touched windows;
     # the sink upserts by (window, query) keeping the latest epoch — replays
     # rewrite identical epochs, so the upsert is idempotent (exactly-once).
-    writer = (
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(exactly_once_batch_writer(out_dir))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(
+        spark, lambda s: windowed_findings(
+            pages_stream(s, pages_dir, files_per_trigger), dedup=True),
+        checkpoint_dir, exactly_once_batch_writer(out_dir),
+        available_now=available_now)
 
 
 def read_results(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Final per-window counts: last-epoch value per (window, query) — the
-    read-side of the idempotent upsert sink (an Iceberg MERGE in a real
-    deployment; parquet epochs + latest-wins here)."""
-    from pyspark.sql import Window as W
-
-    df = spark.read.parquet(os.path.join(out_dir, "findings"))
-    w = W.partitionBy("window_start", "query_name").orderBy(F.desc("batch_id"))
-    return (df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
+    """Final per-window counts: last-epoch value per (window, query)."""
+    return (latest_epoch(spark, out_dir, ["window_start", "query_name"])
             .select("window_start", "query_name", "n_matches", "n_docs"))

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from joern_spark.streaming.job import latest_epoch
+
 
 def merge_upsert(spark: SparkSession, target_dir: str, updates: DataFrame,
                  keys: list[str], n_buckets: int = 64) -> DataFrame:
@@ -59,12 +61,7 @@ def merge_upsert(spark: SparkSession, target_dir: str, updates: DataFrame,
 def latest_findings(spark: SparkSession, out_dir: str) -> DataFrame:
     """Latest-epoch value per (window_start, query_name) across all epoch
     directories written by the exactly-once sink."""
-    from pyspark.sql import Window as W
-
-    df = spark.read.parquet(os.path.join(out_dir, "findings"))
-    w = W.partitionBy("window_start", "query_name").orderBy(F.desc("batch_id"))
-    return (df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1).drop("rn"))
+    return latest_epoch(spark, out_dir, ["window_start", "query_name"])
 
 
 def compact_findings(spark: SparkSession, out_dir: str,

@@ -45,8 +45,6 @@ Scale notes (10^12 docs):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,7 +58,8 @@ from joern_spark.pipeline.dedup import (
     MINHASH_PRIME, N_BANDS, N_HASHES, ROWS_PER_BAND, _py_shingles,
 )
 from joern_spark.streaming.job import (
-    WATERMARK, exactly_once_batch_writer, pages_stream,
+    WATERMARK, exactly_once_batch_writer, latest_epoch, pages_stream,
+    start_stream,
 )
 
 BAND_SCHEMA = StructType([
@@ -225,28 +224,18 @@ def run_near_dup_stream(spark: SparkSession, pages_dir: str, out_dir: str,
     keyed on url (replays rewrite identical epochs — verdicts are pure
     functions of the replayed batch + the state the checkpoint
     restores)."""
-    stream = pages_stream(spark, pages_dir,
-                          files_per_trigger=files_per_trigger)
-    verdicts = near_dup_verdict_stream(stream)
     sink = exactly_once_batch_writer(out_dir, key_cols=("url",))
 
     def write(batch_df: DataFrame, batch_id: int):
         sink(survivors_from_verdicts(batch_df), batch_id)
 
-    writer = (verdicts.writeStream.outputMode("append")
-              .option("checkpointLocation", checkpoint_dir)
-              .foreachBatch(write))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(
+        spark, lambda s: near_dup_verdict_stream(
+            pages_stream(s, pages_dir, files_per_trigger)),
+        checkpoint_dir, write, mode="append", available_now=available_now)
 
 
 def read_survivors(spark: SparkSession, out_dir: str) -> DataFrame:
     """Latest-epoch-wins per url — the read side of the near-dup sink."""
-    from pyspark.sql import Window as W
-
-    df = spark.read.parquet(os.path.join(out_dir, "findings"))
-    w = W.partitionBy("url").orderBy(F.desc("batch_id"))
-    return (df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("url", "warc_ts", "survivor"))
+    return latest_epoch(spark, out_dir, ["url"]).select(
+        "url", "warc_ts", "survivor")

@@ -11,7 +11,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from joern_spark.streaming import job
+from joern_spark.streaming import job, neardup
 
 
 @pytest.fixture(scope="module")
@@ -28,6 +28,111 @@ def _run_to_completion(spark, corpus_dir, out_dir, cp_dir):
     return job.read_results(spark, out_dir).collect()
 
 
+def _stop_after_first_batch(q):
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        if q.lastProgress and q.lastProgress["numInputRows"] > 0:
+            break
+        time.sleep(0.5)
+    q.stop()
+    q.awaitTermination(60)
+
+
+def _state_widths(q):
+    return {op["numShufflePartitions"] for p in q.recentProgress
+            for op in p.get("stateOperators") or []}
+
+
+def _as_dict(rows):
+    return {(str(r.window_start), r.query_name): (r.n_matches, r.n_docs)
+            for r in rows}
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+STARTERS = {
+    "findings": job.run_stream,
+    "salted": job.run_salted_domain_stream,
+    "media": job.run_media_stream,
+    "neardup": neardup.run_near_dup_stream,
+}
+
+
+@pytest.mark.parametrize("name", sorted(STARTERS))
+def test_stream_state_is_one_store_per_core(spark, corpus_dir, name):
+    """Every stream starter runs its state operators one store per core,
+    whatever the caller's batch shuffle width, and leaves that width
+    as the caller set it."""
+    cores = spark.sparkContext.defaultParallelism
+    batch_width = spark.conf.get(SHUFFLE)
+    spark.conf.set(SHUFFLE, str(cores + 3))
+    base = tempfile.mkdtemp(prefix=f"width_{name}_")
+    try:
+        q = STARTERS[name](spark, corpus_dir, f"{base}/out", f"{base}/cp",
+                           available_now=True)
+        q.awaitTermination(300)
+        assert _state_widths(q) == {cores}
+        assert spark.conf.get(SHUFFLE) == str(cores + 3)
+    finally:
+        spark.conf.set(SHUFFLE, batch_width)
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_session_keeps_caller_runtime_conf(spark, corpus_dir):
+    """A conf the caller set at runtime reaches the stream (here: the
+    state store provider) and stays set on the caller's session."""
+    hdfs = ("org.apache.spark.sql.execution.streaming.state."
+            "HDFSBackedStateStoreProvider")
+    rocksdb = spark.conf.get(PROVIDER)
+    spark.conf.set(PROVIDER, hdfs)
+    base = tempfile.mkdtemp(prefix="runtime_conf_")
+    try:
+        q = job.run_stream(spark, corpus_dir, f"{base}/out", f"{base}/cp",
+                           available_now=True)
+        q.awaitTermination(300)
+        metrics = [set(op["customMetrics"]) for p in q.recentProgress
+                   for op in p.get("stateOperators") or []]
+        assert metrics
+        assert not any(k.startswith("rocksdb") for m in metrics for k in m)
+        assert spark.conf.get(PROVIDER) == hdfs
+    finally:
+        spark.conf.set(PROVIDER, rocksdb)
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_old_checkpoint_resumes_at_its_width(spark, corpus_dir):
+    """A checkpoint written at the caller's batch width (the stream built
+    on the caller's session) resumes through run_stream at that width,
+    and its counts equal the batch golden."""
+    cores = spark.sparkContext.defaultParallelism
+    old_width = cores + 3
+    batch_width = spark.conf.get(SHUFFLE)
+    base = tempfile.mkdtemp(prefix="old_cp_")
+    try:
+        spark.conf.set(SHUFFLE, str(old_width))
+        counts = job.windowed_findings(job.pages_stream(spark, corpus_dir),
+                                       dedup=True)
+        q = (counts.writeStream.outputMode("update")
+             .option("checkpointLocation", f"{base}/cp")
+             .foreachBatch(job.exactly_once_batch_writer(f"{base}/out"))
+             .start())
+        _stop_after_first_batch(q)
+        assert _state_widths(q) == {old_width}
+        spark.conf.set(SHUFFLE, batch_width)
+
+        q = job.run_stream(spark, corpus_dir, f"{base}/out", f"{base}/cp",
+                           available_now=True)
+        q.awaitTermination(300)
+        assert _state_widths(q) == {old_width}
+        got = _as_dict(job.read_results(spark, f"{base}/out").collect())
+        want = _as_dict(job.windowed_findings(
+            spark.read.parquet(corpus_dir), dedup=True).collect())
+        assert want and got == want
+    finally:
+        spark.conf.set(SHUFFLE, batch_width)
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_stream_end_to_end_and_resume(spark, corpus_dir):
     base = tempfile.mkdtemp(prefix="stream_")
     try:
@@ -38,13 +143,7 @@ def test_stream_end_to_end_and_resume(spark, corpus_dir):
 
         # interrupted run: stop after the first progress, then resume
         q = job.run_stream(spark, corpus_dir, f"{base}/out2", f"{base}/cp2")
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if q.lastProgress and q.lastProgress["numInputRows"] > 0:
-                break
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination(60)
+        _stop_after_first_batch(q)
 
         resumed = _run_to_completion(spark, corpus_dir, f"{base}/out2", f"{base}/cp2")
         got = {(str(r.window_start), r.query_name): (r.n_matches, r.n_docs) for r in resumed}
@@ -390,13 +489,7 @@ def test_salted_domain_counts_skewed_stream(spark):
         # interrupted first run, then availableNow drain from checkpoint
         q = job.run_salted_domain_stream(spark, pages_dir, f"{base}/out",
                                          f"{base}/cp")
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if q.lastProgress and q.lastProgress["numInputRows"] > 0:
-                break
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination(60)
+        _stop_after_first_batch(q)
         q = job.run_salted_domain_stream(spark, pages_dir, f"{base}/out",
                                          f"{base}/cp", available_now=True)
         q.awaitTermination(300)

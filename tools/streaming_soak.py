@@ -20,7 +20,9 @@ query runs:
   over the full corpus (unified semantics + exactly-once under kills).
 
 Prints one JSON line: docs/sec sustained while streaming, per-phase
-checkpoint/state sizes (flat-growth evidence), and the golden verdict.
+checkpoint/state sizes (flat-growth evidence), per micro-batch trigger
+time and state-operator width/commit/rows/memory of every stream
+(`batches`), and the golden verdict.
 
 Usage: python tools/streaming_soak.py [--docs 262144] [--chunks 16]
        [--kills 4] [--out /tmp/soak]
@@ -102,6 +104,20 @@ def write_chunk(spark, pages_dir: str, lo: int, hi: int, files: int = 1,
 
     (spark.range(lo, hi, numPartitions=files).mapInPandas(gen, schema)
      .write.mode("append").parquet(pages_dir))
+
+
+STATE_KEYS = ("operatorName", "numShufflePartitions", "numStateStoreInstances",
+              "commitTimeMs", "numRowsTotal", "memoryUsedBytes")
+
+
+def batch_state(query, phase: int) -> list[dict]:
+    """Per micro-batch trigger time and state-operator width and cost of
+    one stream run, from the query's progress reports."""
+    return [{"phase": phase, "batch_id": p["batchId"],
+             "trigger_ms": p["durationMs"].get("triggerExecution", 0),
+             "state": [{k: op.get(k) for k in STATE_KEYS}
+                       for op in p.get("stateOperators") or []]}
+            for p in query.recentProgress]
 
 
 def dir_size(path: str) -> int:
@@ -263,6 +279,11 @@ def main():
     stream_seconds = 0.0
     docs_streamed = 0
     phases = []
+    batches = {}  # stream name -> per micro-batch state records
+
+    def drain(name, query):
+        query.awaitTermination(1800)
+        batches.setdefault(name, []).extend(batch_state(query, phase))
 
     for phase in range(args.kills):
         # producer: append this phase's chunks
@@ -278,7 +299,7 @@ def main():
         q = job.run_stream(spark, pages_dir, out_dir, cp_dir,
                            available_now=True, files_per_trigger=files_per)
         t0 = time.perf_counter()
-        q.awaitTermination(1800)
+        drain("findings", q)
         dt = time.perf_counter() - t0
         stream_seconds += dt
         docs_streamed = written
@@ -288,14 +309,14 @@ def main():
             qs = job.run_salted_domain_stream(
                 spark, pages_dir, f"{base}/salted_out", f"{base}/salted_cp",
                 available_now=True, files_per_trigger=files_per)
-            qs.awaitTermination(1800)
+            drain("salted", qs)
         if args.media_frac > 0:
             # the binary-column surface: blob decode + windowed state +
             # exactly-once sink under the same phase/kill cadence
             qm = job.run_media_stream(
                 spark, pages_dir, f"{base}/media_out", f"{base}/media_cp",
                 available_now=True, files_per_trigger=files_per)
-            qm.awaitTermination(1800)
+            drain("media", qm)
         if args.neardup_frac > 0:
             # the custom stateful operator surface: first-owner-wins LSH
             # band buckets (RocksDB state, event-time age-out) under the
@@ -305,7 +326,7 @@ def main():
                 spark, pages_dir, f"{base}/neardup_out",
                 f"{base}/neardup_cp", available_now=True,
                 files_per_trigger=files_per)
-            qn.awaitTermination(1800)
+            drain("neardup", qn)
         phases.append({
             "phase": phase,
             "docs_total": written,
@@ -464,6 +485,7 @@ def main():
         "golden_counts_match": golden_ok,
         "n_windows": len(expected),
         "phases": phases,
+        "batches": batches,
         "crosspage_errors": crosspage_errors,
         **({"skew": skew} if skew else {}),
         **({"media": media} if media else {}),
