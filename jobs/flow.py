@@ -13,19 +13,16 @@ from __future__ import annotations
 
 import argparse
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 
 def flows_job(pages, source_regex: str, sink_regex: str,
               source_kind: str = "call", sink_kind: str = "call",
               semantics_file: str | None = None):
-    from joern_spark.cpg.build import build_cpg
     from joern_spark.cpg.semloader import semantics_from_file
+    from joern_spark.cpg.spark_build import map_documents
     from joern_spark.dataflow.engine import reachable_by_flows, result_pairs
-    from joern_spark.extract import extract_script_text
     from joern_spark.query.cpgql import Q
 
     # custom taint models (.sem, reference Semantics.g4 grammar) are parsed
@@ -42,27 +39,16 @@ def flows_job(pages, source_regex: str, sink_regex: str,
                 "literal": q.literal()}[kind]
         return base.code(regex).l()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    cpg = build_cpg(
-                        extract_script_text(bytes(html).decode("utf-8", "replace")), url)
-                    q = Q(cpg)
-                    sources = select(q, source_kind, source_regex)
-                    sinks = select(q, sink_kind, sink_regex)
-                    if not sources or not sinks:
-                        continue
-                    for f in reachable_by_flows(cpg, sinks, sources,
-                                                semantics=semantics):
-                        rows.append((url, [f"{c} @ {ln}" for c, ln in
-                                           result_pairs(cpg, f)]))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["url", "flow"])
+    def body(url, cpg):
+        q = Q(cpg)
+        sources = select(q, source_kind, source_regex)
+        sinks = select(q, sink_kind, sink_regex)
+        if not sources or not sinks:
+            return
+        for f in reachable_by_flows(cpg, sinks, sources, semantics=semantics):
+            yield url, [f"{c} @ {ln}" for c, ln in result_pairs(cpg, f)]
 
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return map_documents(pages, schema, body)
 
 
 def main():

@@ -3,15 +3,15 @@ call graph → CFG → reaching-def/DDG.
 
 Mirrors X2Cpg.defaultOverlayCreators() order (X2Cpg.scala:374-385:
 Base, ControlFlow, TypeRelations, CallGraph) + OssDataFlow
-(OssDataFlow.scala:8-26), collapsed into one function that the Spark
-`applyInPandas` build UDF calls once per document.
+(OssDataFlow.scala:8-26), collapsed into one overlay chain that the Spark
+`mapInPandas` build UDF runs once per document.
 """
 
 from __future__ import annotations
 
 import sys
 
-from joern_spark.cpg.astlower import lower_js
+from joern_spark.cpg.astlower import lower_js, lower_js_files
 from joern_spark.cpg.cfg import add_cfg
 from joern_spark.cpg.core import Cpg
 from joern_spark.cpg.dominators import add_cdg, add_dominators
@@ -27,17 +27,14 @@ from joern_spark.cpg.semantics import Semantics, default_semantics
 _SEMANTICS = default_semantics()
 
 
-def build_cpg(src: str, filename: str = "script.js",
-              semantics: Semantics | None = None,
-              post_process: bool = True) -> Cpg:
-    """post_process=True mirrors joern-cli production (frontend overlays +
-    jssrc post-processing).  post_process=False is the JsSrc2CpgSuite /
-    JsSrcCfgTestCpg fixture (frontend only) — the reference's AST/CFG
-    goldens are written against that, e.g. closure names before
-    ConstClosurePass renames them."""
+def _build(lower, semantics: Semantics | None, post_process: bool) -> Cpg:
+    """The overlay chain every front door shares: `lower()` makes the
+    AST graph, then the passes run in X2Cpg order.  The passes are called
+    through this module's globals on purpose: perfbench times them by
+    rebinding those names for the duration of a run."""
     if sys.getrecursionlimit() < 20000:
         sys.setrecursionlimit(20000)
-    cpg = lower_js(src, filename)
+    cpg = lower()
     create_namespaces(cpg)   # NamespaceCreator (A5, Base overlay)
     create_type_decl_stubs(cpg)  # TypeDeclStubCreator (Base overlay)
     create_method_stubs(cpg)
@@ -60,6 +57,17 @@ def build_cpg(src: str, filename: str = "script.js",
     return cpg
 
 
+def build_cpg(src: str, filename: str = "script.js",
+              semantics: Semantics | None = None,
+              post_process: bool = True) -> Cpg:
+    """post_process=True mirrors joern-cli production (frontend overlays +
+    jssrc post-processing).  post_process=False is the JsSrc2CpgSuite /
+    JsSrcCfgTestCpg fixture (frontend only) — the reference's AST/CFG
+    goldens are written against that, e.g. closure names before
+    ConstClosurePass renames them."""
+    return _build(lambda: lower_js(src, filename), semantics, post_process)
+
+
 def build_cpg_frontend(src: str, filename: str = "script.js",
                        semantics: Semantics | None = None) -> Cpg:
     """Frontend-only fixture (JsSrc2CpgSuite / JsSrcCfgTestCpg): no
@@ -71,31 +79,10 @@ def build_cpg_files(files: list[tuple[str, str]],
                     semantics: Semantics | None = None,
                     post_process: bool = True) -> Cpg:
     """Multi-file project build: every (filename, src) pair lowered into ONE
-    graph, then the same overlay order as build_cpg.  This is the `code(...)
+    graph, then the same overlay chain as build_cpg.  This is the `code(...)
     .moreCode(...)` test fixture and the shape cross-file import resolution
     (XImportResolverPass) needs."""
-    from joern_spark.cpg.astlower import lower_js_files
-
-    if sys.getrecursionlimit() < 20000:
-        sys.setrecursionlimit(20000)
-    cpg = lower_js_files(files)
-    create_namespaces(cpg)
-    create_type_decl_stubs(cpg)
-    create_method_stubs(cpg)
-    if post_process:
-        run_type_recovery(cpg)
-        hint_this_identifiers(cpg)
-        register_types(cpg)
-        create_type_decl_stubs(cpg)
-        link_aliases(cpg)
-        link_field_accesses(cpg)
-    link_dynamic_calls(cpg)
-    link_calls(cpg)
-    add_cfg(cpg)
-    ipdoms = add_dominators(cpg)
-    add_cdg(cpg, ipdoms)
-    add_reaching_defs(cpg, semantics or _SEMANTICS)
-    return cpg
+    return _build(lambda: lower_js_files(files), semantics, post_process)
 
 
 def build_project(input_path: str,

@@ -15,7 +15,10 @@ Scale notes (100 TB):
 - maxRecordsPerBatch bounds Arrow batch memory for large pages.
 - skew: hot domains are fine here (unit of work = row, not domain); the
   groupBy-shaped variants downstream salt on url-hash.
-- parse errors degrade per-document into an error row (never kill a batch).
+- a document whose decode, extract, build or per-CPG body raises costs
+  that document only (never the batch): `map_documents` drops it, or emits
+  the caller's error row for it (scan's `<parse-error>`, crosspage's
+  `summarize_failed:<Exc>`).  `build_cpg_rows` drops it.
 
 Schema scope: NODES_SCHEMA is the QUERYABLE SUBSET of the per-document
 node model — the 16 properties the corpus queries (frames.py), the
@@ -35,10 +38,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BooleanType, IntegerType, LongType, StringType, StructField, StructType,
+    BooleanType, DoubleType, IntegerType, LongType, StringType, StructField,
+    StructType, TimestampType,
 )
 
 from joern_spark.cpg.build import build_cpg
+from joern_spark.cpg.core import Cpg
 from joern_spark.extract import extract_script_text
 
 NODES_SCHEMA = StructType([
@@ -68,11 +73,6 @@ EDGES_SCHEMA = StructType([
     StructField("variable", StringType()),
 ])
 
-ERRORS_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("error", StringType()),
-])
-
 # Union schema for the single-pass build: node fields + edge fields + a
 # `kind` discriminator ('n' | 'e').  `label` is shared (node label / edge
 # label); edge-only fields are null on node rows and vice versa.
@@ -96,10 +96,60 @@ def stable_node_id(url: str, node) -> int:
                           "big", signed=True)
 
 
-def cpg_rows_for_document(url: str, html: bytes):
-    """One document → (node_rows, edge_rows). Raises on parse failure."""
-    text = extract_script_text(bytes(html).decode("utf-8", errors="replace"))
-    cpg = build_cpg(text, url)
+def document_cpg(url: str, html: str | bytes) -> Cpg:
+    """One page → its CPG: decode the html (bytes or str), keep the script
+    text, build.  Raises on parse failure."""
+    if not isinstance(html, str):
+        html = bytes(html).decode("utf-8", "replace")
+    return build_cpg(extract_script_text(html), url)
+
+
+# Spark type → pandas dtype.  The batch frame is built as object and these
+# columns are cast exactly: letting pandas infer them would turn an int64
+# column holding a null into float64 and round the low bits.  Timestamps
+# must be datetime64 for Spark to apply the session time zone; every other
+# type converts from object as it is.
+_DTYPES = {LongType: "Int64", IntegerType: "Int32", BooleanType: "boolean",
+           DoubleType: "float64", TimestampType: "datetime64[ns]"}
+
+
+def document_frame(docs, schema: StructType, body, on_error=None) -> pd.DataFrame:
+    """The per-document loop.  `docs` yields (url, html, *carry); each page's
+    CPG goes to `body(url, cpg, *carry)`, which returns or yields the
+    page's rows.  A page whose decode, build or body raises is dropped, or
+    contributes `on_error(url, exc, *carry)` when given; rows its body
+    yielded before raising stay."""
+    rows = []
+    for url, html, *carry in docs:
+        try:
+            rows.extend(body(url, document_cpg(url, html), *carry))
+        except Exception as e:
+            if on_error is not None:
+                rows.extend(on_error(url, e, *carry))
+    out = pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object)
+    for f in schema.fields:
+        dtype = _DTYPES.get(type(f.dataType))
+        if dtype:
+            out[f.name] = out[f.name].astype(dtype)
+    return out
+
+
+def map_documents(pages: DataFrame, schema: StructType, body, on_error=None,
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """pages(url, html, *carry) → `schema` rows from `document_frame`, in
+    one narrow mapInPandas.  `carry` names page columns handed through to
+    `body` and `on_error`."""
+    cols = ("url", "html", *carry)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield document_frame(zip(*(pdf[c] for c in cols)), schema,
+                                 body, on_error)
+
+    return pages.select(*cols).mapInPandas(run, schema)
+
+
+def _cpg_rows(url: str, cpg: Cpg):
     ids = {n.id: stable_node_id(url, n) for n in cpg.nodes}
     node_rows = [
         (url, ids[n.id], n.label, n.name, n.code, n.full_name, n.order,
@@ -121,6 +171,11 @@ def cpg_rows_for_document(url: str, html: bytes):
     return node_rows, edge_rows
 
 
+def cpg_rows_for_document(url: str, html: str | bytes):
+    """One document → (node_rows, edge_rows). Raises on parse failure."""
+    return _cpg_rows(url, document_cpg(url, html))
+
+
 _N_PAD = (None, None, None)          # src, dst, variable on node rows
 # node-only fields after label (name..index) on edge rows:
 _E_PAD = tuple([None] * (len(NODES_SCHEMA.fields) - 3))
@@ -136,39 +191,18 @@ def build_cpg_rows(pages: DataFrame, on_build=None) -> DataFrame:
     build-once invariant.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in COMBINED_SCHEMA.fields]
-        # int64 ids must NOT pass through float64 (null padding on the other
-        # row kind would coerce and round the low bits) — build as object,
-        # then cast the long/int columns to pandas nullable ints (exact).
-        long_cols = ("node_id", "src", "dst")
-        int_cols = ("order", "argument_index", "line", "column", "index")
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    node_rows, edge_rows = cpg_rows_for_document(url, html)
-                except Exception:
-                    continue
-                if on_build is not None:
-                    on_build(url)
-                rows.extend(("n",) + nr + _N_PAD for nr in node_rows)
-                # edge row er = (url, src, dst, label, variable); label goes
-                # in the shared label slot, node_id stays null.
-                rows.extend(
-                    ("e", er[0], None, er[3]) + _E_PAD + (er[1], er[2], er[4])
-                    for er in edge_rows
-                )
-            out = pd.DataFrame(rows, columns=cols, dtype=object)
-            if len(out):
-                for c in long_cols:
-                    out[c] = out[c].astype("Int64")
-                for c in int_cols:
-                    out[c] = out[c].astype("Int32")
-                out["is_external"] = out["is_external"].astype("boolean")
-            yield out
+    def body(url, cpg):
+        node_rows, edge_rows = _cpg_rows(url, cpg)
+        if on_build is not None:
+            on_build(url)
+        rows = [("n",) + nr + _N_PAD for nr in node_rows]
+        # edge row er = (url, src, dst, label, variable); label goes in the
+        # shared label slot, node_id stays null.
+        rows.extend(("e", er[0], None, er[3]) + _E_PAD + (er[1], er[2], er[4])
+                    for er in edge_rows)
+        return rows
 
-    return pages.select("url", "html").mapInPandas(run, COMBINED_SCHEMA)
+    return map_documents(pages, COMBINED_SCHEMA, body)
 
 
 def split_cpg_tables(combined: DataFrame) -> tuple[DataFrame, DataFrame]:

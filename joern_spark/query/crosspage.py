@@ -28,19 +28,16 @@ the cross-page composition is this engine's site-level extension
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from urllib.parse import urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, StringType, StructField, StructType,
 )
 
-from joern_spark.cpg.build import build_cpg
+from joern_spark.cpg.spark_build import document_cpg, map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
-from joern_spark.extract import extract_script_text
 from joern_spark.query.cpgql import Q
 from joern_spark.query.scan import _web_sources
 
@@ -95,7 +92,7 @@ def _unresolved_calls_by_name(cpg, q, defined: set[str], nodes=None):
 MAX_WRAP_PAIRS = 256
 
 
-def summarize_page_ext(url: str, html: str,
+def summarize_page_ext(url: str, html: str | bytes,
                        with_wrap: bool = True,
                        max_wrap_pairs: int = MAX_WRAP_PAIRS,
                        _stats: dict | None = None) -> list[tuple]:
@@ -115,9 +112,14 @@ def summarize_page_ext(url: str, html: str,
     `_stats`, when passed, receives {"wrap_pairs": tested,
     "wrap_skipped": n} for the cap above.
     """
+    return _summarize_cpg(url, document_cpg(url, html), with_wrap,
+                          max_wrap_pairs, _stats)
+
+
+def _summarize_cpg(url: str, cpg, with_wrap: bool = True,
+                   max_wrap_pairs: int = MAX_WRAP_PAIRS,
+                   _stats: dict | None = None) -> list[tuple]:
     domain = urlparse(url).netloc
-    text = extract_script_text(html)
-    cpg = build_cpg(text, url)
     q = Q(cpg)
     rows = []
     wrap_pairs = 0
@@ -161,15 +163,19 @@ def summarize_page_ext(url: str, html: str,
     return rows
 
 
-def summarize_page(url: str, html: str) -> list[tuple]:
+def summarize_page(url: str, html: str | bytes) -> list[tuple]:
     """Per-page def/call summary rows — the shape the single-hop
     cross_page_flows and its fixture oracle consume.  Skips the wrap-edge
     dataflow analysis entirely (with_wrap=False): the single-hop query
     would only discard those rows, and each wrap edge costs a
     reachable_by_flows run per (wrapper, callee) pair."""
+    return _def_call_rows(url, document_cpg(url, html))
+
+
+def _def_call_rows(url: str, cpg) -> list[tuple]:
     return [(d, u, kind, name, tainted)
             for (d, u, kind, name, _callee, tainted)
-            in summarize_page_ext(url, html, with_wrap=False)]
+            in _summarize_cpg(url, cpg, with_wrap=False)]
 
 
 def _safe_domain(url) -> str:
@@ -190,22 +196,11 @@ def page_flow_summaries(pages: DataFrame) -> DataFrame:
     (`summary_error_counts`).  Every flow query filters on kind and/or
     tainted, so error rows never enter a result."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SUMMARY_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    h = (bytes(html).decode("utf-8", "replace")
-                         if not isinstance(html, str) else html)
-                    rows.extend(summarize_page(url, h))
-                except Exception as e:
-                    rows.append((_safe_domain(url), url, "error",
-                                 f"summarize_failed:{type(e).__name__}",
-                                 False))
-            yield pd.DataFrame(rows, columns=cols)
+    def on_error(url, e):
+        return [(_safe_domain(url), url, "error",
+                 f"summarize_failed:{type(e).__name__}", False)]
 
-    return pages.select("url", "html").mapInPandas(run, SUMMARY_SCHEMA)
+    return map_documents(pages, SUMMARY_SCHEMA, _def_call_rows, on_error)
 
 
 def page_flow_summaries_ext(pages: DataFrame) -> DataFrame:
@@ -220,27 +215,19 @@ def page_flow_summaries_ext(pages: DataFrame) -> DataFrame:
     - func_name='wrap_capped', callee_name=str(n_skipped) — the page hit
       MAX_WRAP_PAIRS and skipped n wrap-edge dataflow tests."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SUMMARY_EXT_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    h = (bytes(html).decode("utf-8", "replace")
-                         if not isinstance(html, str) else html)
-                    st: dict = {}
-                    rows.extend(summarize_page_ext(url, h, _stats=st))
-                    if st.get("wrap_skipped"):
-                        rows.append((_safe_domain(url), url, "error",
-                                     "wrap_capped",
-                                     str(st["wrap_skipped"]), False))
-                except Exception as e:
-                    rows.append((_safe_domain(url), url, "error",
-                                 f"summarize_failed:{type(e).__name__}",
-                                 None, False))
-            yield pd.DataFrame(rows, columns=cols)
+    def body(url, cpg):
+        st: dict = {}
+        rows = _summarize_cpg(url, cpg, _stats=st)
+        if st["wrap_skipped"]:
+            rows.append((_safe_domain(url), url, "error", "wrap_capped",
+                         str(st["wrap_skipped"]), False))
+        return rows
 
-    return pages.select("url", "html").mapInPandas(run, SUMMARY_EXT_SCHEMA)
+    def on_error(url, e):
+        return [(_safe_domain(url), url, "error",
+                 f"summarize_failed:{type(e).__name__}", None, False)]
+
+    return map_documents(pages, SUMMARY_EXT_SCHEMA, body, on_error)
 
 
 def summary_error_counts(summaries: DataFrame) -> DataFrame:

@@ -19,10 +19,9 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType, TimestampType,
 )
 
-from joern_spark.cpg.build import build_cpg
 from joern_spark.cpg.core import Cpg
+from joern_spark.cpg.spark_build import document_frame, map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
-from joern_spark.extract import extract_script_text
 from joern_spark.query.cpgql import Q
 
 
@@ -270,29 +269,30 @@ FINDINGS_SCHEMA = StructType([
 ])
 
 
+def _scan_page(queries: list[Query]):
+    """Per-page scan body and error row for `map_documents`: one finding
+    row per query with n_matches > 0; a page that fails emits one
+    `<parse-error>` row."""
+
+    def body(url, cpg, ts):
+        q = Q(cpg)
+        for query in queries:
+            n = int(query.matcher(cpg, q))
+            if n > 0:
+                yield url, ts, query.name, n, query.score
+
+    def on_error(url, _exc, ts):
+        return [(url, ts, "<parse-error>", 1, 0.0)]
+
+    return body, on_error
+
+
 def scan_findings(pages: DataFrame, bundle: list[Query] | None = None) -> DataFrame:
     """pages(url, warc_ts, html) → findings, one row per (url, query) with
     n_matches > 0.  One narrow Arrow pass; no shuffle."""
-    queries = bundle if bundle is not None else default_bundle()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FINDINGS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                try:
-                    text = extract_script_text(bytes(html).decode("utf-8", "replace"))
-                    cpg = build_cpg(text, url)
-                    q = Q(cpg)
-                    for query in queries:
-                        n = int(query.matcher(cpg, q))
-                        if n > 0:
-                            rows.append((url, ts, query.name, n, query.score))
-                except Exception:
-                    rows.append((url, ts, "<parse-error>", 1, 0.0))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(run, FINDINGS_SCHEMA)
+    body, on_error = _scan_page(bundle if bundle is not None else default_bundle())
+    return map_documents(pages, FINDINGS_SCHEMA, body, on_error,
+                         carry=("warc_ts",))
 
 
 def scan_generated_pages(spark, n_docs: int, n_partitions: int | None = None,
@@ -305,32 +305,19 @@ def scan_generated_pages(spark, n_docs: int, n_partitions: int | None = None,
     instead of two chained Python stages (generator UDF → JVM → scan UDF),
     which pays an extra Arrow round-trip a real parquet/Iceberg-backed pages
     table would never have.  This is the north-star throughput path."""
-    import pandas as pd
-
     from joern_spark.sources.corpus import page_for
 
-    queries = bundle if bundle is not None else default_bundle()
+    body, on_error = _scan_page(bundle if bundle is not None else default_bundle())
+
+    def pages_of(ids):
+        for i in ids:
+            url, ts, html, _text = page_for(int(i), seed, late_fraction)
+            yield url, html, pd.Timestamp(ts, unit="s")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FINDINGS_SCHEMA.fields]
         for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                url, ts, html, _text = page_for(int(i), seed, late_fraction)
-                warc_ts = pd.Timestamp(ts, unit="s")
-                try:
-                    text = extract_script_text(
-                        html.decode("utf-8", "replace")
-                        if isinstance(html, (bytes, bytearray)) else str(html))
-                    cpg = build_cpg(text, url)
-                    q = Q(cpg)
-                    for query in queries:
-                        n = int(query.matcher(cpg, q))
-                        if n > 0:
-                            rows.append((url, warc_ts, query.name, n, query.score))
-                except Exception:
-                    rows.append((url, warc_ts, "<parse-error>", 1, 0.0))
-            yield pd.DataFrame(rows, columns=cols)
+            yield document_frame(pages_of(pdf["id"]), FINDINGS_SCHEMA,
+                                 body, on_error)
 
     par = n_partitions or spark.sparkContext.defaultParallelism
     return spark.range(n_docs, numPartitions=par).mapInPandas(run, FINDINGS_SCHEMA)

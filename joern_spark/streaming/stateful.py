@@ -140,8 +140,7 @@ def make_assemble_update(ttl_ms: int | None):
 
     def _assemble_update(key: Any, pdfs: Iterator[pd.DataFrame],
                          state: GroupState) -> Iterator[pd.DataFrame]:
-        from joern_spark.cpg.build import build_cpg
-        from joern_spark.extract import extract_script_text
+        from joern_spark.cpg.spark_build import document_cpg
         from joern_spark.query.cpgql import Q
         from joern_spark.query.scan import default_bundle
 
@@ -163,7 +162,7 @@ def make_assemble_update(ttl_ms: int | None):
         if n_parts and len(parts) >= n_parts:
             html = "".join(parts[i] for i in sorted(parts))
             try:
-                cpg = build_cpg(extract_script_text(html), url)
+                cpg = document_cpg(url, html)
                 q = Q(cpg)
                 n_findings = sum(
                     1 for query in default_bundle() if int(query.matcher(cpg, q)) > 0)

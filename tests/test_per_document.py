@@ -1,0 +1,148 @@
+"""The per-document Spark paths share one loop (`spark_build.map_documents`).
+
+Each path is checked against the in-process function it runs per page, on
+documents whose expected output is non-empty; a str html column must give
+the rows the binary one gives; and one bad page in a batch costs that page
+only, with each caller's error-row policy kept.
+"""
+
+from __future__ import annotations
+
+import json
+
+from pyspark.sql import functions as F
+
+from joern_spark.cpg.build import build_cpg
+from joern_spark.cpg.spark_build import build_cpg_tables
+from joern_spark.sources.corpus import make_pages, page_for
+
+N_DOCS = 36  # one page per corpus snippet
+BOMB_URL = "https://a.example.com/bomb"
+
+
+def _rows(df, *cols):
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+def _golden_cpgs():
+    out = {}
+    for i in range(N_DOCS):
+        url, _ts, _html, text = page_for(i)
+        out[url] = build_cpg(text, url)
+    return out
+
+
+def _tables(pages):
+    nodes, edges = build_cpg_tables(pages)
+    got = (_rows(nodes, "url", "node_id", "label", "code", "line"),
+           _rows(edges, "url", "src", "dst", "label", "variable"))
+    nodes.unpersist()
+    return got
+
+
+def test_str_html_matches_binary(spark):
+    from joern_spark.query.scan import scan_findings
+
+    binary = make_pages(spark, n_docs=12, n_partitions=2)
+    text = binary.withColumn("html", F.col("html").cast("string"))
+    cols = ("url", "warc_ts", "query_name", "n_matches", "score")
+    want = _rows(scan_findings(binary), *cols)
+    assert want and all(r[2] != "<parse-error>" for r in want)
+    assert _rows(scan_findings(text), *cols) == want
+    nodes, edges = _tables(binary)
+    assert nodes and edges
+    assert _tables(text) == (nodes, edges)
+
+
+def test_data_flow_slices_match_slice_for_call(spark):
+    from joern_spark.dataflow.slicing import data_flow_slices, slice_for_call
+
+    want = []
+    for url, cpg in _golden_cpgs().items():
+        for c in cpg.nodes:
+            if c.label == "CALL" and not c.name.startswith("<operator>"):
+                nodes, edges = slice_for_call(cpg, c)
+                want.append((url, c.code, len(nodes), len(edges),
+                             sorted({n.code for n in nodes})))
+    assert any(r[3] > 0 for r in want)
+    got = [(r.url, r.call_code, r.n_nodes, r.n_edges, list(r.node_codes))
+           for r in data_flow_slices(make_pages(spark, n_docs=N_DOCS)).collect()]
+    assert sorted(got) == sorted(want)
+
+
+def test_usage_slices_match_usage_slice(spark):
+    from joern_spark.dataflow.slicing import usage_slice, usage_slices
+
+    want = {url: json.dumps(usage_slice(cpg, 1, False), sort_keys=True)
+            for url, cpg in _golden_cpgs().items()}
+    assert any(json.loads(s)["objectSlices"] for s in want.values())
+    got = {r.url: r.slice_json
+           for r in usage_slices(make_pages(spark, n_docs=N_DOCS)).collect()}
+    assert got == want
+
+
+def test_flows_job_matches_reachable_by_flows(spark):
+    from jobs.flow import flows_job
+    from joern_spark.dataflow.engine import reachable_by_flows, result_pairs
+    from joern_spark.query.cpgql import Q
+
+    want = []
+    for url, cpg in _golden_cpgs().items():
+        q = Q(cpg)
+        sources = q.call().code("source.*").l()
+        sinks = q.call().code("sink.*").l()
+        if sources and sinks:
+            want += [(url, [f"{c} @ {ln}" for c, ln in result_pairs(cpg, f)])
+                     for f in reachable_by_flows(cpg, sinks, sources)]
+    assert len(want) >= 3
+    got = [(r.url, list(r.flow)) for r in
+           flows_job(make_pages(spark, n_docs=N_DOCS), "source.*", "sink.*")
+           .collect()]
+    assert sorted(got) == sorted(want)
+
+
+def test_one_bad_page_costs_only_that_page(spark):
+    """The nesting bomb raises RecursionError in the parser.  In one
+    partition beside valid pages: scan emits exactly one `<parse-error>`
+    row for it, the other paths drop it, and every valid page keeps the
+    rows it has without the bomb."""
+    from joern_spark.dataflow.slicing import data_flow_slices, usage_slices
+    from joern_spark.query.export import method_dot_frames
+    from joern_spark.query.scan import scan_findings
+
+    good = make_pages(spark, n_docs=8).select("url", "warc_ts", "html")
+    bomb = spark.createDataFrame(
+        [(BOMB_URL, bytearray(b"<script>" + b"(" * 8000 + b"</script>"))],
+        "url string, html binary").select(
+            "url", F.current_timestamp().alias("warc_ts"), "html")
+    mixed = good.unionByName(bomb).coalesce(1)
+    assert mixed.rdd.getNumPartitions() == 1
+
+    scan = {r.url: r for r in scan_findings(mixed).collect()
+            if r.query_name == "<parse-error>"}
+    assert list(scan) == [BOMB_URL]
+    assert (_rows(scan_findings(mixed).where(F.col("url") != BOMB_URL),
+                  "url", "query_name", "n_matches")
+            == _rows(scan_findings(good), "url", "query_name", "n_matches"))
+
+    nodes, edges = _tables(mixed)
+    assert (nodes, edges) == _tables(good)
+    assert nodes
+    for frames in (lambda p: method_dot_frames(p, "cfg"), data_flow_slices,
+                   usage_slices):
+        want = _rows(frames(good), "*")
+        assert want
+        assert _rows(frames(mixed), "*") == want
+
+
+def test_pass_timing_sees_every_pass():
+    """perfbench times the overlay chain by rebinding `cpg.build` globals;
+    a pipeline that stops calling them through the module would zero the
+    traced per-pass layer without failing."""
+    from perfbench.passes import PASS_GROUPS, time_passes
+
+    pages = [(url, html) for url, _ts, html, _text in map(page_for, range(3))]
+    out = time_passes(pages)
+    assert out["missing"] == []
+    for group in PASS_GROUPS:
+        assert out["metrics"][f"cpg.{group}.ms_per_doc"] > 0, group
