@@ -315,7 +315,8 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the LSH candidate pairs (iterative-join
-    propagate + pointer-jump, O(log n) rounds) — pairs (a,b),(b,c)
+    propagate + pointer-jump rounds while the residual graph is large, a
+    driver union-find for the rest) — pairs (a,b),(b,c)
     collapse into one cluster.  Oracle: DuckDB computes the same
     components with a recursive transitive-closure CTE over the same
     banding pipeline.

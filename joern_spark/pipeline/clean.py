@@ -14,8 +14,9 @@ Design notes (100 TB scale):
 - Exact dedup is a single hash-partitioned window (`min(doc_id) OVER
   (PARTITION BY content_hash)`): one narrow (hash → min) shuffle of
   (hash, id) pairs, never the text.
-- Near-dup collapse reuses `connected_dup_clusters` (O(log n)-round CC
-  over the banded LSH pairs); the dropped set is |docs-in-any-pair|
+- Near-dup collapse reuses `connected_dup_clusters` (distributed CC
+  rounds while the residual graph is large, a driver union-find for the
+  rest, over the banded LSH pairs); the dropped set is |docs-in-any-pair|
   sized and joins back by doc_id as a plain equi-join (anti), which AQE
   broadcasts whenever the duplicate rate is low — the common case.
 - Dedup runs on the FULL corpus, filters on the survivors ("dedup

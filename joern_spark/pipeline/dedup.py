@@ -300,9 +300,9 @@ def simhash(df: DataFrame, text_col: str = "text", n_bits: int = 64) -> DataFram
 
 def _local_components(edge_rows) -> dict[int, int]:
     """Driver-side union-find (path-halving) over an edge list; returns
-    doc_id → component-min label for every endpoint.  The small-regime
-    twin of the iterative-join loop below — same output by construction
-    (asserted against the distributed path in tests)."""
+    node → smallest node of its group for every endpoint.  It finishes
+    the residual graph of `connected_dup_clusters` (asserted against the
+    distributed rounds in tests)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -336,181 +336,157 @@ def connected_dup_clusters(pairs: DataFrame,
     component, not per pair: pairs (a,b), (b,c) must collapse to ONE
     cluster even though (a,c) never collided).
 
-    Algorithm: min-label propagation PLUS pointer jumping, one of each
-    per round (the two-step shape of the large-star/small-star and
-    hash-to-min families of MapReduce CC algorithms):
+    Distributed rounds run only while the residual graph is large; the
+    driver union-find finishes the rest.  Every doc carries a label,
+    initially its own id.  The residual graph R is the distinct
+    (label(a), label(b)) over the edges whose endpoint labels differ,
+    counted in directed edge rows (both directions of a pair), so at the
+    start R is the edge set itself: n distinct pairs are 2n rows.
+
+    While |R| ≥ `local_threshold` (default `BROADCAST_THRESHOLD`), one
+    distributed round of min-label propagation plus a pointer jump runs
+    (the two-step shape of the large-star/small-star and hash-to-min
+    families of MapReduce CC algorithms) and R is recomputed:
 
     1. propagate: every doc takes the min of its own label and its
-       graph-neighbors' labels (edges⋈labels + a (doc_id) min-agg);
+       neighbours' labels (edges⋈labels + a (doc_id) min-agg; in the
+       first round the labels are the ids, so a min-agg alone);
     2. jump:      every doc then takes its LABEL's label (labels⋈labels
-       on label = doc_id) — label values are always doc ids inside the
-       same component, so the self-join is total.
+       on label = doc_id).
 
-    Propagation alone needs O(component diameter) rounds — linear for
-    the chain-shaped components that template families produce at
-    corpus scale.  The jump step squares the "who already knows the
-    min" relation each round, so the distance-to-min covered after r
-    rounds grows as ~2^r: convergence in O(log n) rounds on ANY
-    component shape (a 1000-doc chain converges in ~10 rounds, not
-    ~1000 — asserted by a fixture test).  Per round: two joins + one
-    aggregation, all on doc-sized frames (never the corpus text),
-    co-keyed on doc_id; at 10^12 docs the frames are
-    |docs-in-any-pair|, orders of magnitude below N.
+    Once |R| < `local_threshold`, R is collected in one direction: fewer
+    than `local_threshold`/2 rows of two int64s, plus any self-loops when
+    no round ran.  `_local_components` merges its label classes and one
+    broadcast join relabels every doc; when no round ran, the union-find
+    over the edges is itself the answer.
 
-    Raises RuntimeError if the component min has not reached every node
-    within `max_iterations` rounds (silently returning half-merged
-    labels would be a WRONG dedup, not a slow one; with pointer jumping
-    32 rounds cover components of ~2^32 diameter — non-convergence
-    means the pair source is pathological).
+    Why that is exact: a label is always a doc id from the doc's own
+    component, labels only fall, and so the component minimum m always
+    labels itself.  Within one component every edge either joins two
+    docs of one label class or becomes an R edge between two classes,
+    so the classes of a component are connected in R and no R edge
+    crosses components.  The union-find group of a component's labels
+    therefore holds exactly its classes, and its smallest member is m.
+    R is empty exactly when every component has one class, labelled m:
+    the loop has converged and the driver has nothing to merge.
+
+    On a chain whose ids rise away from its minimum the jump doubles the
+    distance each round, so a 1,000-doc chain converges in ~10 rounds
+    (asserted by a fixture test).  Propagation plus jump is not
+    logarithmic on every shape, though: a chain with ids in random order
+    can take a number of rounds linear in its length.  Raises
+    RuntimeError if R still holds at least `local_threshold` rows (any
+    row, for a threshold of 0) after `max_iterations` rounds — silently
+    returning half-merged labels would be a WRONG dedup, not a slow one.
 
     Returns (doc_id, cluster_id) for every doc in at least one pair,
     cluster_id = min doc_id of the component.  The returned frame is
-    persisted and caller-owned; `pairs` stays cached if the caller cached
-    it.  `_stats`, when passed, receives {"rounds": r, "edges": n} and the
-    per-round `sparkutil.Rounds` trace for observability/tests.
+    persisted and caller-owned; `pairs` is read once and stays cached if
+    the caller cached it.  `_stats`, when passed, receives {"rounds":
+    distributed rounds, "edges": directed edge rows, "residual": the
+    directed rows the driver finished, "local": no distributed round
+    ran} and the per-round `sparkutil.Rounds` trace.
     """
     import logging
+    import uuid
 
-    from joern_spark.sparkutil import (BROADCAST_THRESHOLD, Rounds,
-                                       adaptive_paused)
+    import pandas as pd
+
+    from joern_spark.sparkutil import BROADCAST_THRESHOLD, Rounds
 
     spark = pairs.sparkSession
     if local_threshold is None:
         local_threshold = BROADCAST_THRESHOLD
+    # an empty residual is finished whatever the threshold
+    finish_below = max(local_threshold, 1)
     with Rounds(max_iterations, _stats) as rounds:
-        # materialize the (expensive-lineage) pair frame ONCE: its count
-        # both decides the regime and pre-computes the input of either
-        # path.  A frame the caller already cached stays the caller's.
-        pairs_p = rounds.persist(pairs)
-        n_pairs = pairs_p.count()
-        if 2 * n_pairs < local_threshold:
-            # SMALL-GRAPH SHORT-CIRCUIT (r8): below the same row bound this
-            # loop already uses to broadcast the label frame, every round's
-            # `F.broadcast(labels)` collects a label set of this size to the
-            # driver anyway — r rounds of that traffic, plus 2-4 driver jobs
-            # per round, cost ~2 s at bench scale for a graph a union-find
-            # folds in milliseconds.  One bounded collect (≤ local_threshold
-            # rows of two int64s) replaces the whole loop; the large regime
-            # is untouched and tests force local_threshold=0 to pin the
-            # distributed algorithm against this solver's output.  The
-            # union-find is direction- and duplicate-insensitive, so the
-            # directed-dedup (stack + distinct) stage is skipped entirely,
-            # and the label frame goes back through Arrow (pandas input),
-            # not the pickled-list path (~1 s at 5k rows).
-            import uuid
-
-            import pandas as pd
-
-            labels_map = _local_components(
-                (r.doc_a, r.doc_b) for r in pairs_p.collect())
-            ids = sorted(labels_map)
-            out = spark.createDataFrame(
-                pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                              "cluster_id": pd.Series(
-                                  [labels_map[i] for i in ids], dtype="int64")}),
-                schema="doc_id long, cluster_id long")
-            # plan-identity guard: two local-relation frames with identical
-            # rows canonicalize to the SAME plan, so unpersisting one (e.g.
-            # corpus_clean's own-clusters path releasing its internal frame)
-            # would evict a caller-owned twin from the cache.  A unique
-            # constant filter (always true, folded at runtime) makes each
-            # call's plan distinct — the distributed path gets this for
-            # free from its per-call localCheckpoint RDD ids.
-            tag = uuid.uuid4().hex
-            out = out.where(F.lit(tag) == F.lit(tag)).persist()
-            out.count()
-            logging.getLogger(__name__).info(
-                "connected_dup_clusters: %d pairs, local union-find", n_pairs)
-            if _stats is not None:
-                _stats["rounds"] = 0
-                _stats["edges"] = 2 * n_pairs
-                _stats["local"] = True
-            return out
-        # both edge directions in ONE pass over the (cached) pairs
-        edges = rounds.persist(pairs_p.selectExpr(
-            "stack(2, doc_a, doc_b, doc_b, doc_a) AS (a, b)").distinct())
-        n_edges = edges.count()
-        rounds.release(pairs_p)
-        small = n_edges < BROADCAST_THRESHOLD
-        if small:
-            # a small CC problem should not schedule default-parallelism
-            # empty tasks per round: narrow the cached edge partitions once
-            # (coalesce reads the cache, no shuffle) so every per-round
-            # join over `edges` runs 8 tasks, not the cluster width
-            edges = edges.coalesce(8)
-        else:
-            # the edge frame is STATIC across rounds but is the largest
-            # side of every propagate join — pre-hash it on the join key
-            # once so each round's join reuses the cached partitioning
-            # (Exchange reuse) instead of re-shuffling all edges per round
-            e0 = edges
-            edges = rounds.persist(edges.repartition(F.col("b")))
-            edges.count()
-            rounds.release(e0)
-        labels = rounds.persist(edges.select(F.col("a").alias("doc_id"))
-                                .distinct().withColumn("label", F.col("doc_id")))
-        converged = False
-        # small regime (same playbook as dataflow/reachable.py, shared
-        # threshold + AQE pause in sparkutil): the label/edge frames are
-        # chain-tip-sized, so broadcast the label side and skip AQE's
-        # per-stage re-planning round-trips; large graphs keep shuffle
-        # joins + AQE
-        with adaptive_paused(spark, small, shuffle_partitions=8):
-            for _ in rounds:
-                # -- step 1: neighbor-min propagation --------------------
-                lbl = F.broadcast(labels) if small else labels
-                nbr_min = (edges.join(lbl, edges.b == labels.doc_id)
+        # both edge directions in one pass over the pairs.  Checkpointed,
+        # not persisted: AQE then coalesces the distinct's exchange to the
+        # data size (persisted, the frame kept all
+        # `spark.sql.shuffle.partitions` partitions and every later stage
+        # ran that many tasks), and every round plans from a leaf instead
+        # of the pairs' lineage.
+        edges, n_edges = rounds.checkpoint(
+            pairs.selectExpr("stack(2, doc_a, doc_b, doc_b, doc_a) AS (a, b)")
+            .distinct())
+        n_res = edges.where(F.col("a") != F.col("b")).count()
+        # before the first round every doc labels itself and R is the edges
+        labels = residual = None
+        n_rounds = 0
+        for _ in rounds:
+            if n_res < finish_below:
+                break
+            # -- step 1: neighbour-min propagation -----------------------
+            if labels is None:
+                prop = (edges.groupBy(F.col("b").alias("doc_id"))
+                        .agg(F.min(F.least("a", "b")).alias("label")))
+            else:
+                nbr_min = (edges.join(labels, edges.b == labels.doc_id)
                            .groupBy(F.col("a").alias("doc_id"))
                            .agg(F.min("label").alias("nbr_label")))
-                if small:
-                    nbr_min = F.broadcast(nbr_min)
-                # fold the convergence test into the update (a separate
-                # new-vs-old join would cost one more stage per round)
-                prop = rounds.persist(
-                    labels.join(nbr_min, "doc_id", "left")
-                    .select("doc_id",
-                            F.least(F.col("label"),
-                                    F.coalesce("nbr_label", "label"))
-                            .alias("label"),
-                            (F.col("nbr_label") < F.col("label"))
-                            .alias("chg")))
-                # -- step 2: pointer jump (label := label-of-label) ------
-                mapping = prop.select(F.col("doc_id").alias("m_id"),
-                                      F.col("label").alias("m_label"))
-                if small:
-                    mapping = F.broadcast(mapping)
-                # checkpointed, not persisted: the jump references `prop`
-                # on BOTH join sides, so without lineage truncation the
-                # logical plan DOUBLES per round — exponential tree growth
-                # that OOMs the driver's plan builder by ~round 10.
-                new_labels, _ = rounds.checkpoint(
-                    prop.join(mapping, prop.label == F.col("m_id"), "left")
-                    .select("doc_id",
-                            F.least(F.col("label"),
-                                    F.coalesce("m_label", "label"))
-                            .alias("label"),
-                            (F.col("chg")
-                             | (F.col("m_label") < F.col("label")))
-                            .alias("chg")))
-                changed = new_labels.where(F.col("chg")).count()
-                rounds.release(prop, labels)
-                labels = new_labels
-                if changed == 0:
-                    converged = True
-                    break
-            n_rounds = len(rounds.trace)
-            logging.getLogger(__name__).info(
-                "connected_dup_clusters: %d edges, %d rounds, converged=%s",
-                n_edges, n_rounds, converged)
-            if _stats is not None:
-                _stats["rounds"] = n_rounds
-                _stats["edges"] = n_edges
-            if not converged:
-                raise RuntimeError(
-                    f"connected_dup_clusters did not converge within "
-                    f"{max_iterations} rounds ({n_edges} edges)")
-            # materialized before `rounds` releases the labels it reads
-            out = (labels.select("doc_id", F.col("label").alias("cluster_id"))
-                   .persist())
-            out.count()
+                prop = (labels.join(nbr_min, "doc_id")
+                        .select("doc_id", F.least("label", "nbr_label")
+                                .alias("label")))
+            prop = rounds.persist(prop)
+            # -- step 2: pointer jump (label := label-of-label) ----------
+            # a label is a doc id, so the self-join is total.  Checkpointed,
+            # not persisted: the jump reads `prop` on BOTH join sides, so
+            # without lineage truncation the plan doubles every round.
+            mapping = prop.select(F.col("doc_id").alias("m_id"),
+                                  F.col("label").alias("m_label"))
+            new_labels, _ = rounds.checkpoint(
+                prop.join(mapping, prop.label == mapping.m_id)
+                .select("doc_id", F.least("label", "m_label").alias("label")))
+            rounds.release(prop, labels, residual)
+            labels = new_labels
+            # -- step 3: the residual graph under the new labels ---------
+            la = labels.select(F.col("doc_id").alias("a"),
+                               F.col("label").alias("la"))
+            lb = labels.select(F.col("doc_id").alias("b"),
+                               F.col("label").alias("lb"))
+            residual, n_res = rounds.checkpoint(
+                edges.join(la, "a").join(lb, "b")
+                .where(F.col("la") != F.col("lb"))
+                .select(F.col("la").alias("a"), F.col("lb").alias("b"))
+                .distinct())
+            n_rounds += 1
+        logging.getLogger(__name__).info(
+            "connected_dup_clusters: %d edges, %d rounds, residual %d",
+            n_edges, n_rounds, n_res)
+        if _stats is not None:
+            _stats.update(rounds=n_rounds, edges=n_edges, residual=n_res,
+                          local=n_rounds == 0)
+        if n_res >= finish_below:
+            raise RuntimeError(
+                f"connected_dup_clusters did not converge within "
+                f"{max_iterations} rounds ({n_edges} edges, residual "
+                f"{n_res})")
+        # -- the driver finishes R.  R is symmetric, so one direction holds
+        # every undirected edge; with no round run the edges stand in for
+        # R, self-loops included, so that every doc gets a root.
+        roots = _local_components(
+            (r.a, r.b) for r in (edges if labels is None else residual)
+            .where(F.col("a") <= F.col("b")).collect())
+        # pandas input goes through Arrow, not the pickled-list path
+        finish = spark.createDataFrame(
+            pd.DataFrame({"label": pd.Series(list(roots), dtype="int64"),
+                          "root": pd.Series(list(roots.values()),
+                                            dtype="int64")}),
+            schema="label long, root long")
+        if labels is None:
+            out = finish.select(F.col("label").alias("doc_id"),
+                                F.col("root").alias("cluster_id"))
+        else:
+            out = (labels.join(F.broadcast(finish), "label", "left")
+                   .select("doc_id",
+                           F.coalesce("root", "label").alias("cluster_id")))
+        # plan-identity guard: two driver-built frames with identical rows
+        # canonicalize to the same plan, and unpersisting one would evict
+        # the other's cached twin (e.g. corpus_clean releasing its own
+        # clusters).  A unique always-true filter makes each call's plan
+        # distinct.
+        tag = uuid.uuid4().hex
+        # materialized before `rounds` releases the frames it reads
+        out = out.where(F.lit(tag) == F.lit(tag)).persist()
+        out.count()
     return out

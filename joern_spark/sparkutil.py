@@ -1,6 +1,7 @@
 """Shared helpers for the iterative-join loops (corpus BFS, connected
-components, frame closures): the small-regime playbook and the per-round
-materialize/release discipline live in ONE place.
+components, frame closures): the per-round materialize/release
+discipline and the reachability loop's small-regime playbook live in
+ONE place.
 
 `Rounds` owns every cache a fixpoint loop pins: each round's product is
 eagerly local-checkpointed, so the next round plans from a leaf instead
@@ -12,12 +13,14 @@ loop when the frames involved are known-small: AQE materializes each
 shuffle stage with a driver round-trip to re-plan, which is pure
 overhead once the driver has already sized every side (measured ~2x on
 per-round latency at test scale).  Large regimes leave AQE on for
-runtime coalescing and skew splitting.
+runtime coalescing and skew splitting.  Only `reachable_pairs` pauses;
+connected components hand a small residual graph to a driver
+union-find instead and change no session configuration.
 
 LIMITATION (by design): `spark.conf` is session-global, so pausing AQE
 is only safe while the session runs one query at a time — which is how
 the bench, the driver and the batch jobs operate.  Concurrent queries in
-a shared session should not call into these loops simultaneously; a
+a shared session should not run the reachability loop simultaneously; a
 Spark-level fix would need per-query configuration, which Spark does not
 offer for AQE.
 """
@@ -30,9 +33,10 @@ from contextlib import contextmanager
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-# Frames below this row count get broadcast hints inside iterative loops
-# (and AQE paused); above it, shuffle joins + AQE.  One shared constant so
-# the BFS and CC loops cannot drift apart.
+# Reachability frontiers below this row count get broadcast hints (and
+# AQE paused); above it, shuffle joins + AQE.  Connected components
+# finish on the driver once their residual graph is below it.  One shared
+# constant so the BFS and CC loops cannot drift apart.
 BROADCAST_THRESHOLD = 100_000
 
 

@@ -1,6 +1,7 @@
 """The shared fixpoint helper (`sparkutil.Rounds`) and the loops built on
 it: constant-size round plans, regime parity of corpus reachability
-against an in-process BFS, release of every pinned block, cache
+against an in-process BFS, the connected-components hand-over from
+distributed rounds to the driver, release of every pinned block, cache
 ownership of caller inputs, and the spread-probe memo."""
 
 from __future__ import annotations
@@ -111,6 +112,81 @@ def test_connected_dup_clusters_keeps_caller_cache(spark, local_threshold):
         assert pairs.storageLevel != StorageLevel.NONE
     finally:
         pairs.unpersist()
+
+
+def _components(pairs):
+    """doc -> smallest doc of its component, by graph search."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out: dict = {}
+    for start in adj:
+        if start in out:
+            continue
+        seen = {start}
+        todo = [start]
+        while todo:
+            for nxt in adj[todo.pop()] - seen:
+                seen.add(nxt)
+                todo.append(nxt)
+        low = min(seen)
+        out.update((d, low) for d in seen)
+    return out
+
+
+def _clusters(spark, pairs, **kw):
+    out = connected_dup_clusters(
+        spark.createDataFrame(pairs, "doc_a long, doc_b long"), **kw)
+    try:
+        return {r.doc_id: r.cluster_id for r in out.collect()}
+    finally:
+        out.unpersist()
+
+
+def test_connected_dup_clusters_hybrid_finish(spark):
+    """200 two-doc chains and one 40-doc chain in random id order: 478
+    directed edge rows enter the distributed loop, one round settles the
+    short chains, and the driver finishes the long chain's residual."""
+    import random
+
+    ids = list(range(40))
+    random.Random(5).shuffle(ids)
+    pairs = [(1000 + 2 * i, 1001 + 2 * i) for i in range(200)]
+    pairs += list(zip(ids, ids[1:]))
+    stats: dict = {}
+    got = _clusters(spark, pairs, _stats=stats, local_threshold=400)
+    assert got == _components(pairs)
+    assert stats["edges"] == 478
+    assert stats["rounds"] >= 1 and not stats["local"]
+    assert 0 < stats["residual"] < 400
+
+
+def test_connected_dup_clusters_counts_directed_rows(spark):
+    """n distinct pairs are 2n directed rows: at 2n == local_threshold
+    the distributed loop must run (counting pairs would skip it).  A
+    repeated pair counts once, a self-loop not at all, and its doc is
+    still a cluster of its own."""
+    pairs = [(2 * i, 2 * i + 1) for i in range(50)] + [(1, 0), (500, 500)]
+    stats: dict = {}
+    got = _clusters(spark, pairs, _stats=stats, local_threshold=100)
+    assert got == _components(pairs)
+    assert stats["rounds"] >= 1 and not stats["local"]
+    # below the threshold the driver solves the graph with no round
+    assert _clusters(spark, pairs, _stats=stats, local_threshold=101) == got
+    assert stats["rounds"] == 0 and stats["local"]
+    assert stats["residual"] == 100
+
+
+def test_connected_dup_clusters_raises_and_releases(spark):
+    """A residual still above the threshold after the round cap raises,
+    and every block the loop pinned is released on the way out."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(999)],
+                                  "doc_a long, doc_b long")
+    before = _persistent(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_dup_clusters(pairs, local_threshold=0, max_iterations=2)
+    assert _persistent(spark) == before
 
 
 def test_spread_memo_is_per_session(spark, monkeypatch):
