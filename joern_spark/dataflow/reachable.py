@@ -7,23 +7,12 @@ corpus at once — one distributed hash join per BFS hop, co-keyed on
 iteration count is bounded by the longest DDG path in any document (small),
 NOT by corpus size.
 
-The loop is ADAPTIVE on the one statistic the driver learns for free each
-round — the frontier count, which the round's one materializing job
-yields as the growth of the visited set:
-
-- **small frontier** (< `broadcast_threshold` rows): the round's joins get
-  explicit `broadcast(frontier)` / `broadcast(visited)` hints (no shuffle
-  at all), 4 hops are batched per round (intra-round recompute of the
-  unpersisted hop chain is a narrow re-probe, measured cheaper than extra
-  rounds), and AQE is toggled OFF for the round's action — AQE's
-  stage-by-stage re-planning adds one driver round-trip per shuffle stage,
-  pure overhead when the driver has already sized every side (measured
-  ~2x on per-round latency at sf0.1).
-- **large frontier** (real cluster scale): no broadcast hints (Catalyst
-  plans shuffle joins over the co-keyed tables), 2 hops per round (a
-  deeper unpersisted hop chain would re-execute earlier shuffle joins
-  per hop — O(hops^2) shuffles), and AQE stays ON for runtime coalescing
-  and skew splitting.
+Every join is keyed on `url`, so the work left after any round is the
+residual: the REACHING_DEF edges of the urls whose frontier is non-empty.
+Distributed rounds run only while the residual is large; below
+`local_threshold` rows one grouped Arrow pass finishes every url's BFS
+(connected components finish their residual the same way).  No round
+changes session configuration.
 
 The visited-set subtraction replaces the reference engine's memo table
 (Engine.scala:32-38).
@@ -36,115 +25,159 @@ reachable pairs for semantics-free edges.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_KEYS = ["url", "cur", "sink_id"]
 
 
 def reachable_pairs(edges: DataFrame, sources: DataFrame, sinks: DataFrame,
                     max_iterations: int = 128,
-                    broadcast_threshold: int | None = None,
+                    local_threshold: int | None = None,
                     _stats: dict | None = None) -> DataFrame:
     """BFS backwards from sinks over REACHING_DEF edges.
 
     edges:   (url, src, dst, label, variable)
     sources: (url, node_id)
     sinks:   (url, node_id)
-    returns: (url, source_id, sink_id) pairs where source reaches sink;
-             persisted and caller-owned.
+    returns: (url, source_id, sink_id) pairs where source reaches sink
+             along at most `max_iterations` edges; persisted and
+             caller-owned.
 
-    `max_iterations` bounds the total HOP count (default 128, matching
-    the pre-round-5 depth of 64 two-hop rounds).  The loop state is ONE
-    frame, `visited` (url, cur, sink_id, new), with `new` marking the
-    rows the last round added — the frontier.  Each round's `visited` is
-    a `sparkutil.Rounds` checkpoint: its row count is the round's one
-    job and yields the frontier size (the growth) that drives the
-    adaptive plan above, and the next round plans from a single leaf.
-    Keeping the frontier inside `visited` also keeps the anti-join's
-    right side a single checkpointed relation: Spark 4.1 fails to
-    re-resolve an anti-join over a UNION of checkpointed relations
-    ("key not found: url#N").  `_stats`, when passed, receives the
-    per-round trace (`Rounds`).
+    The loop state is ONE frame, `visited` (url, cur, sink_id, new), with
+    `new` marking the rows the last round added — the frontier.  Keeping
+    the frontier inside `visited` keeps the anti-join's right side a
+    single checkpointed relation: Spark 4.1 fails to re-resolve an
+    anti-join over a UNION of checkpointed relations ("key not found").
 
-    Before the checkpoints each round persisted its frontier, and
-    `visited` stayed a union of persisted frames, so every plan embedded
-    the whole loop history (about 5x more plan leaves per round).
-    Measured with `perfbench/run.py --workload graph --trace 1` on a
-    4-core host, seeds 1, 13, 14 and 15: the reach phase took 14.7-17.4 s,
-    9.9-11.6 s of it outside any Spark job; with a leaf per round it
-    takes 4.7-6.6 s, 2.2-3.0 s outside jobs.
+    Each round first counts the residual, the REACHING_DEF rows of the
+    urls that still have `new` rows.  While it holds at least
+    `local_threshold` rows (default `BROADCAST_THRESHOLD`), a distributed
+    round expands the frontier two hops (a deeper unpersisted hop chain
+    would re-execute earlier shuffle joins per hop) into a
+    `sparkutil.Rounds` checkpoint, so the next round plans from one leaf.
+    Below it, `_finish_local` runs the rest of every url's BFS in one
+    cogrouped pass.  A threshold of 0 keeps every hop distributed.
+
+    `_stats`, when passed, receives {"rounds": distributed rounds, "hops":
+    the hops they ran, "edges": the residual before the first round,
+    "residual": the rows the local pass finished (0 if it did not run),
+    "local": the local pass ran} and the per-round `Rounds` trace.
     """
-    from joern_spark.sparkutil import (BROADCAST_THRESHOLD, Rounds,
-                                       adaptive_paused)
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_THRESHOLD
-    spark = edges.sparkSession
+    from joern_spark.sparkutil import BROADCAST_THRESHOLD, Rounds
+    if local_threshold is None:
+        local_threshold = BROADCAST_THRESHOLD
+    # an empty residual is finished whatever the threshold
+    finish_below = max(local_threshold, 1)
+    # a fresh `url` attribute: `edges` and `sinks` may be filters over one
+    # cached frame, and the local pass groups both sides by `url`
     rd = (edges.where(F.col("label") == "REACHING_DEF")
-          .select("url", "src", "dst"))
-    keys = ["url", "cur", "sink_id"]
+          .select(F.col("url").alias("url"), "src", "dst"))
 
-    def expand(fr, hint_broadcast):
-        f = F.broadcast(fr) if hint_broadcast else fr
-        return (
-            f.alias("f")
-            .join(rd.alias("e"), on=[F.col("f.url") == F.col("e.url"),
-                                     F.col("f.cur") == F.col("e.dst")])
-            .select(F.col("f.url").alias("url"), F.col("e.src").alias("cur"), "sink_id")
-        )
+    def expand(fr):
+        return (fr.alias("f")
+                .join(rd.alias("e"), on=[F.col("f.url") == F.col("e.url"),
+                                         F.col("f.cur") == F.col("e.dst")])
+                .select(F.col("f.url").alias("url"),
+                        F.col("e.src").alias("cur"), "sink_id"))
 
     with Rounds(max_iterations, _stats) as rounds:
         # distinct up front so the union-without-distinct invariant below
-        # holds even if the caller's sinks frame carries duplicate rows.
-        # The seed is counted like every round: the sink set can itself be
-        # corpus-scale, and the first round's broadcast decision must see
-        # its true cardinality.
+        # holds even if the caller's sinks frame carries duplicate rows
         visited, visited_n = rounds.checkpoint(
             sinks.select("url", F.col("node_id").alias("cur"),
                          F.col("node_id").alias("sink_id"))
             .distinct().withColumn("new", F.lit(True)))
-        frontier_n = visited_n
-        hops_done = 0
+        frontier_n, hops, n_rounds, n_edges = visited_n, 0, 0, 0
+        local = False
         for _ in rounds:
-            small = frontier_n < broadcast_threshold
-            k = min(4 if small else 2, max_iterations - hops_done)
-            # with AQE paused nothing coalesces post-shuffle: the round's
-            # one shuffle (the distinct) runs in 8 tasks, not the default
-            # partition count
-            with adaptive_paused(spark, small, shuffle_partitions=8):
-                frontier = visited.where("new").select(*keys)
-                # k hops per round; only the round's frontier gets a
-                # broadcast hint — hinting (or persisting) the intra-round
-                # hop frames forces one driver materialization job per
-                # hop, which measured ~20x slower than letting the chain
-                # re-probe.
-                hops = [expand(frontier, small)]
-                for _ in range(k - 1):
-                    hops.append(expand(hops[-1], False))
-                step = hops[0]
-                for h in hops[1:]:
-                    step = step.union(h)
-                vis = (F.broadcast(visited) if visited_n < broadcast_threshold
-                       else visited)
-                # anti-join (vs everything seen) BEFORE distinct: the anti
-                # is broadcast/narrow in the small regime, so the one
-                # shuffle per round (the distinct) sees the reduced set.
-                # The fresh rows are disjoint from `visited` by
-                # construction, so a plain union is exact.
-                fresh = step.join(vis, keys, "left_anti").distinct()
-                nxt, n = rounds.checkpoint(
-                    visited.withColumn("new", F.lit(False))
-                    .unionByName(fresh.withColumn("new", F.lit(True))))
+            n_res = 0
+            if frontier_n and hops < max_iterations:
+                residual = rd.join(visited.where("new"), "url", "left_semi")
+                n_res = residual.count()
+            if not n_rounds:
+                n_edges = n_res
+            if n_res < finish_below:
+                local = n_res > 0
+                break
+            k = min(2, max_iterations - hops)
+            step = expand(visited.where("new").select(*_KEYS))
+            if k == 2:
+                step = step.union(expand(step))
+            # the fresh rows are disjoint from `visited` by construction,
+            # so a plain union is exact
+            fresh = step.join(visited, _KEYS, "left_anti").distinct()
+            nxt, n = rounds.checkpoint(
+                visited.withColumn("new", F.lit(False))
+                .unionByName(fresh.withColumn("new", F.lit(True))))
             rounds.release(visited)
             visited, frontier_n, visited_n = nxt, n - visited_n, n
-            hops_done += k
-            if frontier_n == 0 or hops_done >= max_iterations:
-                break
-
-        # the final visited⋈sources join runs with the caller's AQE
-        # setting: `visited` can be far larger than the last frontier
-        src = sources.select(F.col("url").alias("s_url"), F.col("node_id").alias("source_id"))
-        result = (visited.join(src, on=[visited.url == src.s_url, visited.cur == src.source_id])
-                  .select("url", "source_id", "sink_id").distinct().persist())
+            hops += k
+            n_rounds += 1
+        n_res = n_res if local else 0
+        logging.getLogger(__name__).info(
+            "reachable_pairs: %d edges, %d rounds, residual %d",
+            n_edges, n_rounds, n_res)
+        if _stats is not None:
+            _stats.update(rounds=n_rounds, hops=hops, edges=n_edges,
+                          residual=n_res, local=local)
+        if local:
+            visited = _finish_local(residual, visited, max_iterations - hops)
+        # joined by column name: `visited` and `sources` may share
+        # attribute ids when both are filters over one cached frame
+        src = sources.select("url", F.col("node_id").alias("cur"))
+        result = (visited.join(src, ["url", "cur"])
+                  .select("url", F.col("cur").alias("source_id"), "sink_id")
+                  .distinct().persist())
         # materialize the (pair-sized) result before `rounds` releases the
         # checkpoint it is computed from
         result.count()
     return result
+
+
+def _finish_local(residual: DataFrame, visited: DataFrame,
+                  hops_left: int) -> DataFrame:
+    """Per url, a BFS from each sink's `new` rows over the residual edges,
+    at most `hops_left` hops deep; returns every (url, cur, sink_id)
+    visited.  `visited` holds every node within the hops run so far and
+    its frontier every node at exactly that depth, so this reaches the
+    same set as the distributed rounds would.  Arrow keeps ids as they
+    are: 64-bit longs stay exact, and the crosspage summary graph's
+    string ids take the same path."""
+    import pyarrow as pa
+
+    def finish(key, res, vis):
+        out = vis.select(_KEYS)
+        if not res.num_rows:
+            return out
+        into: dict = {}
+        for s, d in zip(res["src"].to_pylist(), res["dst"].to_pylist()):
+            if d is not None:  # a null never equi-joins
+                into.setdefault(d, []).append(s)
+        seen: dict = {}
+        front: dict = {}
+        for cur, sink, new in zip(*(vis[c].to_pylist()
+                                    for c in ("cur", "sink_id", "new"))):
+            seen.setdefault(sink, set()).add(cur)
+            if new:
+                front.setdefault(sink, []).append(cur)
+        cur_col, sink_col = [], []
+        for sink, level in front.items():
+            got = seen[sink]
+            for _ in range(hops_left):
+                level = list(dict.fromkeys(
+                    p for c in level for p in into.get(c, ()) if p not in got))
+                if not level:
+                    break
+                got.update(level)
+                cur_col += level
+                sink_col += [sink] * len(level)
+        fresh = pa.table({"url": [key[0].as_py()] * len(cur_col),
+                          "cur": cur_col, "sink_id": sink_col},
+                         schema=out.schema)
+        return pa.concat_tables([out, fresh])
+
+    return (residual.groupBy("url").cogroup(visited.groupBy("url"))
+            .applyInArrow(finish, visited.select(*_KEYS).schema))

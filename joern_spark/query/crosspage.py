@@ -253,10 +253,10 @@ def cross_page_flows_transitive(pages: DataFrame,
     are (domain, function name), edges are tainted wrap rows — via the
     same iterative-join BFS as corpus reachability (reachable_pairs,
     k-limited like the engine's flow search).  The summary graph is
-    corpus-scale tiny (functions shared across pages, not nodes), so the
-    BFS rounds run in the broadcast regime; at 10^12 documents the frames
-    stay proportional to DISTINCT (domain, func) — the blobs and CPGs
-    never enter the iteration.
+    corpus-scale tiny (functions shared across pages, not nodes), so its
+    residual is finished in the one grouped local pass; at 10^12
+    documents the frames stay proportional to DISTINCT (domain, func) —
+    the blobs and CPGs never enter the iteration.
 
     Returns one row per (domain, origin_func, called_func): origin_func's
     definition carries user input on some page, and its value reaches an

@@ -1,42 +1,29 @@
 """Shared helpers for the iterative-join loops (corpus BFS, connected
 components, frame closures): the per-round materialize/release
-discipline and the reachability loop's small-regime playbook live in
-ONE place.
+discipline lives in ONE place.
 
 `Rounds` owns every cache a fixpoint loop pins: each round's product is
 eagerly local-checkpointed, so the next round plans from a leaf instead
 of the whole loop history, and every block is released when the loop
 exits, on success and on error.
 
-`adaptive_paused` pauses AQE for the duration of a driver-side iterative
-loop when the frames involved are known-small: AQE materializes each
-shuffle stage with a driver round-trip to re-plan, which is pure
-overhead once the driver has already sized every side (measured ~2x on
-per-round latency at test scale).  Large regimes leave AQE on for
-runtime coalescing and skew splitting.  Only `reachable_pairs` pauses;
-connected components hand a small residual graph to a driver
-union-find instead and change no session configuration.
-
-LIMITATION (by design): `spark.conf` is session-global, so pausing AQE
-is only safe while the session runs one query at a time — which is how
-the bench, the driver and the batch jobs operate.  Concurrent queries in
-a shared session should not run the reachability loop simultaneously; a
-Spark-level fix would need per-query configuration, which Spark does not
-offer for AQE.
+Reachability and connected components run distributed rounds only while
+their residual (the edges still in play) holds at least
+`BROADCAST_THRESHOLD` rows, then finish it in one local pass.  Neither
+changes session configuration: AQE stays on for runtime coalescing and
+skew splitting.
 """
 
 from __future__ import annotations
 
 import time
-from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-# Reachability frontiers below this row count get broadcast hints (and
-# AQE paused); above it, shuffle joins + AQE.  Connected components
-# finish on the driver once their residual graph is below it.  One shared
-# constant so the BFS and CC loops cannot drift apart.
+# Below this many residual edge rows the reachability BFS finishes in
+# one grouped pass and connected components finish on the driver.  One
+# shared constant so the two loops cannot drift apart.
 BROADCAST_THRESHOLD = 100_000
 
 
@@ -100,30 +87,6 @@ def spread(df, min_partitions: int | None = None, by: str | None = None):
         return df
     from pyspark.sql import functions as F
     return df.repartition(target, F.col(by)) if by else df.repartition(target)
-
-
-@contextmanager
-def adaptive_paused(spark, pause: bool, shuffle_partitions: int | None = None):
-    """Temporarily disable AQE when `pause` (restoring the prior value,
-    even on error).  No-op when `pause` is False.
-
-    `shuffle_partitions`, when given and pausing, also lowers
-    spark.sql.shuffle.partitions for the scope: with AQE off nothing
-    coalesces post-shuffle, so a small-regime iterative loop otherwise
-    pays the full default partition count in empty tasks per round
-    (measured ~2x on the CC chain fixture at local[32])."""
-    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    before_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        if pause:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            if shuffle_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions",
-                               str(shuffle_partitions))
-        yield before
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", before)
-        spark.conf.set("spark.sql.shuffle.partitions", before_sp)
 
 
 class Rounds:

@@ -98,8 +98,8 @@ def test_pmod_bucket_never_negative(spark):
 
 def test_reachable_pairs_releases_frontier_caches(spark):
     """Neither loop leaves a persistent RDD behind beyond the frame it
-    returns: reach in both regimes (per-round checkpoints) and the
-    distributed connected-components loop."""
+    returns: reach with its local finish and with per-round
+    checkpoints, and the distributed connected-components loop."""
     from joern_spark.dataflow.reachable import reachable_pairs
     from joern_spark.pipeline.dedup import connected_dup_clusters
 
@@ -123,7 +123,7 @@ def test_reachable_pairs_releases_frontier_caches(spark):
     for threshold in (None, 0):
         leaves_only_result(
             lambda: reachable_pairs(edges, sources, sinks,
-                                    broadcast_threshold=threshold), 1)
+                                    local_threshold=threshold), 1)
 
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
                                   "doc_a long, doc_b long")

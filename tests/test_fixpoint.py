@@ -1,11 +1,13 @@
 """The shared fixpoint helper (`sparkutil.Rounds`) and the loops built on
-it: constant-size round plans, regime parity of corpus reachability
-against an in-process BFS, the connected-components hand-over from
-distributed rounds to the driver, release of every pinned block, cache
-ownership of caller inputs, and the spread-probe memo."""
+it: constant-size round plans, corpus reachability against an in-process
+BFS in its distributed, local and hybrid runs and under the hop cap, the
+connected-components hand-over from distributed rounds to the driver,
+release of every pinned block, cache ownership of caller inputs, the
+session conf no query may change, and the spread-probe memo."""
 
 from __future__ import annotations
 
+import pathlib
 from collections import deque
 
 import pytest
@@ -16,28 +18,31 @@ from joern_spark.dataflow.reachable import reachable_pairs
 from joern_spark.pipeline.dedup import connected_dup_clusters
 from joern_spark.sparkutil import Rounds, spread
 
-CHAIN = 45  # REACHING_DEF hops: >= 10 rounds at four hops a round
+CHAIN = 45  # REACHING_DEF hops: >= 10 distributed rounds at two hops a round
 
 
 def _persistent(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def _bfs_pairs(edges, sources, sinks):
+def _bfs_pairs(edges, sources, sinks, max_hops=None):
     """(url, source_id, sink_id) reachable backwards from each sink over
-    REACHING_DEF edges, the sink itself included."""
+    at most `max_hops` REACHING_DEF edges, the sink itself included."""
     into: dict = {}
     for url, src, dst, label, _ in edges:
         if label == "REACHING_DEF":
             into.setdefault((url, dst), set()).add(src)
     out = set()
     for url, sink in sinks:
-        seen = {sink}
+        seen = {sink: 0}
         todo = deque([sink])
         while todo:
-            for nxt in into.get((url, todo.popleft()), ()):
+            cur = todo.popleft()
+            if max_hops is not None and seen[cur] == max_hops:
+                continue
+            for nxt in into.get((url, cur), ()):
                 if nxt not in seen:
-                    seen.add(nxt)
+                    seen[nxt] = seen[cur] + 1
                     todo.append(nxt)
         out |= {(url, s, sink) for u, s in sources if u == url and s in seen}
     return out
@@ -64,27 +69,125 @@ def reach_graph(spark, tmp_path_factory):
     frames = (spark.read.parquet(path),
               spark.createDataFrame(sources, "url string, node_id long"),
               spark.createDataFrame(sinks, "url string, node_id long"))
-    return frames, _bfs_pairs(edges, sources, sinks)
+    return frames, (edges, sources, sinks)
+
+
+def _reach(*frames, **kw):
+    res = reachable_pairs(*frames, **kw)
+    try:
+        return {tuple(r) for r in res.collect()}
+    finally:
+        res.unpersist()
 
 
 @pytest.mark.parametrize("threshold", [None, 0],
                          ids=["default", "large-regime"])
 def test_reach_matches_bfs_with_constant_plans(spark, reach_graph, threshold):
-    (edges, sources, sinks), want = reach_graph
+    frames, rows = reach_graph
     stats: dict = {}
-    res = reachable_pairs(edges, sources, sinks,
-                          broadcast_threshold=threshold, _stats=stats)
-    try:
-        assert {tuple(r) for r in res.collect()} == want
-    finally:
-        res.unpersist()
+    assert _reach(*frames, local_threshold=threshold,
+                  _stats=stats) == _bfs_pairs(*rows)
     trace = stats["trace"]
-    assert len(trace) >= 10
+    if threshold is None:
+        # the 54 REACHING_DEF rows are far below the default threshold:
+        # one grouped pass does every hop
+        assert stats["local"] and stats["rounds"] == 0 and not trace
+        assert stats["residual"] == stats["edges"] == CHAIN + 9
+        return
+    assert not stats["local"] and stats["rounds"] == len(trace) >= 10
     # every round plans from a checkpointed leaf: the round's query has
     # the same handful of leaves in round 1 and round 20 (without the
     # truncation the count grew about 5x a round)
     assert max(r["leaves"] for r in trace) <= 16
     assert len({r["leaves"] for r in trace}) == 1
+
+
+@pytest.mark.parametrize("threshold", [None, 0, 50],
+                         ids=["local", "distributed", "hybrid"])
+@pytest.mark.parametrize("max_hops", [8, 9, 10])
+def test_reach_stops_at_the_hop_cap(spark, reach_graph, threshold, max_hops):
+    """`max_iterations` caps the hops whichever way they run: the chain's
+    sources enter at 1, 5, 9, ... hops from a sink, so one hop too many
+    shows at 8 and one too few at 9.  At 50 the two pages' 54 rows take
+    two distributed rounds, the branch page is then done and the chain's
+    45 rows finish locally."""
+    frames, rows = reach_graph
+    stats: dict = {}
+    got = _reach(*frames, max_iterations=max_hops,
+                 local_threshold=threshold, _stats=stats)
+    assert got == _bfs_pairs(*rows, max_hops=max_hops)
+    assert got != _bfs_pairs(*rows)  # the cap cuts the chain short
+    if threshold == 50:
+        assert stats["rounds"] == 2 and stats["hops"] == 4
+        assert stats["local"] and stats["residual"] == CHAIN
+
+
+def test_reach_hybrid_finish(spark, reach_graph):
+    """60 extra pages whose sinks no REACHING_DEF edge leads into: their
+    240 rows keep the residual at the threshold on entry, one distributed
+    round finds nothing on them, and the two real pages finish locally."""
+    (edges, sources, sinks), (e_rows, s_rows, k_rows) = reach_graph
+    noise = [(f"n{u}", 0, d, "REACHING_DEF", "y")
+             for u in range(60) for d in range(1, 5)]
+    extra = spark.createDataFrame(noise, edges.schema)
+    k_rows = k_rows + [(f"n{u}", 0) for u in range(60)]
+    s_rows = s_rows + [(f"n{u}", 0) for u in range(60)]
+    stats: dict = {}
+    got = _reach(edges.unionByName(extra),
+                 spark.createDataFrame(s_rows, sources.schema),
+                 spark.createDataFrame(k_rows, sinks.schema),
+                 local_threshold=294, _stats=stats)
+    assert got == _bfs_pairs(e_rows + noise, s_rows, k_rows)
+    assert stats["edges"] == 294
+    assert stats["rounds"] == 1 and stats["local"]
+    assert 0 < stats["residual"] < 294
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+@pytest.mark.parametrize("threshold", [None, 0],
+                         ids=["local", "distributed"])
+def test_reach_keeps_ids_exact(spark, kind, threshold):
+    """Ids past 2**53 would round through a float64; the crosspage summary
+    graph's ids are strings.  Both come back as they went in."""
+    def node(i):
+        n = 2**53 + 1 + 2 * i
+        return n if kind == "long" else f"f{n}"
+    edges = [("u", node(i), node(i + 1), "REACHING_DEF", "x")
+             for i in range(6)]
+    sources = [("u", node(i)) for i in range(0, 7, 3)]
+    sinks = [("u", node(6)), ("u", node(4))]
+    want = _bfs_pairs(edges, sources, sinks)
+    got = _reach(
+        spark.createDataFrame(edges, f"url string, src {kind}, dst {kind}, "
+                              "label string, variable string"),
+        spark.createDataFrame(sources, f"url string, node_id {kind}"),
+        spark.createDataFrame(sinks, f"url string, node_id {kind}"),
+        local_threshold=threshold)
+    assert got == want and len(want) == 5
+
+
+def test_no_query_changes_session_conf(spark):
+    """Queries share the caller's session, so none may set its conf; the
+    stream runner sets the width only on its own cloned session."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "joern_spark"
+    setters = {str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+               if "conf.set(" in p.read_text()}
+    assert setters == {"streaming/job.py"}
+
+    watched = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in watched}
+    edges = spark.createDataFrame(
+        [("u", 1, 2, "REACHING_DEF", "x"), ("u", 2, 3, "REACHING_DEF", "x")],
+        "url string, src long, dst long, label string, variable string")
+    ends = spark.createDataFrame([("u", 1), ("u", 3)],
+                                 "url string, node_id long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    for threshold in (None, 0):
+        reachable_pairs(edges, ends, ends,
+                        local_threshold=threshold).unpersist()
+        assert {k: spark.conf.get(k) for k in watched} == before
+        connected_dup_clusters(pairs, local_threshold=threshold).unpersist()
+        assert {k: spark.conf.get(k) for k in watched} == before
 
 
 def test_rounds_releases_on_error(spark):
