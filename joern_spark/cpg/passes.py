@@ -287,111 +287,8 @@ def is_stub(cpg: Cpg, method: Node) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Type recovery (XTypeRecovery subset) + CHA dynamic call linking
+# CHA dynamic call linking (type recovery: typerec.run_type_recovery)
 # ---------------------------------------------------------------------------
-
-def recover_types(cpg: Cpg):
-    """Assignment-propagation core of the reference's XTypeRecovery
-    (x2cpg frontendspecific XTypeRecovery.scala — the subset that resolves
-    receiver-typed dynamic calls):
-
-    - `x = new C()`      → x : C's TYPE_DECL full name
-    - `m = require("p")` → m : module p
-    - dynamic call `x.f()` with recovered receiver type T →
-      call.methodFullName = "T:f" (ready for CHA linking); module receivers
-      get "p:f" and an external stub.
-
-    Scoping: hints are keyed per enclosing method (JS block scoping is
-    method-granular after our lowering), with a document-level fallback.
-    """
-    typedecl_by_name: dict[str, Node] = {}
-    for t in cpg.nodes:
-        if t.label == "TYPE_DECL" and t.name not in (":program",):
-            typedecl_by_name.setdefault(t.name, t)
-
-    method_of: dict[int, int] = {}
-    for m in cpg.methods():
-        for n in cpg.ast_subtree(m):
-            method_of.setdefault(n.id, m.id)
-
-    var_type: dict[tuple[int, str], str] = {}    # (method_id, var) → type full
-    var_module: dict[tuple[int, str], str] = {}  # (method_id, var) → module
-
-    calls = cpg.nodes_by_label("CALL")
-    for call in calls:
-        if call.name != "<operator>.assignment":
-            continue
-        args = cpg.arguments(call)
-        if len(args) != 2 or args[0].label != "IDENTIFIER":
-            continue
-        lhs, rhs = args
-        scope = method_of.get(lhs.id, -1)
-        for sub in cpg.ast_subtree(rhs):
-            if sub.label != "CALL":
-                continue
-            if sub.name == "<operator>.new":
-                recv = [e.dst for e in cpg.out(sub, "RECEIVER")]
-                if recv and recv[0].label == "IDENTIFIER" \
-                        and recv[0].name in typedecl_by_name:
-                    t = typedecl_by_name[recv[0].name]
-                    var_type[(scope, lhs.name)] = t.full_name
-                    lhs.type_full_name = t.full_name
-                    break
-            elif sub.name == "require":
-                lits = [a for a in cpg.arguments(sub) if a.label == "LITERAL"]
-                if lits:
-                    mod = lits[0].code.strip("\"'`")
-                    var_module[(scope, lhs.name)] = mod
-                    break
-
-    # document-level fallback index: name → set of hinted values (built
-    # once; the per-call linear scan was O(calls×hints))
-    def _by_name(table):
-        idx: dict[str, set] = {}
-        for (_s, n), val in table.items():
-            idx.setdefault(n, set()).add(val)
-        return idx
-
-    type_by_name = _by_name(var_type)
-    module_by_name = _by_name(var_module)
-
-    def lookup(table, idx, scope, name):
-        v = table.get((scope, name))
-        if v is not None:
-            return v
-        # document-level fallback: unique hint for the name anywhere
-        hits = idx.get(name, ())
-        return next(iter(hits)) if len(hits) == 1 else None
-
-    stub_cache: dict[str, Node] = {}
-    for call in calls:
-        if call.method_full_name != DYNAMIC_UNKNOWN:
-            continue
-        recv = [e.dst for e in cpg.out(call, "RECEIVER")]
-        if not (recv and recv[0].label == "CALL"
-                and recv[0].name == "<operator>.fieldAccess"):
-            continue
-        fa_args = cpg.arguments(recv[0])
-        if len(fa_args) != 2 or fa_args[0].label != "IDENTIFIER":
-            continue
-        base = fa_args[0]
-        scope = method_of.get(call.id, -1)
-        t = lookup(var_type, type_by_name, scope, base.name)
-        if t is not None:
-            call.method_full_name = f"{t}:{call.name}"
-            base.type_full_name = t
-            continue
-        mod = lookup(var_module, module_by_name, scope, base.name)
-        if mod is not None:
-            fn = f"{mod}:{call.name}"
-            call.method_full_name = fn
-            if fn not in stub_cache:
-                existing = next((m for m in cpg.methods()
-                                 if m.full_name == fn), None)
-                if existing is None:
-                    existing = _make_stub(cpg, call, fn)
-                stub_cache[fn] = existing
-
 
 def link_dynamic_calls(cpg: Cpg):
     """CHA dynamic call linking (x2cpg passes/callgraph/

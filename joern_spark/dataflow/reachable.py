@@ -43,8 +43,8 @@ def reachable_pairs(edges: DataFrame, sources: DataFrame, sinks: DataFrame,
     sources: (url, node_id)
     sinks:   (url, node_id)
     returns: (url, source_id, sink_id) pairs where source reaches sink
-             along at most `max_iterations` edges; persisted and
-             caller-owned.
+             along at most `max_iterations` edges; persisted by
+             `sparkutil.persist_result` and caller-owned.
 
     The loop state is ONE frame, `visited` (url, cur, sink_id, new), with
     `new` marking the rows the last round added — the frontier.  Keeping
@@ -66,7 +66,8 @@ def reachable_pairs(edges: DataFrame, sources: DataFrame, sinks: DataFrame,
     "residual": the rows the local pass finished (0 if it did not run),
     "local": the local pass ran} and the per-round `Rounds` trace.
     """
-    from joern_spark.sparkutil import BROADCAST_THRESHOLD, Rounds
+    from joern_spark.sparkutil import (BROADCAST_THRESHOLD, Rounds,
+                                       persist_result)
     if local_threshold is None:
         local_threshold = BROADCAST_THRESHOLD
     # an empty residual is finished whatever the threshold
@@ -128,12 +129,12 @@ def reachable_pairs(edges: DataFrame, sources: DataFrame, sinks: DataFrame,
         # joined by column name: `visited` and `sources` may share
         # attribute ids when both are filters over one cached frame
         src = sources.select("url", F.col("node_id").alias("cur"))
-        result = (visited.join(src, ["url", "cur"])
-                  .select("url", F.col("cur").alias("source_id"), "sink_id")
-                  .distinct().persist())
         # materialize the (pair-sized) result before `rounds` releases the
         # checkpoint it is computed from
-        result.count()
+        result = persist_result(
+            visited.join(src, ["url", "cur"])
+            .select("url", F.col("cur").alias("source_id"), "sink_id")
+            .distinct())
     return result
 
 

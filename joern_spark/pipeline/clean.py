@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from joern_spark.pipeline import dedup, text
-from joern_spark.sparkutil import spread
+from joern_spark.sparkutil import persist_result, spread
 
 
 def corpus_clean(
@@ -96,8 +96,7 @@ def corpus_clean(
     # back a persisted frame — materialize the survivor set, then
     # release that upstream cache so repeated calls hold ONE cached
     # frame.  A caller-supplied `clusters` frame stays caller-owned.
-    out = kept.persist()
-    out.count()
+    out = persist_result(kept)
     if own_clusters:
         clusters.unpersist(blocking=False)
     return out

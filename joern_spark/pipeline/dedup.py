@@ -381,18 +381,19 @@ def connected_dup_clusters(pairs: DataFrame,
 
     Returns (doc_id, cluster_id) for every doc in at least one pair,
     cluster_id = min doc_id of the component.  The returned frame is
-    persisted and caller-owned; `pairs` is read once and stays cached if
-    the caller cached it.  `_stats`, when passed, receives {"rounds":
-    distributed rounds, "edges": directed edge rows, "residual": the
-    directed rows the driver finished, "local": no distributed round
-    ran} and the per-round `sparkutil.Rounds` trace.
+    persisted by `sparkutil.persist_result` and caller-owned; `pairs` is
+    read once and stays cached if the caller cached it.  `_stats`, when
+    passed, receives {"rounds": distributed rounds, "edges": directed
+    edge rows, "residual": the directed rows the driver finished,
+    "local": no distributed round ran} and the per-round
+    `sparkutil.Rounds` trace.
     """
     import logging
-    import uuid
 
     import pandas as pd
 
-    from joern_spark.sparkutil import BROADCAST_THRESHOLD, Rounds
+    from joern_spark.sparkutil import (BROADCAST_THRESHOLD, Rounds,
+                                       persist_result)
 
     spark = pairs.sparkSession
     if local_threshold is None:
@@ -401,11 +402,10 @@ def connected_dup_clusters(pairs: DataFrame,
     finish_below = max(local_threshold, 1)
     with Rounds(max_iterations, _stats) as rounds:
         # both edge directions in one pass over the pairs.  Checkpointed,
-        # not persisted: AQE then coalesces the distinct's exchange to the
-        # data size (persisted, the frame kept all
-        # `spark.sql.shuffle.partitions` partitions and every later stage
-        # ran that many tasks), and every round plans from a leaf instead
-        # of the pairs' lineage.
+        # like every frame the loop reads more than once (`Rounds`): AQE
+        # sizes it to the data, where a persisted shuffle would keep all
+        # `spark.sql.shuffle.partitions` partitions, and every round plans
+        # from a leaf instead of the pairs' lineage.
         edges, n_edges = rounds.checkpoint(
             pairs.selectExpr("stack(2, doc_a, doc_b, doc_b, doc_a) AS (a, b)")
             .distinct())
@@ -427,11 +427,11 @@ def connected_dup_clusters(pairs: DataFrame,
                 prop = (labels.join(nbr_min, "doc_id")
                         .select("doc_id", F.least("label", "nbr_label")
                                 .alias("label")))
-            prop = rounds.persist(prop)
             # -- step 2: pointer jump (label := label-of-label) ----------
-            # a label is a doc id, so the self-join is total.  Checkpointed,
-            # not persisted: the jump reads `prop` on BOTH join sides, so
-            # without lineage truncation the plan doubles every round.
+            # a label is a doc id, so the self-join is total.  The jump
+            # reads `prop` on BOTH join sides: checkpointed, it runs once
+            # and the plan does not double every round.
+            prop, _ = rounds.checkpoint(prop)
             mapping = prop.select(F.col("doc_id").alias("m_id"),
                                   F.col("label").alias("m_label"))
             new_labels, _ = rounds.checkpoint(
@@ -480,13 +480,6 @@ def connected_dup_clusters(pairs: DataFrame,
             out = (labels.join(F.broadcast(finish), "label", "left")
                    .select("doc_id",
                            F.coalesce("root", "label").alias("cluster_id")))
-        # plan-identity guard: two driver-built frames with identical rows
-        # canonicalize to the same plan, and unpersisting one would evict
-        # the other's cached twin (e.g. corpus_clean releasing its own
-        # clusters).  A unique always-true filter makes each call's plan
-        # distinct.
-        tag = uuid.uuid4().hex
         # materialized before `rounds` releases the frames it reads
-        out = out.where(F.lit(tag) == F.lit(tag)).persist()
-        out.count()
+        out = persist_result(out)
     return out

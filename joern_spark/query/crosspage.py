@@ -40,6 +40,7 @@ from joern_spark.cpg.spark_build import document_cpg, map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
 from joern_spark.query.cpgql import Q
 from joern_spark.query.scan import _web_sources
+from joern_spark.sparkutil import persist_result
 
 SUMMARY_SCHEMA = StructType([
     StructField("domain", StringType()),
@@ -284,11 +285,11 @@ def cross_page_flows_transitive(pages: DataFrame,
     # caller-owned — materialize the derived output, then release the
     # upstream caches so repeated calls in a long-lived session hold ONE
     # small cached frame (the returned one), not a chain per call.
-    out = (pairs.select(F.col("url").alias("domain"),
-                        F.col("source_id").alias("origin_func"),
-                        F.col("sink_id").alias("called_func"))
-           .distinct().persist())
-    out.count()
+    out = persist_result(
+        pairs.select(F.col("url").alias("domain"),
+                     F.col("source_id").alias("origin_func"),
+                     F.col("sink_id").alias("called_func"))
+        .distinct())
     pairs.unpersist(blocking=False)
     s.unpersist(blocking=False)
     return out

@@ -9,8 +9,11 @@ All engine code paths assume the settings below:
   and our own salting (pipeline/skew.py) handles the planned side.
 - Shuffle partitions sized for the local harness's batch joins; on a real
   cluster this is overridden via spark-submit --conf (docs/DEPLOY.md).
-  Streams do not use this width: `streaming.job.start_stream` runs them
-  one state store per core.
+  AQE coalesces a shuffle to its data size, except in a cached plan: a
+  result the iterative loops hand back is persisted through
+  `sparkutil.persist_result`, at the width AQE chose.  Streams do not
+  use this width: `streaming.job.start_stream` runs them one state
+  store per core.
 - RocksDB state store for streaming state (open windows, dedup keys,
   partial CPG fragments) so state size is bounded by disk, not heap.
 """

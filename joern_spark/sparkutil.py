@@ -2,10 +2,13 @@
 components, frame closures): the per-round materialize/release
 discipline lives in ONE place.
 
-`Rounds` owns every cache a fixpoint loop pins: each round's product is
-eagerly local-checkpointed, so the next round plans from a leaf instead
-of the whole loop history, and every block is released when the loop
-exits, on success and on error.
+`Rounds` owns every block a fixpoint loop pins: each round's product is
+local-checkpointed, so the next round plans from a leaf instead of the
+whole loop history, and every checkpoint is released when the loop
+exits, on success and on error.  A loop persists nothing itself: the
+shuffled result it hands back goes through `persist_result`, which
+stores it at the width AQE chose rather than `spark.sql.shuffle.partitions`
+wide.
 
 Reachability and connected components run distributed rounds only while
 their residual (the edges still in play) holds at least
@@ -18,7 +21,6 @@ from __future__ import annotations
 
 import time
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 # Below this many residual edge rows the reachability BFS finishes in
@@ -89,6 +91,49 @@ def spread(df, min_partitions: int | None = None, by: str | None = None):
     return df.repartition(target, F.col(by)) if by else df.repartition(target)
 
 
+def persist_result(df: DataFrame) -> DataFrame:
+    """Persist `df` as a caller-owned result, as many partitions wide as
+    AQE makes it, and materialize it; the caller releases it with
+    `unpersist()`.
+
+    `df.persist()` would keep every shuffle of `df` at
+    `spark.sql.shuffle.partitions` (8192 on a cluster, docs/DEPLOY.md):
+    Spark builds a cached plan with the internal
+    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`, so
+    AQE never coalesces its final shuffle, and every join over the result
+    inherits that width.  So the frame is first local-checkpointed
+    lazily, which runs its shuffles under AQE, and the checkpoint's leaf
+    is persisted and counted in one job.  The checkpoint RDD is dropped
+    right after: the cache holds the rows, and a `LogicalRDD` leaf is
+    unique per call, so no other frame's cached twin can share (and be
+    evicted with) its plan.  Like any local checkpoint, a cached block
+    lost with its executor cannot be recomputed.
+
+    Measured on a 4-CPU host, `perfbench/run.py --workload graph
+    --seconds 10`, ten alternating pairs of the loops on this helper (and
+    on a checkpointed connected-components `prop`) against raw
+    `persist()`: median `wall_s` 7.84 -> 6.65 s (10 of 10 pairs); a
+    traced run's Spark tasks fell 418 -> 76 (connected components 271 ->
+    22, reachability 119 -> 26).  Setting the internal conf to true in `session.py` instead gave
+    a similar gain in a prototype (7.57 -> 6.00 s, 4 of 5 pairs) but was
+    not taken: it is internal, and it changes the width of every cached
+    plan, not only of these results.
+    """
+    jdf = df._jdf.localCheckpoint(False)
+    rdd = jdf.queryExecution().analyzed().rdd()
+    out = DataFrame(jdf, df.sparkSession).persist()
+    try:
+        out.count()
+    except BaseException:
+        out.unpersist(blocking=False)
+        raise
+    finally:
+        # Dataset.unpersist goes through the CacheManager, which does not
+        # track checkpoint blocks: drop the RDD itself
+        rdd.unpersist(False)
+    return out
+
+
 class Rounds:
     """Materialization and release for one driver-side fixpoint loop.
 
@@ -102,17 +147,20 @@ class Rounds:
 
     - Iterating yields at most `max_rounds` round numbers: the loop's cap.
       A loop that must converge raises from the `for ... else`.
-    - `checkpoint(df)` eagerly local-checkpoints `df` and returns it with
-      its row count (one job).  A persisted frame keeps its lineage in the
+    - `checkpoint(df)` local-checkpoints `df` and returns it with its row
+      count (one job).  A persisted frame keeps its lineage in the
       logical plan, so a loop that feeds each round's persisted output into
       the next re-analyzes a plan that grows every round (the corpus BFS
       frontier measured 1 -> 15 -> 86 -> 456 -> 2392 plan leaves over five
       rounds); a checkpoint is a single leaf.  It is stored at most one
       shuffle wide (`spark.sql.shuffle.partitions`): a state grown by
       `union` would otherwise gain partitions, and tasks, every round.
-    - `persist(df)` caches a frame the loop reads more than once.  A frame
-      the caller already cached is returned as is and stays the caller's.
-    - `release(*dfs)` drops owned frames once nothing will read them.
+    - Nothing is persisted: a raw persisted shuffle keeps all
+      `spark.sql.shuffle.partitions` partitions (see `persist_result`), a
+      checkpoint keeps the width AQE chose.  A frame the loop reads more
+      than once is a checkpoint too; the shuffled result it returns goes
+      through `persist_result`.
+    - `release(*dfs)` drops owned checkpoints once nothing will read them.
       Leaving the `with` block releases every frame still owned.
     - `keep(df)` hands an owned frame to a lazily returned result: its
       blocks are reclaimed by the ContextCleaner once that result is
@@ -130,7 +178,7 @@ class Rounds:
         self.trace: list[dict] = []
         if stats is not None:
             stats["trace"] = self.trace
-        # (frame, checkpointed JVM RDD or None for a persisted frame)
+        # (frame, its checkpointed JVM RDD)
         self._owned: list[tuple[DataFrame, object]] = []
         self._t0: float | None = None
 
@@ -161,13 +209,6 @@ class Rounds:
                                "wall_s": time.perf_counter() - self._t0})
         return out, rows
 
-    def persist(self, df: DataFrame) -> DataFrame:
-        if df.storageLevel != StorageLevel.NONE:
-            return df
-        df = df.persist()
-        self._owned.append((df, None))
-        return df
-
     def keep(self, df: DataFrame) -> DataFrame:
         self._owned = [(d, r) for d, r in self._owned if d is not df]
         return df
@@ -179,8 +220,5 @@ class Rounds:
                     del self._owned[i]
                     # Dataset.unpersist goes through the CacheManager, which
                     # does not track checkpoint blocks: drop the RDD itself
-                    if rdd is None:
-                        df.unpersist(blocking=False)
-                    else:
-                        rdd.unpersist(False)
+                    rdd.unpersist(False)
                     break

@@ -2,8 +2,9 @@
 it: constant-size round plans, corpus reachability against an in-process
 BFS in its distributed, local and hybrid runs and under the hop cap, the
 connected-components hand-over from distributed rounds to the driver,
-release of every pinned block, cache ownership of caller inputs, the
-session conf no query may change, and the spread-probe memo."""
+release of every pinned block, the width and release of the results the
+loops hand back, cache ownership of caller inputs, the session conf no
+query may change, and the spread-probe memo."""
 
 from __future__ import annotations
 
@@ -196,8 +197,89 @@ def test_rounds_releases_on_error(spark):
         with Rounds(3) as rounds:
             for _ in rounds:
                 rounds.checkpoint(spark.range(5))
-                rounds.persist(spark.range(7)).count()
+                rounds.checkpoint(spark.range(7).distinct())
                 raise RuntimeError("round failed")
+    assert not _persistent(spark) - before
+
+
+def _loop_results(spark, rows):
+    """name -> a call returning one shuffled result a loop hands back:
+    reachability and connected components in their local and distributed
+    runs, the crosspage closure and the clean survivor set, all on inputs
+    built in `spark`."""
+    from joern_spark.pipeline.clean import corpus_clean
+    from joern_spark.query.crosspage import cross_page_flows_transitive
+    from joern_spark.session import load_table, testdata_dir
+    from joern_spark.sources.corpus import make_chain_pages
+
+    edges, sources, sinks = rows
+    reach_in = (
+        spark.createDataFrame(edges, "url string, src long, dst long, "
+                              "label string, variable string"),
+        spark.createDataFrame(sources, "url string, node_id long"),
+        spark.createDataFrame(sinks, "url string, node_id long"))
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)] + [(100, 101), (101, 102)],
+        "doc_a long, doc_b long")
+    pages = make_chain_pages(spark, n_docs=64)
+    docs = load_table(spark, testdata_dir("0.001"), "documents")
+    # three distributed rounds, not the chain's 23: a round at 512
+    # partitions takes seconds
+    return {
+        "reach-local": lambda: reachable_pairs(*reach_in, max_iterations=6),
+        "reach-distributed": lambda: reachable_pairs(
+            *reach_in, max_iterations=6, local_threshold=0),
+        "cc-local": lambda: connected_dup_clusters(pairs),
+        "cc-distributed": lambda: connected_dup_clusters(pairs,
+                                                         local_threshold=0),
+        "crosspage": lambda: cross_page_flows_transitive(pages),
+        "clean": lambda: corpus_clean(docs),
+    }
+
+
+LOOP_RESULTS = ["reach-local", "reach-distributed", "cc-local",
+                "cc-distributed", "crosspage", "clean"]
+
+
+@pytest.fixture(scope="module")
+def wide_spark(spark):
+    """A session as wide as a cluster deployment's batch shuffles."""
+    wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "512")
+    return wide
+
+
+def _rows_and_width(df):
+    try:
+        return ({tuple(r) for r in df.collect()},
+                df.rdd.getNumPartitions())
+    finally:
+        df.unpersist()
+
+
+@pytest.mark.parametrize("name", LOOP_RESULTS)
+def test_loop_results_take_the_aqe_width(spark, wide_spark, reach_graph,
+                                         name):
+    """A result the loops hand back is as wide as its data, not as
+    `spark.sql.shuffle.partitions`: persisted raw, every shuffle under it
+    would keep all 512 partitions, and every join over it as many tasks."""
+    _, rows = reach_graph
+    want, _ = _rows_and_width(_loop_results(spark, rows)[name]())
+    got, width = _rows_and_width(_loop_results(wide_spark, rows)[name]())
+    assert got == want and want
+    assert width <= spark.sparkContext.defaultParallelism
+
+
+@pytest.mark.parametrize("name", LOOP_RESULTS)
+def test_loop_results_leave_no_cache(spark, reach_graph, name):
+    """Once the caller unpersists the result nothing the call pinned is
+    left: not its intermediate caches, not the checkpoint under it."""
+    _, rows = reach_graph
+    call = _loop_results(spark, rows)[name]
+    before = _persistent(spark)
+    out = call()
+    assert out.storageLevel.useMemory
+    out.unpersist()
     assert not _persistent(spark) - before
 
 
