@@ -48,8 +48,8 @@ def session_stats(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user: a session ends after `gap` of inactivity.
 
     Batch form uses the classic gaps-and-islands construction (lag + running
-    sum) so the DuckDB oracle can express the identical computation; the
-    streaming job uses `session_window()` which produces the same sessions.
+    sum) so the DuckDB oracle can express the identical computation;
+    `session_window()` over a stream produces the same sessions.
     """
     gap_expr = F.expr(f"INTERVAL {gap}")
     by_user = Window.partitionBy("user_id").orderBy("ts")

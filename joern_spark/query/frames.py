@@ -16,9 +16,12 @@ Usage:
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from joern_spark.dataflow.reachable import walk
 from joern_spark.sparkutil import Rounds
 
 ASSIGNMENT_NAMES = [
@@ -90,21 +93,15 @@ class Trav:
         return Trav(self.g, self._df.where(cond))
 
     # --- hops ----------------------------------------------------------------
-    def _hop(self, edge_label: str, forward: bool, order_by_arg: bool = False) -> "Trav":
+    def _hop(self, edge_label: str, forward: bool) -> "Trav":
         e = self.g.edges.where(F.col("label") == edge_label)
-        cur = self.cursors().alias("c")
-        if forward:
-            joined = cur.join(
-                e.alias("e"),
-                [F.col("c.url") == F.col("e.url"), F.col("c.node_id") == F.col("e.src")])
-            nxt = joined.select(F.col("c.url").alias("url"), F.col("e.dst").alias("node_id"))
-        else:
-            joined = cur.join(
-                e.alias("e"),
-                [F.col("c.url") == F.col("e.url"), F.col("c.node_id") == F.col("e.dst")])
-            nxt = joined.select(F.col("c.url").alias("url"), F.col("e.src").alias("node_id"))
-        out = nxt.join(self.g.nodes, ["url", "node_id"])
-        return Trav(self.g, out)
+        a, b = ("src", "dst") if forward else ("dst", "src")
+        nxt = (self.cursors().alias("c")
+               .join(e.alias("e"), [F.col("c.url") == F.col("e.url"),
+                                    F.col("c.node_id") == F.col(f"e.{a}")])
+               .select(F.col("c.url").alias("url"),
+                       F.col(f"e.{b}").alias("node_id")))
+        return Trav(self.g, nxt.join(self.g.nodes, ["url", "node_id"]))
 
     def ast_children(self) -> "Trav":
         return self._hop("AST", forward=True)
@@ -148,99 +145,53 @@ class Trav:
         t = self._hop("AST", forward=True)
         return Trav(self.g, t.df().where(F.col("label") == "METHOD_RETURN"))
 
-    # --- transitive closures (bounded iterative joins; SURVEY §2B `.ast`,
-    # `.dominates`, `.controls`, ...) — one distributed hash join per hop,
-    # co-keyed on (url, node_id); every round is a `sparkutil.Rounds`
-    # checkpoint, so plans stay one round deep ---
+    # --- transitive closures (SURVEY §2B `.ast`, `.dominates`,
+    # `.controls`, ...): the reachability walk, one distributed hash join
+    # per hop co-keyed on (url, node_id) while the residual is large,
+    # then one grouped pass ---
     def closure(self, edge_label: str, forward: bool = True,
-                max_depth: int = 64, include_self: bool = True) -> "Trav":
-        e = self.g.edges.where(F.col("label") == edge_label).select("url", "src", "dst")
-        src_col, dst_col = ("src", "dst") if forward else ("dst", "src")
-        with Rounds(max_depth) as rounds:
-            # one state frame: everything reached, `new` marking the rows
-            # the last round added (the frontier)
-            acc, n = rounds.checkpoint(
-                self.cursors().withColumn("new", F.lit(True)))
-            for _ in rounds:
-                step = (acc.where("new").alias("f")
-                        .join(e.alias("e"),
-                              [F.col("f.url") == F.col("e.url"),
-                               F.col("f.node_id") == F.col(f"e.{src_col}")])
-                        .select(F.col("f.url").alias("url"),
-                                F.col(f"e.{dst_col}").alias("node_id"))
-                        .distinct())
-                new = step.subtract(acc.select("url", "node_id"))
-                nxt, m = rounds.checkpoint(
-                    acc.withColumn("new", F.lit(False))
-                    .unionByName(new.withColumn("new", F.lit(True))))
-                rounds.release(acc)
-                acc = nxt
-                if m == n:
-                    break
-                n = m
-            acc = rounds.keep(acc).select("url", "node_id")
+                max_depth: int | None = 64,
+                include_self: bool = True) -> "Trav":
+        """The nodes reached from the cursors along `edge_label` edges in
+        at most `max_depth` hops, the cursors included; with
+        `include_self=False`, those reached in at least one hop (a cursor
+        on a cycle reaches itself).  `max_depth=None` sets no cap: a BFS
+        over a finite per-url graph stops when its frontier empties."""
+        e = self.g.edges.where(F.col("label") == edge_label)
+        if forward:  # `walk` goes dst -> src
+            e = e.select("url", F.col("dst").alias("src"),
+                         F.col("src").alias("dst"))
+        hops = sys.maxsize if max_depth is None else max_depth
+        start = self
         if not include_self:
-            acc = acc.subtract(self.cursors())
-        return Trav(self.g, acc.join(self.g.nodes, ["url", "node_id"]))
+            start, hops = self._hop(edge_label, forward), hops - 1
+        # a constant sink_id: the walk keeps one reached set per url
+        seeds = start.cursors().select(
+            "url", F.col("node_id").alias("cur"), F.lit(0).alias("sink_id"))
+        with Rounds(hops) as rounds:
+            reached = walk(rounds, e, seeds, hops)
+            rounds.keep()
+        return Trav(self.g, reached.select("url", F.col("cur").alias("node_id"))
+                    .join(self.g.nodes, ["url", "node_id"]))
 
     def ast(self, max_depth: int = 64) -> "Trav":
         return self.closure("AST", forward=True, max_depth=max_depth)
 
-    def _pair_closure(self, edge_label: str, forward: bool,
-                      max_doublings: int = 16) -> "Trav":
-        """Transitive closure by pointer doubling: R ← R ∪ (R ⋈ R), so a
-        depth-d chain closes in ⌈log2 d⌉ joins instead of d — dominator
-        chains are linear in the statement count, which makes per-hop BFS
-        O(d) shuffles; doubling makes it O(log d).
-
-        Runs to FIXPOINT (a round that adds no pair ends the loop);
-        max_doublings=16 bounds depth at 65536 as a runaway backstop and
-        raises rather than silently dropping pairs."""
-        e = self.g.edges.where(F.col("label") == edge_label)
-        a, b = ("src", "dst") if forward else ("dst", "src")
-        with Rounds(max_doublings) as rounds:
-            pairs, n = rounds.checkpoint(
-                e.select("url", F.col(a).alias("a"), F.col(b).alias("b")).distinct())
-            for _ in rounds:
-                hop = (pairs.alias("l")
-                       .join(pairs.alias("r"),
-                             [F.col("l.url") == F.col("r.url"),
-                              F.col("l.b") == F.col("r.a")])
-                       .select(F.col("l.url").alias("url"), F.col("l.a").alias("a"),
-                               F.col("r.b").alias("b"))
-                       .distinct())
-                # the new pairs are disjoint from `pairs` (subtracted) —
-                # plain union is exact
-                nxt, m = rounds.checkpoint(pairs.union(hop.subtract(pairs)))
-                rounds.release(pairs)
-                pairs = nxt
-                if m == n:
-                    break
-                n = m
-            else:
-                raise RuntimeError(
-                    f"{edge_label} closure did not converge within "
-                    f"{max_doublings} doublings (depth 2^{max_doublings})")
-            rounds.keep(pairs)
-        reach = (self.cursors().alias("c")
-                 .join(pairs.alias("p"),
-                       [F.col("c.url") == F.col("p.url"),
-                        F.col("c.node_id") == F.col("p.a")])
-                 .select(F.col("c.url").alias("url"), F.col("p.b").alias("node_id"))
-                 .distinct())
-        return Trav(self.g, reach.join(self.g.nodes, ["url", "node_id"]))
-
     def dominates(self) -> "Trav":
-        return self._pair_closure("DOMINATE", forward=True)
+        return self.closure("DOMINATE", forward=True, max_depth=None,
+                            include_self=False)
 
     def dominated_by(self) -> "Trav":
-        return self._pair_closure("DOMINATE", forward=False)
+        return self.closure("DOMINATE", forward=False, max_depth=None,
+                            include_self=False)
 
     def controls(self) -> "Trav":
-        return self._pair_closure("CDG", forward=True)
+        return self.closure("CDG", forward=True, max_depth=None,
+                            include_self=False)
 
     def controlled_by(self) -> "Trav":
-        return self._pair_closure("CDG", forward=False)
+        return self.closure("CDG", forward=False, max_depth=None,
+                            include_self=False)
 
     # --- semi/anti (where / whereNot) -------------------------------------------
     # --- structure/hierarchy steps (mirror the in-memory layer) -------------

@@ -1,6 +1,7 @@
-"""Shared helpers for the iterative-join loops (corpus BFS, connected
-components, frame closures): the per-round materialize/release
-discipline lives in ONE place.
+"""Shared helpers for the iterative-join loops (the per-url reachability
+walk, which also runs the `CpgFrames` closures, and connected
+components): the per-round materialize/release discipline lives in ONE
+place.
 
 `Rounds` owns every block a fixpoint loop pins: each round's product is
 local-checkpointed, so the next round plans from a leaf instead of the
@@ -162,8 +163,8 @@ class Rounds:
       through `persist_result`.
     - `release(*dfs)` drops owned checkpoints once nothing will read them.
       Leaving the `with` block releases every frame still owned.
-    - `keep(df)` hands an owned frame to a lazily returned result: its
-      blocks are reclaimed by the ContextCleaner once that result is
+    - `keep()` hands every frame still owned to a lazily returned result:
+      their blocks are reclaimed by the ContextCleaner once that result is
       garbage-collected.
 
     Every checkpoint taken inside a round appends {"rows", "leaves",
@@ -209,9 +210,8 @@ class Rounds:
                                "wall_s": time.perf_counter() - self._t0})
         return out, rows
 
-    def keep(self, df: DataFrame) -> DataFrame:
-        self._owned = [(d, r) for d, r in self._owned if d is not df]
-        return df
+    def keep(self) -> None:
+        self._owned.clear()
 
     def release(self, *dfs: DataFrame) -> None:
         for df in dfs:

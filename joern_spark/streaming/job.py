@@ -138,20 +138,6 @@ def dedup_pages_stream(pages: DataFrame) -> DataFrame:
     return pages.withWatermark("warc_ts", WATERMARK).dropDuplicates(["url", "warc_ts"])
 
 
-def session_findings(pages: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session-window variant: bursts of findings per domain collapse into
-    sessions (session_window state in RocksDB)."""
-    findings = scan_findings(pages)
-    domain = F.regexp_extract("url", r"https://([^/]+)/", 1).alias("domain")
-    return (
-        findings.withWatermark("warc_ts", WATERMARK)
-        .groupBy(F.session_window("warc_ts", gap).alias("sw"), domain)
-        .agg(F.sum("n_matches").alias("n_matches"))
-        .select(F.col("sw.start").alias("session_start"),
-                F.col("sw.end").alias("session_end"), "domain", "n_matches")
-    )
-
-
 def salted_domain_counts(pages: DataFrame, n_salt: int = 8,
                          set_watermark: bool = True) -> DataFrame:
     """Per-domain windowed page counts with EXPLICIT salting — the hot-
@@ -250,28 +236,6 @@ def exactly_once_batch_writer(out_dir: str, n_key_buckets: int | None = None,
         rows.unpersist()
 
     return write
-
-
-def write_findings_partitioned(findings: DataFrame, out_dir: str,
-                               n_domain_buckets: int = 64):
-    """Batch sink with the production table layout (docs/DEPLOY.md): range
-    partitioned by (day of warc_ts, hash-bucket of domain) — the parquet
-    stand-in for an Iceberg `days(warc_ts), bucket(url)` partition spec.
-    Hot domains spread across buckets by the url hash, not the domain, so a
-    single hot domain cannot pin one partition."""
-    domain = F.regexp_extract("url", r"https://([^/]+)/", 1)
-    out = (findings
-           .withColumn("day", F.to_date("warc_ts"))
-           .withColumn("domain_bucket",
-                       F.pmod(F.hash("url"), F.lit(n_domain_buckets))))
-    # range partitioning (not hash): writer tasks own contiguous
-    # (day, bucket, warc_ts) ranges, so each parquet file covers a tight
-    # warc_ts span — row-group min/max stats then prune time-range scans
-    (out.repartitionByRange("day", "domain_bucket", "warc_ts")
-     .sortWithinPartitions("warc_ts")
-     .write.mode("overwrite")
-     .partitionBy("day", "domain_bucket")
-     .parquet(out_dir))
 
 
 # pages may carry an attachment blob (crawl corpora embed images/audio/

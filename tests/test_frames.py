@@ -7,11 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from joern_spark.cpg.spark_build import build_cpg_tables
-from joern_spark.dataflow.reachable import reachable_pairs
+from joern_spark.dataflow.reachable import reachable_pairs, walk
 from joern_spark.query.export import export_dot
 from joern_spark.query.frames import CpgFrames
 from joern_spark.query.vectors import bag_of_api_symbols
 from joern_spark.sources.corpus import make_pages, snippet_id_for
+from joern_spark.sparkutil import Rounds
 
 
 @pytest.fixture(scope="module")
@@ -87,6 +88,74 @@ def test_dataframe_closures_and_tags(spark, graph):
     n = tags.count()
     assert n > 0
     assert {r.tag for r in tags.select("tag").distinct().collect()} == {"branch-on-mode"}
+
+
+def _ids(trav):
+    return {r.node_id for r in trav.cursors().collect()}
+
+
+@pytest.fixture(scope="module")
+def page_cpgs():
+    """The in-memory CPGs of the pages `make_pages` built `graph` from."""
+    from joern_spark.cpg.spark_build import document_cpg
+    from joern_spark.sources.corpus import page_for
+
+    return [(url, document_cpg(url, html))
+            for url, _, html, _ in map(page_for, range(40))]
+
+
+@pytest.mark.parametrize("starter,step", [
+    ("method", "ast"), ("call", "dominates"), ("call", "dominated_by"),
+    ("call", "controls"), ("call", "controlled_by")])
+def test_frame_closures_match_cpgql(spark, graph, page_cpgs, starter, step):
+    """Each `Trav` closure equals the in-memory `cpgql.Steps` closure on
+    the same pages, node ids mapped through `stable_node_id`."""
+    from joern_spark.cpg.spark_build import stable_node_id
+    from joern_spark.query.cpgql import Q
+
+    want = {(url, stable_node_id(url, n))
+            for url, cpg in page_cpgs
+            for n in getattr(getattr(Q(cpg), starter)(), step)().nodes}
+    assert want, f"{starter}.{step}: the expected set is empty"
+    g = CpgFrames(*graph)
+    trav = getattr(getattr(g, starter + "s")(), step)()
+    assert {(r.url, r.node_id) for r in trav.cursors().collect()} == want
+
+
+def test_frame_closures_on_a_cycle(spark):
+    """`controls` is "reached in at least one hop": on the CDG cycle
+    1 -> 2 -> 1 the cursor reaches itself.  `ast` keeps its cursor."""
+    nodes = spark.createDataFrame([("u", i, "CALL") for i in (1, 2, 3)],
+                                  "url string, node_id long, label string")
+    edges = spark.createDataFrame(
+        [("u", 1, 2, "CDG"), ("u", 2, 1, "CDG"), ("u", 2, 3, "CDG")],
+        "url string, src long, dst long, label string")
+    one = CpgFrames(nodes, edges).calls().where_col(F.col("node_id") == 1)
+    assert _ids(one.controls()) == {1, 2, 3}
+    assert _ids(one.ast()) == {1}
+
+
+def test_walk_set_closure_local_equals_distributed(spark, graph):
+    """A constant-`sink_id` walk over the DOMINATE edges reaches the same
+    set when every hop runs distributed as when the local pass finishes
+    it, and pins nothing once its `Rounds` exits without `keep()`."""
+    nodes, edges = graph
+    dom = edges.where(F.col("label") == "DOMINATE")
+    seeds = nodes.where(F.col("label") == "CALL").select(
+        "url", F.col("node_id").alias("cur"), F.lit(0).alias("sink_id"))
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(pinned().keys())
+    got, stats = {}, {}
+    for threshold in (None, 0):
+        stats[threshold] = {}
+        with Rounds(64) as rounds:
+            got[threshold] = {tuple(r) for r in walk(
+                rounds, dom, seeds, 64, threshold, stats[threshold]).collect()}
+        assert not set(pinned().keys()) - before
+    assert stats[None]["local"] and not stats[None]["rounds"]
+    assert not stats[0]["local"] and stats[0]["rounds"] > 1
+    assert got[None] == got[0]
+    assert len(got[0]) > seeds.count()
 
 
 def test_ann_recall_vs_brute_force(spark):
