@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from joern_spark.pipeline import dedup, multimodal, similarity, text, windows
 from joern_spark.session import load_table
+from joern_spark.sparkutil import persist_result
 
 
 def _utc(spark: SparkSession) -> None:
@@ -260,9 +261,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.lsh_candidate_pairs(dedup.minhash_signature(docs))
     j = dedup.ngram_jaccard(docs, pairs)
-    return j.select(
+    out = persist_result(j.select(
         "doc_a", "doc_b", F.floor(F.col("jaccard") * 1e6).cast("long").alias("jaccard_micro")
-    )
+    ))
+    pairs.unpersist(blocking=False)
+    return out
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -294,12 +297,12 @@ def corpus_clean_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     from joern_spark.pipeline.clean import corpus_clean as _clean
 
     docs = load_table(spark, sf_dir, "documents")
-    clusters = dedup.connected_dup_clusters(
-        dedup.lsh_candidate_pairs(dedup.minhash_signature(docs)))
+    pairs = dedup.lsh_candidate_pairs(dedup.minhash_signature(docs))
+    clusters = dedup.connected_dup_clusters(pairs)
+    pairs.unpersist(blocking=False)
     out = _clean(docs, clusters=clusters)
     # the survivor frame is persisted+materialized inside corpus_clean, so
-    # the caller-owned clusters cache can be released here (r7 ADVICE: it
-    # otherwise lives for the rest of the session)
+    # the caller-owned clusters cache can be released here
     clusters.unpersist(blocking=False)
     return out
 
@@ -321,12 +324,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     components with a recursive transitive-closure CTE over the same
     banding pipeline.
 
-    The returned frame is persisted and CALLER-OWNED (one small cached
-    frame per call): a long-lived session issuing repeated calls should
+    The returned frame is persisted and CALLER-OWNED: release it with
     `df.unpersist()` after consuming the result."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.lsh_candidate_pairs(dedup.minhash_signature(docs))
-    return dedup.connected_dup_clusters(pairs)
+    clusters = dedup.connected_dup_clusters(pairs)
+    pairs.unpersist(blocking=False)
+    return clusters
 
 
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -422,12 +426,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def cpg_node_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label CPG node counts over pages derived from `documents`."""
-    from joern_spark.cpg.spark_build import build_cpg_tables
+    from joern_spark.cpg.spark_build import build_cpg_rows, split_cpg_tables
     from joern_spark.sources.corpus import pages_from_documents
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 128)
     pages = pages_from_documents(docs).repartition(spark.sparkContext.defaultParallelism)
-    nodes, _edges = build_cpg_tables(pages)
+    nodes, _edges = split_cpg_tables(build_cpg_rows(pages))
     return nodes.groupBy("label").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -528,15 +532,19 @@ def cpg_reachable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 64)
     pages = pages_from_documents(docs).repartition(spark.sparkContext.defaultParallelism)
-    nodes, edges = build_cpg_tables(pages)
-    nodes = nodes.localCheckpoint(eager=True)
-    edges = edges.localCheckpoint(eager=True)
-    sources = nodes.where((F.col("label") == "IDENTIFIER") & (F.col("name") == "sz")) \
-        .select("url", "node_id")
-    sinks = nodes.where((F.col("label") == "CALL") & F.col("code").rlike("^read.*")) \
-        .select("url", "node_id")
-    pairs = reachable_pairs(edges, sources, sinks)
-    return pairs.groupBy("url").agg(F.count(F.lit(1)).alias("n_pairs"))
+    tables = build_cpg_tables(pages)
+    try:
+        nodes, edges = tables
+        sources = nodes.where((F.col("label") == "IDENTIFIER") & (F.col("name") == "sz")) \
+            .select("url", "node_id")
+        sinks = nodes.where((F.col("label") == "CALL") & F.col("code").rlike("^read.*")) \
+            .select("url", "node_id")
+        pairs = reachable_pairs(edges, sources, sinks)
+    finally:
+        tables.unpersist()
+    out = persist_result(pairs.groupBy("url").agg(F.count(F.lit(1)).alias("n_pairs")))
+    pairs.unpersist(blocking=False)
+    return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

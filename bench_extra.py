@@ -5,7 +5,8 @@ file holds the guide-§1 instrumentation: noop-sink isolation per query,
 
 Usage:
   python bench_extra.py explain <query>[,<query>...] <outdir>   # plans only
-  python bench_extra.py time <query>[,<query>...] [reps]        # isolated timing
+  python bench_extra.py time <query>[,<query>...] [reps]        # isolated timing,
+                                                  # cache cleared between reps
 
 Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 """
@@ -85,10 +86,14 @@ def main() -> None:
         return
 
     if mode == "time":
+        # Leak-neutral: after each rep releases its returned frame, the
+        # persistent RDDs still registered are counted ("left") and the
+        # session cache is cleared, so no rep times a cache hit on a
+        # frame an earlier rep left behind.
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
         out = {}
         for name in names:
-            ts = []
+            ts, left = [], []
             for _ in range(reps):
                 spark.sparkContext.setJobDescription(f"iso:{name}")
                 t0 = time.perf_counter()
@@ -96,8 +101,10 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
                 ts.append(round(time.perf_counter() - t0, 3))
                 df.unpersist(blocking=False)
-            out[name] = ts
-            print(name, ts, file=sys.stderr)
+                left.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+                spark.catalog.clearCache()
+            out[name] = {"s": ts, "left": left}
+            print(name, ts, "left", left, file=sys.stderr)
         print(json.dumps(out))
         return
 

@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 from joern_spark.cpg.build import build_cpg
 from joern_spark.cpg.core import Cpg
 from joern_spark.extract import extract_script_text
+from joern_spark.sparkutil import persist_result
 
 NODES_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -213,20 +214,28 @@ def split_cpg_tables(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     return nodes, edges
 
 
-def build_cpg_tables(pages: DataFrame, persist: bool = True,
-                     on_build=None) -> tuple[DataFrame, DataFrame]:
+class CpgTables(tuple):
+    """(nodes, edges) over one materialized build; unpacks as a pair, and
+    `unpersist()` releases the build both halves read."""
+
+    def __new__(cls, combined: DataFrame):
+        self = super().__new__(cls, split_cpg_tables(combined))
+        self._combined = combined
+        return self
+
+    def unpersist(self, blocking: bool = False) -> None:
+        self._combined.unpersist(blocking)
+
+
+def build_cpg_tables(pages: DataFrame, on_build=None) -> CpgTables:
     """pages(url, html, ...) → (nodes, edges) DataFrames, built in ONE pass.
 
-    The combined table is persisted (MEMORY_AND_DISK, spillable) by default
-    so that consuming both halves does not re-run the expensive
-    parse→lower→CFG→DDG chain; at cluster scale the equivalent is writing
-    the combined table through `cpg.store.save_cpg_tables` once and reading
-    both halves back (partition-pruned).  Pass persist=False for
-    single-consumer streaming micro-batches where foreachBatch already
-    materializes the batch.
+    The combined table is materialized by `sparkutil.persist_result`, so
+    consuming both halves does not re-run the expensive
+    parse→lower→CFG→DDG chain; the caller owns it and releases it with
+    the returned pair's `unpersist()`.  At cluster scale the equivalent
+    is writing the combined table through `cpg.store.save_cpg_tables`
+    once and reading both halves back (partition-pruned).  A caller that
+    reads one half only splits `build_cpg_rows` itself and pins nothing.
     """
-    combined = build_cpg_rows(pages, on_build=on_build)
-    if persist:
-        from pyspark import StorageLevel
-        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
-    return split_cpg_tables(combined)
+    return CpgTables(persist_result(build_cpg_rows(pages, on_build=on_build)))

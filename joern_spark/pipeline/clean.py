@@ -79,6 +79,7 @@ def corpus_clean(
         pairs = dedup.lsh_candidate_pairs(
             dedup.minhash_signature(docs, text_col))
         clusters = dedup.connected_dup_clusters(pairs)  # persisted, ours
+        pairs.unpersist(blocking=False)
     near_dropped = (clusters.where(F.col("doc_id") != F.col("cluster_id"))
                     .select("doc_id"))
 

@@ -156,7 +156,13 @@ def lsh_candidate_pairs(
     The self-join is on (band_idx, band_hash): md5 keys are uniform, so the
     shuffle is skew-free by construction; each side carries only
     (doc_id, band_idx, band_hash).
+
+    Returns (doc_a, doc_b) with doc_a < doc_b, materialized by
+    `sparkutil.persist_result` and caller-owned: release it with
+    `unpersist()`.
     """
+    from joern_spark.sparkutil import cached, persist_result
+
     bands = F.array(
         *[
             F.struct(
@@ -174,21 +180,25 @@ def lsh_candidate_pairs(
     banded = sig_df.select("doc_id", F.explode(bands).alias("band")).select(
         "doc_id", "band.band_idx", "band.band_hash"
     )
-    # materialize before the self-join: both join sides would otherwise
-    # recompute the full minhash lineage (signature = the expensive part)
-    banded = banded.persist()
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    # pinned for the self-join: both join sides would otherwise
+    # recompute the full minhash lineage (signature = the expensive part).
+    # Unpinned, Spark reuses the exchange (ReusedExchange) and finds the
+    # same pairs, but it is slower: `bench_extra.py time dedup_lsh_pairs`
+    # at sf0.1 on a 4-CPU host, 6 alternating pairs (median of reps 2-5),
+    # 1.99 s pinned against 2.58 s unpinned, pinned faster in 6 of 6.
+    with cached(banded):
+        a = banded.alias("a")
+        b = banded.alias("b")
+        return persist_result(
+            a.join(
+                b,
+                (F.col("a.band_idx") == F.col("b.band_idx"))
+                & (F.col("a.band_hash") == F.col("b.band_hash"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .distinct()
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def ngram_jaccard(df: DataFrame, pairs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -203,12 +213,11 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, text_col: str = "text") -> Da
     selective filter, and the equi-join shuffle carries shingle arrays
     for |docs-in-any-pair| rows, not the corpus).
 
-    `pairs` is referenced twice (candidate ids + the verify join), so it
-    is persisted here — without the cache each reference re-executes the
-    upstream LSH self-join.  The cached frame is pair-sized and stays
-    registered for the session (the same contract as the banded frame in
-    `lsh_candidate_pairs`)."""
-    pairs = pairs.persist()
+    `pairs` is read twice (candidate ids + the verify join): pass a
+    materialized frame, such as the one `lsh_candidate_pairs` returns, or
+    each read re-executes the upstream LSH self-join.  The result is lazy
+    and reads `pairs`, so the caller releases `pairs` only after
+    materializing it."""
     cand_ids = (pairs.selectExpr("stack(2, doc_a, doc_b) AS (doc_id)")
                 .distinct())
     df = df.join(cand_ids, "doc_id", "left_semi")
@@ -382,10 +391,10 @@ def connected_dup_clusters(pairs: DataFrame,
     Returns (doc_id, cluster_id) for every doc in at least one pair,
     cluster_id = min doc_id of the component.  The returned frame is
     persisted by `sparkutil.persist_result` and caller-owned; `pairs` is
-    read once and stays cached if the caller cached it.  `_stats`, when
-    passed, receives {"rounds": distributed rounds, "edges": directed
-    edge rows, "residual": the directed rows the driver finished,
-    "local": no distributed round ran} and the per-round
+    read once, and the caller may release it once this returns.
+    `_stats`, when passed, receives {"rounds": distributed rounds,
+    "edges": directed edge rows, "residual": the directed rows the driver
+    finished, "local": no distributed round ran} and the per-round
     `sparkutil.Rounds` trace.
     """
     import logging

@@ -40,7 +40,7 @@ from joern_spark.cpg.spark_build import document_cpg, map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
 from joern_spark.query.cpgql import Q
 from joern_spark.query.scan import _web_sources
-from joern_spark.sparkutil import persist_result
+from joern_spark.sparkutil import cached, persist_result
 
 SUMMARY_SCHEMA = StructType([
     StructField("domain", StringType()),
@@ -265,33 +265,31 @@ def cross_page_flows_transitive(pages: DataFrame,
     page calls into eval."""
     from joern_spark.dataflow.reachable import reachable_pairs
 
-    s = page_flow_summaries_ext(pages).persist()
-    tainted_defs = (s.where((F.col("kind") == "def") & F.col("tainted"))
-                    .select(F.col("domain").alias("url"),
-                            F.col("func_name").alias("node_id")))
-    eval_calls = (s.where((F.col("kind") == "call") & F.col("tainted"))
-                  .select(F.col("domain").alias("url"),
-                          F.col("func_name").alias("node_id")))
-    # taint flows callee -> wrapper, and reachable_pairs walks BACKWARDS
-    # from sinks along dst->src: src=callee, dst=wrapper
-    wrap_edges = (s.where((F.col("kind") == "wrap") & F.col("tainted"))
-                  .select(F.col("domain").alias("url"),
-                          F.col("callee_name").alias("src"),
-                          F.col("func_name").alias("dst"),
-                          F.lit("REACHING_DEF").alias("label")))
-    pairs = reachable_pairs(wrap_edges, tainted_defs, eval_calls,
-                            max_iterations=max_hops)
-    # reachable_pairs returns its (pair-sized) result persisted and
-    # caller-owned — materialize the derived output, then release the
-    # upstream caches so repeated calls in a long-lived session hold ONE
-    # small cached frame (the returned one), not a chain per call.
-    out = persist_result(
-        pairs.select(F.col("url").alias("domain"),
-                     F.col("source_id").alias("origin_func"),
-                     F.col("sink_id").alias("called_func"))
-        .distinct())
-    pairs.unpersist(blocking=False)
-    s.unpersist(blocking=False)
+    with cached(page_flow_summaries_ext(pages)) as s:
+        tainted_defs = (s.where((F.col("kind") == "def") & F.col("tainted"))
+                        .select(F.col("domain").alias("url"),
+                                F.col("func_name").alias("node_id")))
+        eval_calls = (s.where((F.col("kind") == "call") & F.col("tainted"))
+                      .select(F.col("domain").alias("url"),
+                              F.col("func_name").alias("node_id")))
+        # taint flows callee -> wrapper, and reachable_pairs walks BACKWARDS
+        # from sinks along dst->src: src=callee, dst=wrapper
+        wrap_edges = (s.where((F.col("kind") == "wrap") & F.col("tainted"))
+                      .select(F.col("domain").alias("url"),
+                              F.col("callee_name").alias("src"),
+                              F.col("func_name").alias("dst"),
+                              F.lit("REACHING_DEF").alias("label")))
+        pairs = reachable_pairs(wrap_edges, tainted_defs, eval_calls,
+                                max_iterations=max_hops)
+        # reachable_pairs returns its (pair-sized) result persisted and
+        # caller-owned — materialize the derived output, then release it, so
+        # the returned frame is the one cache a call leaves.
+        out = persist_result(
+            pairs.select(F.col("url").alias("domain"),
+                         F.col("source_id").alias("origin_func"),
+                         F.col("sink_id").alias("called_func"))
+            .distinct())
+        pairs.unpersist(blocking=False)
     return out
 
 

@@ -1,7 +1,22 @@
 """Shared helpers for the iterative-join loops (the per-url reachability
 walk, which also runs the `CpgFrames` closures, and connected
-components): the per-round materialize/release discipline lives in ONE
-place.
+components) and the one place in `joern_spark/` that pins a frame.
+
+Every pinned frame has exactly one owner, and comes from one of two
+helpers here:
+
+- `persist_result(df)` materializes a result the caller owns; the
+  caller releases it with `unpersist()` once nothing reads it.  A
+  function that returns one hands that duty to its own caller.
+- `cached(df)` pins a frame that one scope reads more than once and
+  releases it when the scope exits, on error too.
+
+No other module calls `.persist(`, `.cache(` or `localCheckpoint(`
+(a source-scan test pins this; `streaming/merge.py`, which must
+checkpoint a table before it overwrites the path it was read from, is
+the one exception).  So a query that releases what it is handed
+leaves no cache behind, and a later query cannot read a frame an
+earlier one leaked.
 
 `Rounds` owns every block a fixpoint loop pins: each round's product is
 local-checkpointed, so the next round plans from a leaf instead of the
@@ -21,6 +36,7 @@ skew splitting.
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -133,6 +149,26 @@ def persist_result(df: DataFrame) -> DataFrame:
         # track checkpoint blocks: drop the RDD itself
         rdd.unpersist(False)
     return out
+
+
+@contextmanager
+def cached(df: DataFrame):
+    """Pin `df` for the `with` block and release it on exit, on error
+    too: for a frame the block reads more than once, whose reads all
+    finish inside the block.
+
+        with cached(frame):
+            out = persist_result(frame.join(frame, ...))
+
+    The pin is a plain `persist()`, so a shuffle in `df` stays
+    `spark.sql.shuffle.partitions` wide (see `persist_result`): pin an
+    input that is not shuffled, or one whose width is fixed already.
+    """
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist(blocking=False)
 
 
 class Rounds:

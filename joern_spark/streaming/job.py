@@ -35,6 +35,7 @@ from pyspark.sql.types import BinaryType, StructField, StructType
 
 from joern_spark.query.scan import scan_findings
 from joern_spark.sources.corpus import PAGE_SCHEMA, make_pages
+from joern_spark.sparkutil import cached
 
 WINDOW = "1 hour"
 WATERMARK = "2 hours"
@@ -222,18 +223,17 @@ def exactly_once_batch_writer(out_dir: str, n_key_buckets: int | None = None,
                             # pmod, not abs(hash)%n: abs(Int.MinValue)
                             # overflows negative and % keeps the sign
                             F.pmod(F.hash(*key_cols), F.lit(n_buckets))))
-        rows.persist()
-        (rows.repartition("key_bucket")
-         .write.mode("overwrite").partitionBy("key_bucket")
-         .parquet(os.path.join(out_dir, "findings", f"epoch={batch_id}")))
         metric_aggs = [F.count(F.lit(1)).alias("n_rows")]
         if "n_matches" in batch_df.columns:
             metric_aggs.append(F.sum("n_matches").alias("n_matches"))
-        metrics = (rows.groupBy("batch_id", "src_partition")
-                   .agg(*metric_aggs))
-        (metrics.coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "metrics", f"epoch={batch_id}")))
-        rows.unpersist()
+        with cached(rows):
+            (rows.repartition("key_bucket")
+             .write.mode("overwrite").partitionBy("key_bucket")
+             .parquet(os.path.join(out_dir, "findings", f"epoch={batch_id}")))
+            metrics = (rows.groupBy("batch_id", "src_partition")
+                       .agg(*metric_aggs))
+            (metrics.coalesce(1).write.mode("overwrite")
+             .parquet(os.path.join(out_dir, "metrics", f"epoch={batch_id}")))
 
     return write
 

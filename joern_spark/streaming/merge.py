@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from joern_spark.sparkutil import cached
 from joern_spark.streaming.job import latest_epoch
 
 
@@ -39,18 +40,17 @@ def merge_upsert(spark: SparkSession, target_dir: str, updates: DataFrame,
     the local stand-in for Iceberg's merge-on-read commit.
     """
     bucket = F.pmod(F.hash(*keys), F.lit(n_buckets))
-    updates = (updates.withColumn("key_bucket", bucket)
-               .localCheckpoint(eager=True))
-    if os.path.exists(target_dir):
-        touched = [r.key_bucket for r in
-                   updates.select("key_bucket").distinct().collect()]
-        target = (spark.read.parquet(target_dir)
-                  .where(F.col("key_bucket").isin(touched)))
-        kept = target.join(updates.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(updates)
-    else:
-        merged = updates
-    merged = merged.localCheckpoint(eager=True)
+    with cached(updates.withColumn("key_bucket", bucket)) as updates:
+        if os.path.exists(target_dir):
+            touched = [r.key_bucket for r in
+                       updates.select("key_bucket").distinct().collect()]
+            target = (spark.read.parquet(target_dir)
+                      .where(F.col("key_bucket").isin(touched)))
+            kept = target.join(updates.select(*keys).distinct(), keys, "left_anti")
+            merged = kept.unionByName(updates)
+        else:
+            merged = updates
+        merged = merged.localCheckpoint(eager=True)
     (merged.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("key_bucket")

@@ -4,7 +4,8 @@ BFS in its distributed, local and hybrid runs and under the hop cap, the
 connected-components hand-over from distributed rounds to the driver,
 release of every pinned block, the width and release of the results the
 loops hand back, cache ownership of caller inputs, the session conf no
-query may change, and the spread-probe memo."""
+query may change, the one module that pins frames, and the spread-probe
+memo."""
 
 from __future__ import annotations
 
@@ -189,6 +190,31 @@ def test_no_query_changes_session_conf(spark):
         assert {k: spark.conf.get(k) for k in watched} == before
         connected_dup_clusters(pairs, local_threshold=threshold).unpersist()
         assert {k: spark.conf.get(k) for k in watched} == before
+
+
+def test_only_sparkutil_pins_frames():
+    """Every pinned frame comes from `sparkutil` (`persist_result`,
+    `cached`, `Rounds`), so each has one owner that releases it.  The
+    one exception is `streaming/merge.py`: Spark cannot overwrite a
+    parquet path while the plan writing it still reads that path, so
+    the merge checkpoints its output before the write."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [*(root / "joern_spark").rglob("*.py"), root / "__spark_entry__.py"]
+    pinners = {str(p.relative_to(root)) for p in files
+               if any(call in p.read_text()
+                      for call in (".persist(", ".cache(", "localCheckpoint("))}
+    assert pinners == {"joern_spark/sparkutil.py",
+                       "joern_spark/streaming/merge.py"}
+
+
+def test_cached_releases_on_error(spark):
+    before = _persistent(spark)
+    with pytest.raises(RuntimeError):
+        with sparkutil.cached(spark.range(5)) as df:
+            df.count()
+            assert _persistent(spark) - before
+            raise RuntimeError("scope failed")
+    assert not _persistent(spark) - before
 
 
 def test_rounds_releases_on_error(spark):

@@ -61,7 +61,15 @@ QUERIES = entrymod.queries()
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_vs_oracle(spark, name):
-    sdf = QUERIES[name](spark, SF_DIR).toPandas()
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(pinned().keys())
+    df = QUERIES[name](spark, SF_DIR)
+    sdf = df.toPandas()
+    # the caller releases the returned frame, as bench.py does; nothing
+    # else the query pinned may outlive it, or a later call reads it
+    df.unpersist(blocking=False)
+    leaked = set(pinned().keys()) - before
+    assert not leaked, f"{name}: left {len(leaked)} persistent RDDs"
     if name not in ORACLES:
         # rows-only check (same as the driver's weaker gate)
         assert len(sdf) >= 0

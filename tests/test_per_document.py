@@ -33,10 +33,11 @@ def _golden_cpgs():
 
 
 def _tables(pages):
-    nodes, edges = build_cpg_tables(pages)
+    tables = build_cpg_tables(pages)
+    nodes, edges = tables
     got = (_rows(nodes, "url", "node_id", "label", "code", "line"),
            _rows(edges, "url", "src", "dst", "label", "variable"))
-    nodes.unpersist()
+    tables.unpersist()
     return got
 
 

@@ -31,7 +31,10 @@ def test_build_once_per_document(spark):
     with tempfile.TemporaryDirectory() as d:
         marker = os.path.join(d, "builds.log")
         open(marker, "w").close()
-        nodes, edges = build_cpg_tables(pages, on_build=_count_hook(marker))
+        pinned = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(pinned().keys())
+        tables = build_cpg_tables(pages, on_build=_count_hook(marker))
+        nodes, edges = tables
         n_nodes = nodes.count()
         n_edges = edges.count()
         assert n_nodes > 0 and n_edges > 0
@@ -41,12 +44,14 @@ def test_build_once_per_document(spark):
             f"expected {n_docs} builds, saw {len(built)} — "
             "document CPGs are being rebuilt per consumer")
         assert len(set(built)) == n_docs
-        nodes.unpersist()
+        tables.unpersist()
+        assert set(pinned().keys()) == before
 
 
 def test_split_matches_engine_rows(spark):
     pages = make_pages(spark, n_docs=6, n_partitions=2)
-    nodes, edges = build_cpg_tables(pages)
+    tables = build_cpg_tables(pages)
+    nodes, edges = tables
     rows = {r.url: r for r in pages.select("url", "html").collect()}
     got_nodes = {}
     got_edges = {}
@@ -62,4 +67,4 @@ def test_split_matches_engine_rows(spark):
         want_edges = {(er[1], er[2], er[3], er[4]) for er in edge_rows}
         assert got_nodes[url] == want_nodes
         assert got_edges[url] == want_edges
-    nodes.unpersist()
+    tables.unpersist()

@@ -15,7 +15,8 @@ def _counts(nodes, edges):
 
 def test_save_resave_load_round_trip(spark):
     pages = make_pages(spark, n_docs=12, n_partitions=2)
-    nodes, edges = build_cpg_tables(pages)
+    tables = build_cpg_tables(pages)
+    nodes, edges = tables
     want = _counts(nodes, edges)
     with tempfile.TemporaryDirectory() as d:
         # overwrite twice: byte-stable (content-derived ids)
@@ -35,4 +36,4 @@ def test_save_resave_load_round_trip(spark):
         want_keys = {(r.url, r.node_id) for r in nodes.select("url", "node_id").collect()}
         got_keys = {(r.url, r.node_id) for r in merged_n.select("url", "node_id").collect()}
         assert got_keys == want_keys
-    nodes.unpersist()
+    tables.unpersist()

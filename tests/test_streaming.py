@@ -287,7 +287,12 @@ def test_merge_upsert_semantics(spark):
         updates = spark.createDataFrame(
             [("w1", "qa", 10), ("w3", "qc", 7)],
             ["window_start", "query_name", "n_matches"])
+        pinned = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(pinned().keys())
         merge_upsert(spark, target, updates, ["window_start", "query_name"])
+        # the returned merged checkpoint is the one pin a merge leaves:
+        # the pin on `updates` is released once `merged` is checkpointed
+        assert len(set(pinned().keys()) - before) == 1
         got = {(r.window_start, r.query_name): r.n_matches
                for r in spark.read.parquet(target).collect()}
         assert got == {("w1", "qa"): 10, ("w1", "qb"): 2,

@@ -56,9 +56,9 @@ def main():
 
     # the shared path: chain computed once, caller-owned
     t0 = time.perf_counter()
-    cc = dedup.connected_dup_clusters(
-        dedup.lsh_candidate_pairs(dedup.minhash_signature(docs)))
-    cc.count()  # materialize the persisted frame
+    pairs = dedup.lsh_candidate_pairs(dedup.minhash_signature(docs))
+    cc = dedup.connected_dup_clusters(pairs)  # persisted, materialized
+    pairs.unpersist(blocking=False)
     chain_wall = time.perf_counter() - t0
 
     t0 = time.perf_counter()
