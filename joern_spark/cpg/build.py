@@ -4,7 +4,7 @@ call graph → CFG → reaching-def/DDG.
 Mirrors X2Cpg.defaultOverlayCreators() order (X2Cpg.scala:374-385:
 Base, ControlFlow, TypeRelations, CallGraph) + OssDataFlow
 (OssDataFlow.scala:8-26), collapsed into one overlay chain that the Spark
-`mapInPandas` build UDF runs once per document.
+`mapInArrow` build UDF runs once per document.
 """
 
 from __future__ import annotations
@@ -99,7 +99,7 @@ def build_project(input_path: str,
     names are project-relative.
 
     Corpus-scale note: a "project" here is driver-side tooling input (a
-    few files); web pages go through the per-document mapInPandas path."""
+    few files); web pages go through the per-document mapInArrow path."""
     import os
 
     from joern_spark.sources.file_filter import select_project_files

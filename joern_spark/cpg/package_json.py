@@ -15,7 +15,7 @@ utils/PackageJsonParser.scala:
 
 Corpus-scale note: like ConfigPass this is driver-side metadata work over
 a handful of project files, not per-page work — it never enters the
-mapInPandas build path.
+mapInArrow build path.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Distributed CPG construction: pages DataFrame → (nodes, edges) DataFrames.
 
 The Spark re-expression of joern-parse (SURVEY.md §3a): stages 2-5 of the
-reference pipeline collapse into ONE `mapInPandas` over the pages table —
+reference pipeline collapse into ONE `mapInArrow` over the pages table —
 per-document CPGs are independent, so no shuffle is needed at all for
 construction (narrow transformation); shuffles only appear in the queries
 that follow, keyed on (url, node_id).
@@ -35,11 +35,11 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
-    BooleanType, DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType, TimestampType,
+    BooleanType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
 from joern_spark.cpg.build import build_cpg
@@ -105,21 +105,13 @@ def document_cpg(url: str, html: str | bytes) -> Cpg:
     return build_cpg(extract_script_text(html), url)
 
 
-# Spark type → pandas dtype.  The batch frame is built as object and these
-# columns are cast exactly: letting pandas infer them would turn an int64
-# column holding a null into float64 and round the low bits.  Timestamps
-# must be datetime64 for Spark to apply the session time zone; every other
-# type converts from object as it is.
-_DTYPES = {LongType: "Int64", IntegerType: "Int32", BooleanType: "boolean",
-           DoubleType: "float64", TimestampType: "datetime64[ns]"}
-
-
-def document_frame(docs, schema: StructType, body, on_error=None) -> pd.DataFrame:
+def document_batch(docs, schema: StructType, body, on_error=None) -> pa.RecordBatch:
     """The per-document loop.  `docs` yields (url, html, *carry); each page's
     CPG goes to `body(url, cpg, *carry)`, which returns or yields the
     page's rows.  A page whose decode, build or body raises is dropped, or
     contributes `on_error(url, exc, *carry)` when given; rows its body
-    yielded before raising stay."""
+    yielded before raising stay.  The rows become one Arrow column per
+    field of `schema`, typed by `to_arrow_schema`."""
     rows = []
     for url, html, *carry in docs:
         try:
@@ -127,27 +119,26 @@ def document_frame(docs, schema: StructType, body, on_error=None) -> pd.DataFram
         except Exception as e:
             if on_error is not None:
                 rows.extend(on_error(url, e, *carry))
-    out = pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object)
-    for f in schema.fields:
-        dtype = _DTYPES.get(type(f.dataType))
-        if dtype:
-            out[f.name] = out[f.name].astype(dtype)
-    return out
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow, strict=True)],
+        schema=arrow)
 
 
 def map_documents(pages: DataFrame, schema: StructType, body, on_error=None,
                   carry: tuple[str, ...] = ()) -> DataFrame:
-    """pages(url, html, *carry) → `schema` rows from `document_frame`, in
-    one narrow mapInPandas.  `carry` names page columns handed through to
+    """pages(url, html, *carry) → `schema` rows from `document_batch`, in
+    one narrow mapInArrow.  `carry` names page columns handed through to
     `body` and `on_error`."""
     cols = ("url", "html", *carry)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield document_frame(zip(*(pdf[c] for c in cols)), schema,
-                                 body, on_error)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield document_batch(zip(*(batch.column(c).to_pylist() for c in cols)),
+                                 schema, body, on_error)
 
-    return pages.select(*cols).mapInPandas(run, schema)
+    return pages.select(*cols).mapInArrow(run, schema)
 
 
 def _cpg_rows(url: str, cpg: Cpg):

@@ -188,7 +188,7 @@ def _safe_domain(url) -> str:
 
 def page_flow_summaries(pages: DataFrame) -> DataFrame:
     """pages(url, html) → per-page def/call summary rows.  One narrow
-    mapInPandas; no shuffle.
+    mapInArrow; no shuffle.
 
     A page whose summarization throws is DROPPED BUT COUNTED: it emits
     one kind='error' row (func_name='summarize_failed:<ExcType>',
@@ -206,7 +206,7 @@ def page_flow_summaries(pages: DataFrame) -> DataFrame:
 
 def page_flow_summaries_ext(pages: DataFrame) -> DataFrame:
     """pages(url, html) → per-page def/call/wrap summary rows.  One
-    narrow mapInPandas; no shuffle.
+    narrow mapInArrow; no shuffle.
 
     Observability rows (kind='error', tainted=False; never match a flow
     query's kind/tainted filters):

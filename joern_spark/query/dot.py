@@ -22,7 +22,7 @@ Behavioral port of the reference's dot generator stack:
 
 Spark surface: these run per (url, method) inside export UDFs — each
 method renders independently, so `joern-export --repr=cfg` at corpus
-scale is one mapInPandas over the per-document build.
+scale is one mapInArrow over the per-document build.
 """
 
 from __future__ import annotations

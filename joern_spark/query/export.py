@@ -155,7 +155,7 @@ def method_dot_frames(pages, representation: str = "cfg"):
     """JoernExport's per-method dot output, Spark-native: one row
     (url, method_full_name, dot) per internal method, rendered with the
     reference's DotSerializer format (query/dot.py) inside a single
-    mapInPandas pass — methods render independently, so this scales as
+    mapInArrow pass — methods render independently, so this scales as
     the build does."""
     from pyspark.sql.types import StringType, StructField, StructType
 

@@ -179,7 +179,7 @@ def document_findings(cpg: Cpg, bundle=None) -> "list[Finding]":
 def scan_evidence_sarif(pages, bundle=None) -> dict:
     """Corpus scan → ONE SARIF document with per-match locations and code
     flows.  The expensive part (build + query + evidence extraction +
-    per-document SARIF conversion) runs distributed in one mapInPandas
+    per-document SARIF conversion) runs distributed in one mapInArrow
     pass; the driver only merges the (report-sized) per-document result
     lists — same collect contract as findings_report."""
     import json

@@ -2,7 +2,7 @@
 
 The Spark form of joern-scan (SURVEY.md §3c / §A20): each Query descriptor
 mirrors querydb `Query.make` (name, score, a traversal); the scan maps each
-document's CPG through every query inside ONE `mapInPandas` pass and emits
+document's CPG through every query inside ONE `mapInArrow` pass and emits
 finding rows `(url, warc_ts, query_name, n_matches, score)` — the per-window
 match counts the streaming job aggregates must equal the reference
 suite's counts on the same corpus slice (BASELINE.json north_star).
@@ -12,15 +12,16 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable, Iterator
+from datetime import datetime, timezone
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType, TimestampType,
 )
 
 from joern_spark.cpg.core import Cpg
-from joern_spark.cpg.spark_build import document_frame, map_documents
+from joern_spark.cpg.spark_build import document_batch, map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
 from joern_spark.query.cpgql import Q
 
@@ -299,28 +300,31 @@ def scan_generated_pages(spark, n_docs: int, n_partitions: int | None = None,
                          seed: int = 42, late_fraction: float = 0.1,
                          bundle: list[Query] | None = None) -> DataFrame:
     """Synthetic-corpus scan with generation FUSED into the scan UDF: one
-    spark.range → one mapInPandas.  Produces exactly the same findings rows
+    spark.range → one mapInArrow.  Produces exactly the same findings rows
     as ``scan_findings(make_pages(...))`` (same generator, same bundle), but
     in the production plan shape — a single Python stage over the source —
     instead of two chained Python stages (generator UDF → JVM → scan UDF),
     which pays an extra Arrow round-trip a real parquet/Iceberg-backed pages
-    table would never have.  This is the north-star throughput path."""
+    table would never have.  This is the north-star throughput path.
+
+    `warc_ts` is the generator's epoch second as a UTC instant, as
+    `make_pages` gives it under the UTC session time zone `session.py` pins."""
     from joern_spark.sources.corpus import page_for
 
     body, on_error = _scan_page(bundle if bundle is not None else default_bundle())
 
     def pages_of(ids):
         for i in ids:
-            url, ts, html, _text = page_for(int(i), seed, late_fraction)
-            yield url, html, pd.Timestamp(ts, unit="s")
+            url, ts, html, _text = page_for(i, seed, late_fraction)
+            yield url, html, datetime.fromtimestamp(ts, timezone.utc)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield document_frame(pages_of(pdf["id"]), FINDINGS_SCHEMA,
-                                 body, on_error)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield document_batch(pages_of(batch.column("id").to_pylist()),
+                                 FINDINGS_SCHEMA, body, on_error)
 
     par = n_partitions or spark.sparkContext.defaultParallelism
-    return spark.range(n_docs, numPartitions=par).mapInPandas(run, FINDINGS_SCHEMA)
+    return spark.range(n_docs, numPartitions=par).mapInArrow(run, FINDINGS_SCHEMA)
 
 
 def findings_report(findings: DataFrame) -> DataFrame:

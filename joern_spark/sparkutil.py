@@ -12,11 +12,9 @@ helpers here:
   releases it when the scope exits, on error too.
 
 No other module calls `.persist(`, `.cache(` or `localCheckpoint(`
-(a source-scan test pins this; `streaming/merge.py`, which must
-checkpoint a table before it overwrites the path it was read from, is
-the one exception).  So a query that releases what it is handed
-leaves no cache behind, and a later query cannot read a frame an
-earlier one leaked.
+(a source-scan test pins this).  So a query that releases what it is
+handed leaves no cache behind, and a later query cannot read a frame
+an earlier one leaked.
 
 `Rounds` owns every block a fixpoint loop pins: each round's product is
 local-checkpointed, so the next round plans from a leaf instead of the

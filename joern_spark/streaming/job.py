@@ -13,7 +13,7 @@ Design (per BASELINE.json north_star):
   the corpus generator emits a deterministic late fraction to exercise it.
 - **State**: windows + stream dedup keys live in the RocksDB state store
   (configured in session.py); heavy CPG construction runs stateless inside
-  the batch (mapInPandas), exactly as the north_star prescribes ("state:
+  the batch (mapInArrow), exactly as the north_star prescribes ("state:
   open windows, partial CPG fragments, dedup keys").  Every stream starts
   through `start_stream`, one state store per core, not one per batch
   shuffle partition.
@@ -107,7 +107,7 @@ def windowed_findings(pages: DataFrame, set_watermark: bool = True,
     Streaming's unified semantics).
 
     IMPORTANT: the watermark must be defined on the scan OUTPUT — an
-    `EventTimeWatermark` tag does not propagate through `mapInPandas`
+    `EventTimeWatermark` tag does not propagate through `mapInArrow`
     (the UDF emits fresh attributes), so a pages-side watermark would let
     arbitrarily late rows into the aggregation (verified via the analyzed
     plan: the tag sat on warc_ts#in while the agg grouped warc_ts#out)."""

@@ -6,8 +6,8 @@ merges directly).
 
 Semantics: rows in `updates` replace target rows sharing the same key
 tuple; all other target rows survive.  The target is rewritten atomically
-from a materialized plan (localCheckpoint before overwrite — Spark cannot
-stream-overwrite a path it is still reading).
+from a materialized plan (`persist_result` before the overwrite, released
+after it — Spark cannot stream-overwrite a path it is still reading).
 
 Scale notes: the anti-join shuffles on the upsert key (uniform:
 window × query buckets); at Iceberg scale the same operation is a
@@ -23,14 +23,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from joern_spark.sparkutil import cached
+from joern_spark.sparkutil import cached, persist_result
 from joern_spark.streaming.job import latest_epoch
 
 
 def merge_upsert(spark: SparkSession, target_dir: str, updates: DataFrame,
                  keys: list[str], n_buckets: int = 64) -> DataFrame:
     """MERGE INTO target USING updates ON keys (matched → replace,
-    unmatched → insert).  Returns the merged (touched-bucket) frame.
+    unmatched → insert).  Returns a lazy read of the touched buckets of
+    the rewritten target; the merge pins nothing past its return.
 
     Partition-pruned: the target is laid out partitioned by
     ``key_bucket = pmod(hash(keys), n_buckets)``; a merge reads and
@@ -41,21 +42,24 @@ def merge_upsert(spark: SparkSession, target_dir: str, updates: DataFrame,
     """
     bucket = F.pmod(F.hash(*keys), F.lit(n_buckets))
     with cached(updates.withColumn("key_bucket", bucket)) as updates:
+        touched = [r.key_bucket for r in
+                   updates.select("key_bucket").distinct().collect()]
+        merged = updates
         if os.path.exists(target_dir):
-            touched = [r.key_bucket for r in
-                       updates.select("key_bucket").distinct().collect()]
             target = (spark.read.parquet(target_dir)
                       .where(F.col("key_bucket").isin(touched)))
             kept = target.join(updates.select(*keys).distinct(), keys, "left_anti")
             merged = kept.unionByName(updates)
-        else:
-            merged = updates
-        merged = merged.localCheckpoint(eager=True)
-    (merged.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("key_bucket")
-     .parquet(target_dir))
-    return merged
+        merged = persist_result(merged)
+    try:
+        (merged.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("key_bucket")
+         .parquet(target_dir))
+    finally:
+        merged.unpersist()
+    return (spark.read.parquet(target_dir)
+            .where(F.col("key_bucket").isin(touched)))
 
 
 def latest_findings(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -194,17 +194,13 @@ def test_no_query_changes_session_conf(spark):
 
 def test_only_sparkutil_pins_frames():
     """Every pinned frame comes from `sparkutil` (`persist_result`,
-    `cached`, `Rounds`), so each has one owner that releases it.  The
-    one exception is `streaming/merge.py`: Spark cannot overwrite a
-    parquet path while the plan writing it still reads that path, so
-    the merge checkpoints its output before the write."""
+    `cached`, `Rounds`), so each has one owner that releases it."""
     root = pathlib.Path(__file__).resolve().parents[1]
     files = [*(root / "joern_spark").rglob("*.py"), root / "__spark_entry__.py"]
     pinners = {str(p.relative_to(root)) for p in files
                if any(call in p.read_text()
                       for call in (".persist(", ".cache(", "localCheckpoint("))}
-    assert pinners == {"joern_spark/sparkutil.py",
-                       "joern_spark/streaming/merge.py"}
+    assert pinners == {"joern_spark/sparkutil.py"}
 
 
 def test_cached_releases_on_error(spark):

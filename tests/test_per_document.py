@@ -106,7 +106,8 @@ def test_one_bad_page_costs_only_that_page(spark):
     """The nesting bomb raises RecursionError in the parser.  In one
     partition beside valid pages: scan emits exactly one `<parse-error>`
     row for it, the other paths drop it, and every valid page keeps the
-    rows it has without the bomb."""
+    rows it has without the bomb.  Alone, it leaves scan its one error
+    row and every other path no rows."""
     from joern_spark.dataflow.slicing import data_flow_slices, usage_slices
     from joern_spark.query.export import method_dot_frames
     from joern_spark.query.scan import scan_findings
@@ -134,6 +135,13 @@ def test_one_bad_page_costs_only_that_page(spark):
         want = _rows(frames(good), "*")
         assert want
         assert _rows(frames(mixed), "*") == want
+
+    # a batch whose every page fails: the error row, or an empty batch
+    assert (_rows(scan_findings(bomb), "url", "query_name", "n_matches")
+            == [(BOMB_URL, "<parse-error>", 1)])
+    assert _tables(bomb) == ([], [])
+    for frames in (data_flow_slices, usage_slices):
+        assert not frames(bomb).collect()
 
 
 def test_pass_timing_sees_every_pass():

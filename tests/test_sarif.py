@@ -132,7 +132,7 @@ def test_document_findings_end_to_end():
 
 
 def test_scan_evidence_sarif_spark():
-    """Distributed evidence SARIF: one mapInPandas pass builds+scans+
+    """Distributed evidence SARIF: one mapInArrow pass builds+scans+
     converts per document; the driver merges runs."""
     import pytest
     spark = pytest.importorskip("pyspark.sql").SparkSession.getActiveSession()

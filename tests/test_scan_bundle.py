@@ -94,9 +94,9 @@ def test_fused_generated_scan_matches_chained(spark):
     n = 96
     chained = scan_findings(make_pages(spark, n_docs=n, n_partitions=4))
     fused = scan_generated_pages(spark, n_docs=n, n_partitions=4)
-    key = ["url", "query_name"]
-    a = sorted(map(tuple, chained.select(*key, "n_matches", "score").collect()))
-    b = sorted(map(tuple, fused.select(*key, "n_matches", "score").collect()))
+    cols = ["url", "warc_ts", "query_name", "n_matches", "score"]
+    a = sorted(map(tuple, chained.select(*cols).collect()))
+    b = sorted(map(tuple, fused.select(*cols).collect()))
     assert a == b and len(a) > 0
 
 

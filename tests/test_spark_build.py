@@ -11,7 +11,7 @@ import os
 import tempfile
 
 from joern_spark.cpg.spark_build import (
-    build_cpg_tables, cpg_rows_for_document,
+    NODES_SCHEMA, build_cpg_tables, cpg_rows_for_document,
 )
 from joern_spark.sources.corpus import make_pages
 
@@ -49,22 +49,24 @@ def test_build_once_per_document(spark):
 
 
 def test_split_matches_engine_rows(spark):
+    """Every node column, the nullable Int32 and boolean ones included,
+    equals the per-document engine's rows: in the combined table they sit
+    beside the nulls of the edge rows."""
     pages = make_pages(spark, n_docs=6, n_partitions=2)
     tables = build_cpg_tables(pages)
     nodes, edges = tables
+    assert nodes.columns == NODES_SCHEMA.fieldNames()
     rows = {r.url: r for r in pages.select("url", "html").collect()}
     got_nodes = {}
     got_edges = {}
     for r in nodes.collect():
-        got_nodes.setdefault(r.url, set()).add(
-            (r.node_id, r.label, r.name, r.code, r.order))
+        got_nodes.setdefault(r.url, set()).add(tuple(r))
     for r in edges.collect():
         got_edges.setdefault(r.url, set()).add(
             (r.src, r.dst, r.label, r.variable))
     for url, page in rows.items():
         node_rows, edge_rows = cpg_rows_for_document(url, page.html)
-        want_nodes = {(nr[1], nr[2], nr[3], nr[4], nr[6]) for nr in node_rows}
         want_edges = {(er[1], er[2], er[3], er[4]) for er in edge_rows}
-        assert got_nodes[url] == want_nodes
+        assert got_nodes[url] == set(node_rows)
         assert got_edges[url] == want_edges
     tables.unpersist()

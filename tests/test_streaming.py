@@ -290,9 +290,8 @@ def test_merge_upsert_semantics(spark):
         pinned = spark.sparkContext._jsc.getPersistentRDDs
         before = set(pinned().keys())
         merge_upsert(spark, target, updates, ["window_start", "query_name"])
-        # the returned merged checkpoint is the one pin a merge leaves:
-        # the pin on `updates` is released once `merged` is checkpointed
-        assert len(set(pinned().keys()) - before) == 1
+        # a merge releases both its pins: `updates` and the merged table
+        assert not set(pinned().keys()) - before
         got = {(r.window_start, r.query_name): r.n_matches
                for r in spark.read.parquet(target).collect()}
         assert got == {("w1", "qa"): 10, ("w1", "qb"): 2,
