@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """joern-scan equivalent CLI: run the query bundle over a pages table and
-print the score-sorted report (or SARIF with --sarif).
+print the score-sorted report; with --sarif, also write the evidence
+SARIF (per-match locations and code flows, query/sarif.py).
 
     spark-submit --py-files joern_spark.zip jobs/scan.py \
         --pages <pages-parquet> [--sarif out.sarif]
@@ -9,35 +10,34 @@ print the score-sorted report (or SARIF with --sarif).
 from __future__ import annotations
 
 import argparse
+import json
 
 
 def main():
-    from joern_spark.query.scan import findings_report, findings_sarif, scan_findings
+    from joern_spark.query.sarif import scan_evidence_sarif
+    from joern_spark.query.scan import findings_report, scan_findings
     from joern_spark.session import get_spark
+    from joern_spark.sparkutil import persist_result
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True)
     ap.add_argument("--sarif", help="also write a SARIF 2.1.0 file here")
-    ap.add_argument("--sarif-evidence",
-                    help="write evidence-grade SARIF (per-match locations "
-                         "+ code flows) here")
     args = ap.parse_args()
 
     spark = get_spark(app_name="joern-spark-scan")
     spark.sparkContext.setLogLevel("ERROR")
-    findings = scan_findings(spark.read.parquet(args.pages)).localCheckpoint()
-    for row in findings_report(findings).collect():
-        print(row.line)
+    pages = spark.read.parquet(args.pages)
+    # the report's sort samples its input before sorting it: pinned, the
+    # findings are scanned once
+    findings = persist_result(scan_findings(pages))
+    try:
+        for row in findings_report(findings).collect():
+            print(row.line)
+    finally:
+        findings.unpersist()
     if args.sarif:
         with open(args.sarif, "w") as f:
-            f.write(findings_sarif(findings))
-    if args.sarif_evidence:
-        import json
-
-        from joern_spark.query.sarif import scan_evidence_sarif
-        with open(args.sarif_evidence, "w") as f:
-            json.dump(scan_evidence_sarif(
-                spark.read.parquet(args.pages)), f)
+            json.dump(scan_evidence_sarif(pages), f)
 
 
 if __name__ == "__main__":

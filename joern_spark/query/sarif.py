@@ -20,9 +20,10 @@ JoernScanResultToSarifConverter.scala, SarifExtension.scala):
 Branding deviation: tool.driver identifies this engine (joern-spark),
 not the reference's product strings.
 
-Corpus scale: findings are produced per document inside the scan UDF;
-this converter runs on driver-side, report-sized slices (same contract
-as findings_sarif in query/scan.py).
+Corpus scale: findings are produced per document inside the scan UDF
+(`scan_evidence_sarif`); the driver only merges the report-sized
+per-document runs (the collect contract of findings_report in
+query/scan.py).  This is the engine's one SARIF writer.
 """
 
 from __future__ import annotations
@@ -181,29 +182,52 @@ def scan_evidence_sarif(pages, bundle=None) -> dict:
     flows.  The expensive part (build + query + evidence extraction +
     per-document SARIF conversion) runs distributed in one mapInArrow
     pass; the driver only merges the (report-sized) per-document result
-    lists — same collect contract as findings_report."""
+    lists — same collect contract as findings_report.
+
+    A page whose build or scan fails adds no result: it becomes one
+    error-level `toolExecutionNotifications` entry (the exception class,
+    the url as location) of the run's invocation, and the invocation's
+    `executionSuccessful` is false."""
     import json
 
     from pyspark.sql.types import StringType, StructField, StructType
 
     from joern_spark.cpg.spark_build import map_documents
 
-    schema = StructType([StructField("doc", StringType())])
+    schema = StructType([StructField("url", StringType()),
+                         StructField("doc", StringType()),
+                         StructField("error", StringType())])
 
-    def body(_url, cpg):
+    def body(url, cpg):
         findings = document_findings(cpg, bundle)
         if findings:
-            yield (json.dumps(findings_to_sarif(cpg, findings)["runs"][0]),)
+            run_doc = findings_to_sarif(cpg, findings)["runs"][0]
+            yield url, json.dumps(run_doc), None
+
+    def on_error(url, exc):
+        return [(url, None, type(exc).__name__)]
 
     merged_rules: dict[str, dict] = {}
     results: list[dict] = []
-    for row in map_documents(pages, schema, body).collect():
+    notifications: list[dict] = []
+    for row in map_documents(pages, schema, body, on_error).collect():
+        if row.error is not None:
+            notifications.append({
+                "level": "error",
+                "message": {"text": f"{row.error}: page not scanned"},
+                "locations": [{"physicalLocation": {
+                    "artifactLocation": {"uri": row.url}}}],
+            })
+            continue
         run_doc = json.loads(row.doc)
         for rule in run_doc["tool"]["driver"]["rules"]:
             merged_rules.setdefault(rule["id"], rule)
         results.extend(run_doc["results"])
 
     base = findings_to_sarif(Cpg(), [])
-    base["runs"][0]["tool"]["driver"]["rules"] = list(merged_rules.values())
-    base["runs"][0]["results"] = results
+    run = base["runs"][0]
+    run["tool"]["driver"]["rules"] = list(merged_rules.values())
+    run["results"] = results
+    run["invocations"] = [{"executionSuccessful": not notifications,
+                           "toolExecutionNotifications": notifications}]
     return base

@@ -27,84 +27,63 @@ from joern_spark.query.cpgql import Q
 
 
 class Query:
-    """querydb-style descriptor (DangerousFunctions.scala:14-52 shape).
-    ``evidence`` (optional) returns one node-list per match — the Finding
-    evidence SARIF code flows are built from (query/sarif.py)."""
+    """querydb-style descriptor (DangerousFunctions.scala:14-52 shape): like
+    `Query.make`, one traversal, ``find(cpg, q)``, which returns one
+    evidence node list per match.  The scan's count (`matcher`) and the
+    SARIF results with their code flows (`evidence_lists`, query/sarif.py)
+    both come from that list, so they cannot disagree."""
 
     def __init__(self, name: str, score: float,
-                 matcher: Callable[[Cpg, Q], int],
-                 evidence: "Callable[[Cpg, Q], list] | None" = None):
+                 find: Callable[[Cpg, Q], list[list]]):
         self.name = name
         self.score = score
-        self.matcher = matcher
-        self.evidence = evidence
+        self.find = find
 
-    def evidence_lists(self, cpg: Cpg, q: Q) -> "list[list]":
-        if self.evidence is not None:
-            return self.evidence(cpg, q)
-        return []
+    def matcher(self, cpg: Cpg, q: Q) -> int:
+        return len(self.find(cpg, q))
 
-
-def _taint(source_fn, sink_fn) -> Callable[[Cpg, Q], int]:
-    def run(cpg: Cpg, q: Q) -> int:
-        sources = source_fn(q)
-        sinks = sink_fn(q)
-        if not sources or not sinks:
-            return 0
-        return len(reachable_by_flows(cpg, sinks, sources))
-    return run
+    def evidence_lists(self, cpg: Cpg, q: Q) -> list[list]:
+        return self.find(cpg, q)
 
 
-def _taint_evidence(source_fn, sink_fn):
-    def run(cpg: Cpg, q: Q) -> list:
-        sources = source_fn(q)
-        sinks = sink_fn(q)
-        if not sources or not sinks:
+def _flows(sources, sinks) -> Callable[[Cpg, Q], list]:
+    """Taint query: one match per flow from a `sources(q)` node to a
+    `sinks(q)` node (the flow's visible path, sink last)."""
+    def find(cpg: Cpg, q: Q) -> list:
+        srcs = sources(q)
+        snks = sinks(q)
+        if not srcs or not snks:
             return []
-        return reachable_by_flows(cpg, sinks, sources)
-    return run
+        return reachable_by_flows(cpg, snks, srcs)
+    return find
 
 
-def _node_evidence(node_fn):
-    def run(cpg: Cpg, q: Q) -> list:
-        return [[n] for n in node_fn(q)]
-    return run
+def _nodes(pattern) -> Callable[[Cpg, Q], list]:
+    """Pattern query: one match per node of `pattern(q)`."""
+    def find(cpg: Cpg, q: Q) -> list:
+        return [[n] for n in pattern(q)]
+    return find
 
 
 def default_bundle() -> list[Query]:
     """The standing query bundle for web-page CPGs: taint + pattern
     queries in the style of the reference's querydb scanners."""
     return [
-        Query("user-input-to-read", 8.0, _taint(
+        Query("user-input-to-read", 8.0, _flows(
             lambda q: q.identifier("sz").l(),
-            lambda q: q.call().code("read.*").l()),
-              evidence=_taint_evidence(
-                  lambda q: q.identifier("sz").l(),
-                  lambda q: q.call().code("read.*").l())),
-        Query("source-to-sink", 9.0, _taint(
+            lambda q: q.call().code("read.*").l())),
+        Query("source-to-sink", 9.0, _flows(
             lambda q: q.call().code("source.*").l(),
-            lambda q: q.call().code("sink.*").argument().l()),
-              evidence=_taint_evidence(
-                  lambda q: q.call().code("source.*").l(),
-                  lambda q: q.call().code("sink.*").argument().l())),
-        Query("literal-to-call-arg", 3.0, _taint(
+            lambda q: q.call().code("sink.*").argument().l())),
+        Query("literal-to-call-arg", 3.0, _flows(
             lambda q: q.literal().l(),
-            lambda q: q.call().code("(sink|fn|foo).*").argument().l()),
-              evidence=_taint_evidence(
-                  lambda q: q.literal().l(),
-                  lambda q: q.call().code("(sink|fn|foo).*").argument().l())),
-        Query("eval-like-call", 7.0,
-              lambda cpg, q: q.call().name("(eval|Function|execScript)").size(),
-              evidence=_node_evidence(
-                  lambda q: q.call().name("(eval|Function|execScript)").l())),
-        Query("document-write", 4.0,
-              lambda cpg, q: q.call().code(r"document\.write\(.*").size(),
-              evidence=_node_evidence(
-                  lambda q: q.call().code(r"document\.write\(.*").l())),
-        Query("dangerous-prop-assign", 5.0,
-              lambda cpg, q: q.call().assignment().code(".*innerHTML.*").size(),
-              evidence=_node_evidence(
-                  lambda q: q.call().assignment().code(".*innerHTML.*").l())),
+            lambda q: q.call().code("(sink|fn|foo).*").argument().l())),
+        Query("eval-like-call", 7.0, _nodes(
+            lambda q: q.call().name("(eval|Function|execScript)").l())),
+        Query("document-write", 4.0, _nodes(
+            lambda q: q.call().code(r"document\.write\(.*").l())),
+        Query("dangerous-prop-assign", 5.0, _nodes(
+            lambda q: q.call().assignment().code(".*innerHTML.*").l())),
     ]
 
 
@@ -190,25 +169,25 @@ def _regex_sinks(q: Q):
         .argument().l())
 
 
-def _timeout_string_matches(cpg: Cpg, q: Q) -> list:
+def _timeout_string_calls(q: Q) -> list:
     """setTimeout/setInterval with a string first argument — the implicit
     eval form."""
     out = []
     for c in q.call().name("(setTimeout|setInterval)").l():
-        first = [a for a in cpg.arguments(c) if a.argument_index == 1]
+        first = [a for a in q.cpg.arguments(c) if a.argument_index == 1]
         if first and first[0].label == "LITERAL" \
                 and first[0].code[:1] in _QUOTES:
             out.append(c)
     return out
 
 
-def _hardcoded_cred_matches(cpg: Cpg, q: Q) -> list:
+def _hardcoded_cred_assignments(q: Q) -> list:
     """Credential-named assignment target with a non-empty string-literal
     source (the classic hardcoded-secret pattern; complements the
     ConfigPass private-key redaction)."""
     out = []
     for a in q.assignment().l():
-        args = cpg.arguments(a)
+        args = q.cpg.arguments(a)
         if len(args) >= 2 and _CRED_RE.search(args[0].code) \
                 and args[1].label == "LITERAL" \
                 and args[1].code[:1] in _QUOTES and len(args[1].code) > 2:
@@ -216,48 +195,29 @@ def _hardcoded_cred_matches(cpg: Cpg, q: Q) -> list:
     return out
 
 
-def _random_token_matches(cpg: Cpg, q: Q) -> list:
-    """Math.random() reaching a credential-named assignment target —
-    insecure randomness used for a secret."""
-    sources = q.call().code(r"Math\.random\(.*").l()
-    sinks = []
+def _cred_sinks(q: Q) -> list:
+    """The assigned values of credential-named assignment targets."""
+    out = []
     for a in q.assignment().l():
-        args = cpg.arguments(a)
+        args = q.cpg.arguments(a)
         if len(args) >= 2 and _CRED_RE.search(args[0].code):
-            sinks.extend(args[1:])
-    if not sources or not sinks:
-        return []
-    return reachable_by_flows(cpg, sinks, sources)
+            out.extend(args[1:])
+    return out
 
 
 def web_taint_bundle() -> list[Query]:
     return [
-        Query("sql-injection", 9.0,
-              _taint(_web_sources, _sql_sinks),
-              evidence=_taint_evidence(_web_sources, _sql_sinks)),
-        Query("command-injection", 9.0,
-              _taint(_web_sources, _cmd_sinks),
-              evidence=_taint_evidence(_web_sources, _cmd_sinks)),
-        Query("dom-xss", 8.0,
-              _taint(_web_sources, _dom_xss_sinks),
-              evidence=_taint_evidence(_web_sources, _dom_xss_sinks)),
-        Query("open-redirect", 6.0,
-              _taint(_web_sources, _redirect_sinks),
-              evidence=_taint_evidence(_web_sources, _redirect_sinks)),
-        Query("regex-injection", 5.0,
-              _taint(_web_sources, _regex_sinks),
-              evidence=_taint_evidence(_web_sources, _regex_sinks)),
-        Query("timeout-string-eval", 6.0,
-              lambda cpg, q: len(_timeout_string_matches(cpg, q)),
-              evidence=lambda cpg, q: [[n] for n in
-                                       _timeout_string_matches(cpg, q)]),
-        Query("hardcoded-credential", 5.0,
-              lambda cpg, q: len(_hardcoded_cred_matches(cpg, q)),
-              evidence=lambda cpg, q: [[n] for n in
-                                       _hardcoded_cred_matches(cpg, q)]),
-        Query("insecure-random-token", 4.0,
-              lambda cpg, q: len(_random_token_matches(cpg, q)),
-              evidence=lambda cpg, q: _random_token_matches(cpg, q)),
+        Query("sql-injection", 9.0, _flows(_web_sources, _sql_sinks)),
+        Query("command-injection", 9.0, _flows(_web_sources, _cmd_sinks)),
+        Query("dom-xss", 8.0, _flows(_web_sources, _dom_xss_sinks)),
+        Query("open-redirect", 6.0, _flows(_web_sources, _redirect_sinks)),
+        Query("regex-injection", 5.0, _flows(_web_sources, _regex_sinks)),
+        Query("timeout-string-eval", 6.0, _nodes(_timeout_string_calls)),
+        Query("hardcoded-credential", 5.0, _nodes(_hardcoded_cred_assignments)),
+        # Math.random() reaching a credential-named assignment target —
+        # insecure randomness used for a secret
+        Query("insecure-random-token", 4.0, _flows(
+            lambda q: q.call().code(r"Math\.random\(.*").l(), _cred_sinks)),
     ]
 
 
@@ -340,35 +300,3 @@ def findings_report(findings: DataFrame) -> DataFrame:
                          F.col("n_matches").cast("string"), F.lit(" match(es) in "),
                          F.col("url")).alias("line"))
             .orderBy(F.desc("score"), F.asc("query_name"), F.asc("url")))
-
-
-def findings_sarif(findings: DataFrame) -> str:
-    """Minimal SARIF 2.1.0 document for a findings DataFrame (the reference
-    exposes SARIF via semanticcpg SarifExtension; we emit the equivalent
-    run/results shape).  Collects to the driver — intended for bounded
-    report-sized outputs, not the full corpus."""
-    import json
-
-    rows = findings.collect()
-    rules = sorted({r.query_name for r in rows if r.query_name != "<parse-error>"})
-    return json.dumps({
-        "version": "2.1.0",
-        "$schema": "https://json.schemastore.org/sarif-2.1.0.json",
-        "runs": [{
-            "tool": {"driver": {
-                "name": "joern-spark",
-                "rules": [{"id": q} for q in rules],
-            }},
-            "results": [
-                {
-                    "ruleId": r.query_name,
-                    "level": "error" if r.score >= 7 else "warning",
-                    "message": {"text": f"{r.n_matches} match(es)"},
-                    "locations": [{
-                        "physicalLocation": {
-                            "artifactLocation": {"uri": r.url}}}],
-                }
-                for r in rows if r.query_name != "<parse-error>"
-            ],
-        }],
-    })

@@ -193,7 +193,7 @@ def read_salted_domain_counts(spark: SparkSession, out_dir: str) -> DataFrame:
             .agg(F.sum("partial_docs").alias("n_docs")))
 
 
-def exactly_once_batch_writer(out_dir: str, n_key_buckets: int | None = None,
+def exactly_once_batch_writer(out_dir: str,
                               key_cols: tuple = ("window_start", "query_name")):
     """foreachBatch sink: deterministic epoch path + overwrite = idempotent
     under replay.  Every row carries its lineage (batch_id + the shuffle
@@ -211,10 +211,10 @@ def exactly_once_batch_writer(out_dir: str, n_key_buckets: int | None = None,
     (a handful of rows) keeps coalesce(1)."""
 
     def write(batch_df: DataFrame, batch_id: int):
-        # writer parallelism follows the stream's shuffle width unless the
-        # caller pins it: one writer task per state store, i.e. the core
-        # count (start_stream), or the width an older checkpoint resumed at
-        n_buckets = n_key_buckets or int(
+        # writer parallelism follows the stream's shuffle width: one writer
+        # task per state store, i.e. the core count (start_stream), or the
+        # width an older checkpoint resumed at
+        n_buckets = int(
             batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         rows = (batch_df
                 .withColumn("batch_id", F.lit(batch_id))

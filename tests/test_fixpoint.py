@@ -193,10 +193,12 @@ def test_no_query_changes_session_conf(spark):
 
 
 def test_only_sparkutil_pins_frames():
-    """Every pinned frame comes from `sparkutil` (`persist_result`,
-    `cached`, `Rounds`), so each has one owner that releases it."""
+    """Every pinned frame in the library, the jobs and the driver entry
+    comes from `sparkutil` (`persist_result`, `cached`, `Rounds`), so each
+    has one owner that releases it."""
     root = pathlib.Path(__file__).resolve().parents[1]
-    files = [*(root / "joern_spark").rglob("*.py"), root / "__spark_entry__.py"]
+    files = [*(root / "joern_spark").rglob("*.py"), *(root / "jobs").glob("*.py"),
+             root / "__spark_entry__.py"]
     pinners = {str(p.relative_to(root)) for p in files
                if any(call in p.read_text()
                       for call in (".persist(", ".cache(", "localCheckpoint("))}

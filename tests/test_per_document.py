@@ -41,6 +41,21 @@ def _tables(pages):
     return got
 
 
+def _sarif(doc):
+    """(sorted results, executionSuccessful, notified urls) of a SARIF
+    run; every notification is an error naming the exception class."""
+    run = doc["runs"][0]
+    (invocation,) = run["invocations"]
+    notes = invocation["toolExecutionNotifications"]
+    assert all(n["level"] == "error"
+               and n["message"]["text"].startswith("RecursionError")
+               for n in notes)
+    urls = [n["locations"][0]["physicalLocation"]["artifactLocation"]["uri"]
+            for n in notes]
+    return (sorted(json.dumps(r, sort_keys=True) for r in run["results"]),
+            invocation["executionSuccessful"], urls)
+
+
 def test_str_html_matches_binary(spark):
     from joern_spark.query.scan import scan_findings
 
@@ -107,9 +122,11 @@ def test_one_bad_page_costs_only_that_page(spark):
     partition beside valid pages: scan emits exactly one `<parse-error>`
     row for it, the other paths drop it, and every valid page keeps the
     rows it has without the bomb.  Alone, it leaves scan its one error
-    row and every other path no rows."""
+    row and every other path no rows.  Evidence SARIF counts the bomb as
+    one failed-page notification and no result."""
     from joern_spark.dataflow.slicing import data_flow_slices, usage_slices
     from joern_spark.query.export import method_dot_frames
+    from joern_spark.query.sarif import scan_evidence_sarif
     from joern_spark.query.scan import scan_findings
 
     good = make_pages(spark, n_docs=8).select("url", "warc_ts", "html")
@@ -136,12 +153,17 @@ def test_one_bad_page_costs_only_that_page(spark):
         assert want
         assert _rows(frames(mixed), "*") == want
 
+    results, ok, failed = _sarif(scan_evidence_sarif(good))
+    assert results and ok and not failed
+    assert _sarif(scan_evidence_sarif(mixed)) == (results, False, [BOMB_URL])
+
     # a batch whose every page fails: the error row, or an empty batch
     assert (_rows(scan_findings(bomb), "url", "query_name", "n_matches")
             == [(BOMB_URL, "<parse-error>", 1)])
     assert _tables(bomb) == ([], [])
     for frames in (data_flow_slices, usage_slices):
         assert not frames(bomb).collect()
+    assert _sarif(scan_evidence_sarif(bomb)) == ([], False, [BOMB_URL])
 
 
 def test_pass_timing_sees_every_pass():

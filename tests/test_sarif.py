@@ -8,6 +8,8 @@ rather than as one string."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from joern_spark.cpg.build import build_cpg
 from joern_spark.cpg.core import Cpg, Node
 from joern_spark.query.sarif import (
@@ -156,3 +158,60 @@ def test_scan_evidence_sarif_spark():
     assert uri.startswith("https://")
     rule_ids = {r["id"] for r in doc["runs"][0]["tool"]["driver"]["rules"]}
     assert {r["ruleId"] for r in results} <= rule_ids
+    assert doc["runs"][0]["invocations"] == [
+        {"executionSuccessful": True, "toolExecutionNotifications": []}]
+
+    # the scan's count and the SARIF results come from one match list
+    from joern_spark.query.scan import scan_findings, web_taint_bundle
+    from joern_spark.sources.corpus import make_taint_pages
+
+    assert _sarif_counts(doc) == _scan_counts(scan_findings(pages))
+    taint_pages = make_taint_pages(spark, n_docs=32, n_partitions=2)
+    bundle = web_taint_bundle()
+    assert (_sarif_counts(scan_evidence_sarif(taint_pages, bundle))
+            == _scan_counts(scan_findings(taint_pages, bundle)))
+
+
+def _sarif_counts(doc):
+    counts = Counter(
+        (r["locations"][0]["physicalLocation"]["artifactLocation"]["uri"],
+         r["ruleId"])
+        for r in doc["runs"][0]["results"])
+    assert counts
+    return dict(counts)
+
+
+def _scan_counts(findings):
+    counts = {(r.url, r.query_name): r.n_matches for r in findings.collect()}
+    assert counts and all(q != "<parse-error>" for _, q in counts)
+    return counts
+
+
+def test_scan_job_end_to_end(spark, tmp_path, monkeypatch, capsys):
+    """jobs/scan.py: the score-sorted report on stdout, and the evidence
+    SARIF file, every result at its rule's `cvss_to_level`."""
+    import json
+    import sys
+
+    from jobs import scan as scan_job
+    from joern_spark.query.scan import default_bundle
+    from joern_spark.sources.corpus import make_pages
+
+    pages_dir, sarif_path = str(tmp_path / "pages"), tmp_path / "out.sarif"
+    make_pages(spark, n_docs=32).write.parquet(pages_dir)
+    monkeypatch.setattr("joern_spark.session.get_spark", lambda **_: spark)
+    monkeypatch.setattr(sys, "argv", ["scan.py", "--pages", pages_dir,
+                                      "--sarif", str(sarif_path)])
+    scan_job.main()
+
+    lines = capsys.readouterr().out.splitlines()
+    assert lines and all(ln.startswith("Result: ") for ln in lines)
+    scores = [float(ln.split(" : ")[0].removeprefix("Result: "))
+              for ln in lines]
+    assert scores == sorted(scores, reverse=True)
+
+    score = {q.name: q.score for q in default_bundle()}
+    results = json.loads(sarif_path.read_text())["runs"][0]["results"]
+    assert results
+    for r in results:
+        assert r["level"] == cvss_to_level(score[r["ruleId"]]), r["ruleId"]
