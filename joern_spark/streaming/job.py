@@ -21,8 +21,9 @@ Design (per BASELINE.json north_star):
   deterministic `epoch=<id>` path with overwrite — replays after a crash
   rewrite byte-identical content at the same path (idempotent), because
   node ids and finding rows are pure functions of the input rows.
-- **Lineage + metrics**: every sink row carries (batch_id); a metrics table
-  records per-batch row/partition counts.
+- **Lineage + metrics**: every sink row carries (batch_id, src_partition),
+  so per-partition metrics are a groupBy over the sink, not a second
+  write; the sink is one Spark job per micro-batch.
 """
 
 from __future__ import annotations
@@ -35,7 +36,6 @@ from pyspark.sql.types import BinaryType, StructField, StructType
 
 from joern_spark.query.scan import scan_findings
 from joern_spark.sources.corpus import PAGE_SCHEMA, make_pages
-from joern_spark.sparkutil import cached
 
 WINDOW = "1 hour"
 WATERMARK = "2 hours"
@@ -133,12 +133,6 @@ def windowed_findings(pages: DataFrame, set_watermark: bool = True,
     )
 
 
-def dedup_pages_stream(pages: DataFrame) -> DataFrame:
-    """Streaming exact-dedup on url under watermark — dedup keys live in the
-    RocksDB state store; late duplicates beyond the watermark age out."""
-    return pages.withWatermark("warc_ts", WATERMARK).dropDuplicates(["url", "warc_ts"])
-
-
 def salted_domain_counts(pages: DataFrame, n_salt: int = 8,
                          set_watermark: bool = True) -> DataFrame:
     """Per-domain windowed page counts with EXPLICIT salting — the hot-
@@ -173,13 +167,13 @@ def run_salted_domain_stream(spark: SparkSession, pages_dir: str,
                              n_salt: int = 8, available_now: bool = False,
                              files_per_trigger: int = 1):
     """Start the salted per-domain rollup stream (update mode + the same
-    idempotent epoch sink as the findings job, upsert-keyed on the SALTED
-    key so hot domains never concentrate in one writer bucket either)."""
+    idempotent epoch sink as the findings job; its writer buckets are the
+    partitions of the aggregation on the SALTED key, so hot domains never
+    concentrate in one writer bucket either)."""
     return start_stream(
         spark, lambda s: salted_domain_counts(
             pages_stream(s, pages_dir, files_per_trigger), n_salt=n_salt),
-        checkpoint_dir, exactly_once_batch_writer(
-            out_dir, key_cols=("window_start", "domain", "salt")),
+        checkpoint_dir, exactly_once_batch_writer(out_dir),
         available_now=available_now)
 
 
@@ -193,47 +187,38 @@ def read_salted_domain_counts(spark: SparkSession, out_dir: str) -> DataFrame:
             .agg(F.sum("partial_docs").alias("n_docs")))
 
 
-def exactly_once_batch_writer(out_dir: str,
-                              key_cols: tuple = ("window_start", "query_name")):
+def exactly_once_batch_writer(out_dir: str):
     """foreachBatch sink: deterministic epoch path + overwrite = idempotent
-    under replay.  Every row carries its lineage (batch_id + the shuffle
-    partition that produced it); a metrics table records per-partition row
-    counts per epoch (north_rule: "per-partition lineage + metrics").
+    under replay.  One action per micro-batch: `batch_df` is written as
+    it comes, `epoch=<id>/key_bucket=<b>/` with `b` the id of the
+    partition that produced the row, so each writer task writes one file
+    and nothing is pinned or shuffled.
 
-    The data path is PARTITIONED (MERGE-shaped): rows shuffle on a hash
-    bucket of the upsert key (window_start, query_name) and land in
-    `epoch=<id>/key_bucket=<b>/` — many writer tasks, no single-task
-    coalesce.  Replays overwrite the same epoch directory with identical
-    content (counts are pure functions of the replayed input), which is
-    exactly the idempotency an Iceberg `MERGE INTO ... ON key` gives; the
+    The partition id is a key bucket because, in the update-mode
+    streams, `batch_df` is the output of the stateful aggregation: its
+    partitions are hash partitions of the grouping (= upsert) key at the
+    stream's shuffle width, which the checkpoint fixes for its life.  A
+    key therefore lands in the same bucket in every epoch.  (The
+    append-mode near-dup sink buckets by the partition of its own
+    aggregation; its readers never rely on which bucket a key is in.)
+
+    Every row carries its lineage (`batch_id` and `src_partition`, equal
+    to `key_bucket`, in the file), so the per-partition metrics
+    (north_rule: "per-partition lineage + metrics") are one
+    `groupBy(batch_id, src_partition)` over `findings/`, a view rather
+    than a second write.  Replays overwrite the same epoch directory with
+    identical content (counts are pure functions of the replayed input),
+    which is the idempotency an Iceberg `MERGE INTO ... ON key` gives; the
     read side (`read_results`) and the compaction (`streaming.merge`)
-    resolve latest-epoch-wins per key.  Only the per-epoch METRICS summary
-    (a handful of rows) keeps coalesce(1)."""
+    resolve latest-epoch-wins per key."""
 
     def write(batch_df: DataFrame, batch_id: int):
-        # writer parallelism follows the stream's shuffle width: one writer
-        # task per state store, i.e. the core count (start_stream), or the
-        # width an older checkpoint resumed at
-        n_buckets = int(
-            batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        rows = (batch_df
-                .withColumn("batch_id", F.lit(batch_id))
-                .withColumn("src_partition", F.spark_partition_id())
-                .withColumn("key_bucket",
-                            # pmod, not abs(hash)%n: abs(Int.MinValue)
-                            # overflows negative and % keeps the sign
-                            F.pmod(F.hash(*key_cols), F.lit(n_buckets))))
-        metric_aggs = [F.count(F.lit(1)).alias("n_rows")]
-        if "n_matches" in batch_df.columns:
-            metric_aggs.append(F.sum("n_matches").alias("n_matches"))
-        with cached(rows):
-            (rows.repartition("key_bucket")
-             .write.mode("overwrite").partitionBy("key_bucket")
-             .parquet(os.path.join(out_dir, "findings", f"epoch={batch_id}")))
-            metrics = (rows.groupBy("batch_id", "src_partition")
-                       .agg(*metric_aggs))
-            (metrics.coalesce(1).write.mode("overwrite")
-             .parquet(os.path.join(out_dir, "metrics", f"epoch={batch_id}")))
+        (batch_df
+         .withColumn("batch_id", F.lit(batch_id))
+         .withColumn("src_partition", F.spark_partition_id())
+         .withColumn("key_bucket", F.col("src_partition"))
+         .write.mode("overwrite").partitionBy("key_bucket")
+         .parquet(os.path.join(out_dir, "findings", f"epoch={batch_id}")))
 
     return write
 
@@ -315,8 +300,7 @@ def run_media_stream(spark: SparkSession, pages_dir: str, out_dir: str,
     return start_stream(
         spark, lambda s: windowed_media_features(
             media_pages_stream(s, pages_dir, files_per_trigger)),
-        checkpoint_dir, exactly_once_batch_writer(
-            out_dir, key_cols=("window_start", "decode_status")),
+        checkpoint_dir, exactly_once_batch_writer(out_dir),
         available_now=available_now)
 
 

@@ -224,7 +224,7 @@ def run_near_dup_stream(spark: SparkSession, pages_dir: str, out_dir: str,
     keyed on url (replays rewrite identical epochs — verdicts are pure
     functions of the replayed batch + the state the checkpoint
     restores)."""
-    sink = exactly_once_batch_writer(out_dir, key_cols=("url",))
+    sink = exactly_once_batch_writer(out_dir)
 
     def write(batch_df: DataFrame, batch_id: int):
         sink(survivors_from_verdicts(batch_df), batch_id)

@@ -4,9 +4,13 @@ and kill+resume-from-checkpoint reproducibility (BASELINE.md target
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
+import sys
 import tempfile
 import time
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,6 +80,77 @@ def test_stream_state_is_one_store_per_core(spark, corpus_dir, name):
     finally:
         spark.conf.set(SHUFFLE, batch_width)
         shutil.rmtree(base, ignore_errors=True)
+
+
+# the upsert key of each update-mode stream: its stateful aggregation's
+# grouping key, which the sink's key_bucket follows
+UPSERT_KEYS = {
+    "findings": ("window_start", "query_name"),
+    "salted": ("window_start", "domain", "salt"),
+    "media": ("window_start", "decode_status"),
+}
+
+
+@pytest.fixture(scope="module")
+def media_dir(spark):
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from streaming_soak import write_chunk
+
+    d = tempfile.mkdtemp(prefix="media_pages_")
+    for lo in (0, 40, 80):  # 3 time-ordered chunks, every 2nd page a blob
+        write_chunk(spark, d, lo, lo + 40, media_frac=0.5)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="module", params=sorted(UPSERT_KEYS))
+def drained_update_stream(request, spark, corpus_dir, media_dir):
+    """One update-mode stream drained from a fresh checkpoint: its name,
+    query, Spark job ids, the persistent RDDs it left and its sink dir."""
+    name = request.param
+    pages = media_dir if name == "media" else corpus_dir
+    base = tempfile.mkdtemp(prefix=f"sink_{name}_")
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(pinned().keys())
+    q = STARTERS[name](spark, pages, f"{base}/out", f"{base}/cp",
+                       available_now=True)
+    q.awaitTermination(300)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    yield name, q, jobs, set(pinned().keys()) - before, f"{base}/out"
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_update_sink_is_one_job_per_batch(drained_update_stream):
+    """The exactly-once sink runs one Spark action per micro-batch (no
+    pinned batch, no second metrics write) and leaves no cache."""
+    _name, q, jobs, left, _out = drained_update_stream
+    assert q.lastProgress["batchId"] > 0
+    assert len(jobs) == q.lastProgress["batchId"] + 1
+    assert not left
+
+
+def test_update_sink_buckets_are_state_partitions(spark,
+                                                  drained_update_stream):
+    """Each writer task writes one file per epoch, its rows' bucket is
+    the partition that produced them, and every upsert key stays in one
+    bucket across all epochs."""
+    name, _q, _jobs, _left, out = drained_update_stream
+    findings = os.path.join(out, "findings")
+    dirs = glob.glob(os.path.join(findings, "epoch=*", "key_bucket=*"))
+    assert dirs
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    rows = spark.read.parquet(findings).collect()
+    assert rows and all(r.key_bucket == r.src_partition for r in rows)
+    buckets, epochs = defaultdict(set), defaultdict(set)
+    for r in rows:
+        key = tuple(r[k] for k in UPSERT_KEYS[name])
+        buckets[key].add(r.key_bucket)
+        epochs[key].add(r.batch_id)
+    assert all(len(b) == 1 for b in buckets.values())
+    # some key is rewritten in a later epoch, so the check spans epochs
+    assert any(len(e) > 1 for e in epochs.values())
 
 
 def test_stream_session_keeps_caller_runtime_conf(spark, corpus_dir):

@@ -20,9 +20,9 @@ query runs:
   over the full corpus (unified semantics + exactly-once under kills).
 
 Prints one JSON line: docs/sec sustained while streaming, per-phase
-checkpoint/state sizes (flat-growth evidence), per micro-batch trigger
-time and state-operator width/commit/rows/memory of every stream
-(`batches`), and the golden verdict.
+checkpoint/state sizes (flat-growth evidence), per stream run its Spark
+job count and per micro-batch trigger time and state-operator
+width/commit/rows/memory (`runs`), and the golden verdict.
 
 Usage: python tools/streaming_soak.py [--docs 262144] [--chunks 16]
        [--kills 4] [--out /tmp/soak]
@@ -110,14 +110,22 @@ STATE_KEYS = ("operatorName", "numShufflePartitions", "numStateStoreInstances",
               "commitTimeMs", "numRowsTotal", "memoryUsedBytes")
 
 
-def batch_state(query, phase: int) -> list[dict]:
-    """Per micro-batch trigger time and state-operator width and cost of
-    one stream run, from the query's progress reports."""
-    return [{"phase": phase, "batch_id": p["batchId"],
-             "trigger_ms": p["durationMs"].get("triggerExecution", 0),
-             "state": [{k: op.get(k) for k in STATE_KEYS}
-                       for op in p.get("stateOperators") or []]}
-            for p in query.recentProgress]
+def batch_state(spark, query, phase: int) -> dict:
+    """One stream run: its Spark job count (the jobs of its `runId` job
+    group; over `len(batches)` it is the jobs per micro-batch) and, per
+    micro-batch, trigger time and state-operator width and cost from the
+    query's progress reports."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {"phase": phase,
+            "spark_jobs": len(sc.statusTracker().getJobIdsForGroup(
+                str(query.runId))),
+            "batches": [
+                {"batch_id": p["batchId"],
+                 "trigger_ms": p["durationMs"].get("triggerExecution", 0),
+                 "state": [{k: op.get(k) for k in STATE_KEYS}
+                           for op in p.get("stateOperators") or []]}
+                for p in query.recentProgress]}
 
 
 def dir_size(path: str) -> int:
@@ -279,11 +287,11 @@ def main():
     stream_seconds = 0.0
     docs_streamed = 0
     phases = []
-    batches = {}  # stream name -> per micro-batch state records
+    runs = {}  # stream name -> per-run job counts and batch records
 
     def drain(name, query):
         query.awaitTermination(1800)
-        batches.setdefault(name, []).extend(batch_state(query, phase))
+        runs.setdefault(name, []).append(batch_state(spark, query, phase))
 
     for phase in range(args.kills):
         # producer: append this phase's chunks
@@ -485,7 +493,7 @@ def main():
         "golden_counts_match": golden_ok,
         "n_windows": len(expected),
         "phases": phases,
-        "batches": batches,
+        "runs": runs,
         "crosspage_errors": crosspage_errors,
         **({"skew": skew} if skew else {}),
         **({"media": media} if media else {}),
