@@ -90,7 +90,7 @@ class Node:
         "modifier_type", "is_variadic", "signature", "filename", "start", "end",
         "closure_binding_id", "imported_entity", "imported_as", "version",
         "dependency_group_id", "dynamic_type_hint_full_name", "possible_types",
-        "content", "hash", "root", "language", "alias_type_full_name",
+        "content", "alias_type_full_name",
     )
 
     def __init__(self, label: str, **kw):
@@ -131,10 +131,7 @@ class Node:
         # (DYNAMIC_TYPE_HINT_FULL_NAME / POSSIBLE_TYPES in the schema)
         self.dynamic_type_hint_full_name = ()
         self.possible_types = ()
-        self.content = ""  # CONFIG_FILE / FILE source text
-        self.hash = ""      # META_DATA
-        self.root = ""      # META_DATA
-        self.language = ""  # META_DATA
+        self.content = ""  # FILE source text
         self.alias_type_full_name = None  # TYPE_DECL (type aliases)
         if kw:
             for k, v in kw.items():

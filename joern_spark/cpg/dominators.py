@@ -103,24 +103,6 @@ def _immediate_dominators(g: _DomGraph) -> dict[int, Node]:
     return {k: v for k, v in idom.items() if v is not None}
 
 
-def dominance_frontier(nodes, preds_fn, idom: "dict[int, Node]") -> "dict[int, set[int]]":
-    """Generic dominance frontier (CfgDominatorFrontier.scala): for each
-    join node y (>=2 preds), each pred walks up the immediate-dominator
-    chain until idom(y); every node passed gains y in its frontier."""
-    df: dict[int, set[int]] = {}
-    for y in nodes:
-        ps = preds_fn(y)
-        if len(ps) < 2:
-            continue
-        yi = idom.get(y.id)
-        for p in ps:
-            runner = p
-            while runner is not None and (yi is None or runner.id != yi.id):
-                df.setdefault(runner.id, set()).add(y.id)
-                runner = idom.get(runner.id)
-    return df
-
-
 def add_dominators(cpg: Cpg) -> dict[int, dict[int, Node]]:
     """DOMINATE / POST_DOMINATE edges: immediate (post)dominator → node.
     Returns {method_id: ipdom map} so add_cdg can reuse the post-dominator

@@ -42,18 +42,6 @@ def _make_stub(cpg: Cpg, call: Node, fn: str) -> Node:
     return method
 
 
-def create_meta_data(cpg: Cpg, cpg_hash: str = "", input_path: str = "") -> Node:
-    """JavaScriptMetaDataPass (jssrc2cpg JavaScriptMetaDataPass.scala:11-21):
-    one META_DATA node carrying language=JSSRC, the project root and the
-    CPG hash.  Corpus-scale this is table-level metadata written once by
-    the store, never per-document."""
-    import os
-    meta = Node("META_DATA", name="", code="<empty>", language="JSSRC",
-                hash=cpg_hash, root=os.path.abspath(input_path or "."))
-    cpg.add_node(meta)
-    return meta
-
-
 def create_parameter_outs(cpg: Cpg, methods: "list[Node] | None" = None):
     """MethodDecoratorPass (x2cpg passes/base/MethodDecoratorPass.scala):
     a METHOD_PARAMETER_OUT mirroring each input parameter, linked via

@@ -144,11 +144,3 @@ def extract_scripts_udf():
         )
 
     return _udf
-
-
-def preprocess_ejs_udf():
-    @F.pandas_udf("string")
-    def _udf(src: pd.Series) -> pd.Series:
-        return src.map(lambda s: preprocess_ejs(s) if s is not None else None)
-
-    return _udf

@@ -43,11 +43,3 @@ def salted_agg(df: DataFrame, key: Column, aggs: list, n_salts: int = 16,
         finals.append(getattr(F, final_fn)(F.col(f"_p_{out_name}")).alias(out_name))
     stage1 = df.groupBy(key.alias("_key"), salt).agg(*partials)
     return stage1.groupBy("_key").agg(*finals).withColumnRenamed("_key", "key")
-
-
-def pages_per_domain_salted(pages: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Demo/benchmark op: page counts per domain, skew-proof."""
-    return salted_agg(
-        pages, domain_of(), [(F.lit(1), "count", "sum", "n_pages")],
-        n_salts=n_salts, salt_on=F.col("url"),
-    ).withColumnRenamed("key", "domain")

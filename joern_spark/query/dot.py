@@ -67,10 +67,9 @@ class Edge:
 
 
 class Graph:
-    def __init__(self, vertices, edges, subgraph=None):
+    def __init__(self, vertices, edges):
         self.vertices = list(vertices)
         self.edges = list(edges)
-        self.subgraph = dict(subgraph or {})
 
     def __add__(self, other: "Graph") -> "Graph":
         seen_v, vs = set(), []
@@ -145,11 +144,10 @@ def _string_repr(cpg: Cpg, v: Node) -> str:
     return "<BR/>".join(out)
 
 
-def dot_graph(cpg: Cpg, root: "Node | None", graph: Graph,
+def dot_graph(cpg: Cpg, root: Node, graph: Graph,
               with_edge_types: bool = False) -> str:
     """DotSerializer.dotGraph (:40-56)."""
-    name = _escape_html(root.name) if root is not None \
-        and root.label == "METHOD" else ("" if root is not None else "CPG")
+    name = _escape_html(root.name) if root.label == "METHOD" else ""
     out = [f'digraph "{name}" {{  \n', 'node [shape="rect"];  \n']
     pieces = [f'"{v.id}" [label = <{_string_repr(cpg, v)}> ]'
               for v in graph.vertices]
@@ -158,11 +156,6 @@ def dot_graph(cpg: Cpg, root: "Node | None", graph: Graph,
                else _escape_html(e.label))
         suffix = f' [ label = "{lbl}"] ' if lbl else ""
         pieces.append(f'  "{e.src.id}" -> "{e.dst.id}" ' + suffix)
-    for idx, (name_, children) in enumerate(graph.subgraph.items()):
-        # DotSerializer.nodesToSubGraphs (:127-136)
-        childs = "\n".join(f'    "{c.id}";' for c in children)
-        pieces.append(f'  subgraph cluster_{idx} {{\n{childs}\n'
-                      f'    label = "{_escape_html(name_)}";\n  }}\n')
     out.append("\n".join(pieces))
     out.append("\n}\n")
     return "".join(out)
@@ -379,94 +372,3 @@ def dot_cpg14(cpg: Cpg, method: Node, semantics=None) -> str:
     g = (ast_graph(cpg, method) + cfg_graph(cpg, method)
          + ddg_graph(cpg, method, semantics) + cdg_graph(cpg, method))
     return dot_graph(cpg, method, g, with_edge_types=True)
-
-
-# -- corpus-level generators (CallGraphGenerator / TypeHierarchyGenerator) ---
-
-def call_graph(cpg: Cpg) -> Graph:
-    """CallGraphGenerator: methods as vertices, resolved CALL edges
-    labeled by dispatch type, clustered by defining type decl."""
-    subgraph: dict[str, list] = {}
-
-    def store(m):
-        parent = cpg.ast_parent(m)
-        key = (parent.full_name if parent is not None
-               and parent.label == "TYPE_DECL" else
-               (parent.full_name or parent.name) if parent is not None
-               else "<global>")
-        subgraph.setdefault(key, [])
-        if m not in subgraph[key]:
-            subgraph[key].append(m)
-
-    vertices = cpg.methods()
-    edges, seen = [], set()
-    for src_method in vertices:
-        store(src_method)
-        for call in cpg.method_body_nodes(src_method):
-            if call.label != "CALL":
-                continue
-            for e in cpg.out(call, "CALL"):
-                tgt = e.dst
-                store(tgt)
-                edge = Edge(src_method, tgt,
-                            label=(call.dispatch_type or "")
-                            .removesuffix("_DISPATCH"))
-                if edge.key() not in seen:
-                    seen.add(edge.key())
-                    edges.append(edge)
-    return Graph(vertices, edges, subgraph)
-
-
-def type_hierarchy(cpg: Cpg) -> Graph:
-    """TypeHierarchyGenerator: TYPE vertices, INHERITS_FROM edges drawn
-    supertype → subtype, clustered by parsed namespace (external types
-    under <global>)."""
-    decls = cpg.nodes_by_label("TYPE_DECL")
-    external = {t.full_name: t.is_external for t in decls}
-
-    def type_of(td):
-        for e in cpg.inn(td, "REF"):
-            if e.src.label == "TYPE":
-                return e.src
-        return None
-
-    subgraph: dict[str, list] = {}
-
-    def store(typ):
-        if not external.get(typ.full_name, True):
-            full = typ.full_name
-            ns = (full[: -len(f".{typ.name}")] if full.endswith(f".{typ.name}")
-                  else full[: -len(typ.name)] if full.endswith(typ.name)
-                  else full)
-            key = ns or "<global>"
-        else:
-            key = "<global>"
-        subgraph.setdefault(key, [])
-        if typ not in subgraph[key]:
-            subgraph[key].append(typ)
-
-    vertices, edges, seen = [], [], set()
-    for td in decls:
-        src_type = type_of(td)
-        if src_type is None:
-            continue
-        vertices.append(src_type)
-        store(src_type)
-        for e in cpg.out(td, "INHERITS_FROM"):
-            tgt = e.dst if e.dst.label == "TYPE" else type_of(e.dst)
-            if tgt is None:
-                continue
-            store(tgt)
-            edge = Edge(tgt, src_type)
-            if edge.key() not in seen:
-                seen.add(edge.key())
-                edges.append(edge)
-    return Graph(vertices, edges, subgraph)
-
-
-def dot_call_graph(cpg: Cpg) -> str:
-    return dot_graph(cpg, None, call_graph(cpg))
-
-
-def dot_type_hierarchy(cpg: Cpg) -> str:
-    return dot_graph(cpg, None, type_hierarchy(cpg))

@@ -1,11 +1,14 @@
-"""Graph export (the joern-export equivalent, SURVEY.md §2D).
+"""Graph export (the joern-export equivalent, SURVEY.md §2D; the CLI is
+`jobs/export.py`).
 
 Reference: joern-cli JoernExport.scala:34-134 — representations
 Ast/Cfg/Ddg/Cdg/Pdg/All exported as dot/graphml/neo4j-csv.  Spark form:
-the representation is a filter on the edges table; formats are writers:
-- csv:  nodes/edges parquet→csv directories (neo4j-admin import shape)
-- json: JSON lines per document
-- dot:  per-document DOT text assembled in one Arrow pass
+the representation is a filter on the edges table (for dot, the
+per-method generator of query/dot.py); each format is one frame:
+- dot:      one DotSerializer digraph per internal method, rendered in
+            the per-document build pass (`method_dot_frames`)
+- graphml:  one GraphML document per page (`export_graphml`)
+- graphson: one GraphSON 3.0 document per page (`export_graphson`)
 """
 
 from __future__ import annotations
@@ -27,32 +30,6 @@ REPRESENTATIONS = {
 def edges_for(edges: DataFrame, representation: str) -> DataFrame:
     labels = REPRESENTATIONS[representation]
     return edges if labels is None else edges.where(F.col("label").isin(labels))
-
-
-def export_csv(nodes: DataFrame, edges: DataFrame, representation: str, out_dir: str):
-    """neo4j-csv style: one nodes dir + one relationships dir."""
-    nodes.write.mode("overwrite").option("header", True).csv(f"{out_dir}/nodes")
-    (edges_for(edges, representation)
-     .write.mode("overwrite").option("header", True).csv(f"{out_dir}/edges"))
-
-
-def export_json(nodes: DataFrame, edges: DataFrame, representation: str, out_dir: str):
-    nodes.write.mode("overwrite").json(f"{out_dir}/nodes")
-    edges_for(edges, representation).write.mode("overwrite").json(f"{out_dir}/edges")
-
-
-def export_dot(nodes: DataFrame, edges: DataFrame, representation: str) -> DataFrame:
-    """One DOT digraph per document: (url, dot)."""
-    e = edges_for(edges, representation)
-    lines = e.select(
-        "url",
-        F.concat(F.lit('  "'), F.col("src"), F.lit('" -> "'), F.col("dst"),
-                 F.lit('" [label="'), F.col("label"), F.lit('"];')).alias("line"),
-    )
-    return (lines.groupBy("url")
-            .agg(F.concat_ws("\n", F.collect_list("line")).alias("body"))
-            .select("url", F.concat(F.lit("digraph g {\n"), F.col("body"),
-                                    F.lit("\n}")).alias("dot")))
 
 
 def _xml_escape(col):
@@ -156,7 +133,8 @@ def method_dot_frames(pages, representation: str = "cfg"):
     (url, method_full_name, dot) per internal method, rendered with the
     reference's DotSerializer format (query/dot.py) inside a single
     mapInArrow pass — methods render independently, so this scales as
-    the build does."""
+    the build does.  A page that fails to build gives one error row
+    (url, "<parse-error>", <exception class name>)."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from joern_spark.cpg.spark_build import map_documents
@@ -177,4 +155,7 @@ def method_dot_frames(pages, representation: str = "cfg"):
         return [(url, m.full_name, render(cpg, m)) for m in cpg.methods()
                 if not m.is_external and not m.name.startswith("<operator>")]
 
-    return map_documents(pages, schema, body)
+    def on_error(url, exc):
+        return [(url, "<parse-error>", type(exc).__name__)]
+
+    return map_documents(pages, schema, body, on_error)

@@ -2,13 +2,12 @@
 partial CPG fragments, dedup keys) lives in the RocksDB state store" +
 "stateful stream-stream joins keyed on (url, node_id)").
 
-- `domain_running_stats`: an `applyInPandasWithState` operator keeping
-  per-domain running aggregates (pages seen, matches, last event time) in
-  the state store — the "partial fragments" pattern: only small per-key
-  summaries are stateful, heavy CPG work stays in the stateless batch part.
 - `join_pages_with_meta`: watermarked stream-stream inner join of the
   pages stream with a late-arriving metadata stream on url within a
   bounded event-time range — the late-WARC-record join of the north_star.
+- `assemble_cpg_fragments`: an `applyInPandasWithState` operator that
+  buffers a document's out-of-order html chunks per url and builds its
+  CPG once the set is complete — the "partial fragments" pattern.
 """
 
 from __future__ import annotations
@@ -23,49 +22,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType, LongType, StringType, StructField, StructType, TimestampType,
 )
-
-STATS_OUTPUT = StructType([
-    StructField("domain", StringType()),
-    StructField("n_pages", LongType()),
-    StructField("last_ts", TimestampType()),
-])
-STATS_STATE = StructType([
-    StructField("n_pages", LongType()),
-    StructField("last_ts_us", LongType()),
-])
-
-
-def _update_domain_stats(key: Any, pdfs: Iterator[pd.DataFrame],
-                         state: GroupState) -> Iterator[pd.DataFrame]:
-    (domain,) = key
-    if state.exists:
-        n_pages, last_us = state.get
-    else:
-        n_pages, last_us = 0, 0
-    for pdf in pdfs:
-        n_pages += len(pdf)
-        if len(pdf):
-            last_us = max(last_us, int(pdf["warc_ts"].max().value // 1000))
-    state.update((n_pages, last_us))
-    yield pd.DataFrame({
-        "domain": [domain],
-        "n_pages": [n_pages],
-        "last_ts": [pd.Timestamp(last_us * 1000)],
-    })
-
-
-def domain_running_stats(pages: DataFrame) -> DataFrame:
-    """Streaming: running per-domain totals via applyInPandasWithState
-    (state = one small tuple per domain, stored in RocksDB)."""
-    domain = F.regexp_extract("url", r"https://([^/]+)/", 1).alias("domain")
-    keyed = pages.select(domain, "warc_ts")
-    return keyed.groupBy("domain").applyInPandasWithState(
-        _update_domain_stats,
-        outputStructType=STATS_OUTPUT,
-        stateStructType=STATS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def join_pages_with_meta(pages: DataFrame, meta: DataFrame,

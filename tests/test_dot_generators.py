@@ -176,39 +176,3 @@ def test_dot_pdg_and_cpg14():
     full = dot_cpg14(cpg, m)
     assert len(_edges(full)) >= len(_edges(pdg))
     assert full.endswith("}\n")
-
-
-# DotCallGraphGenerator (semanticcpg dotgenerator/CallGraphGenerator.scala)
-def test_dot_call_graph():
-    from joern_spark.query.dot import dot_call_graph
-
-    cpg = build_cpg("""
-function f() { g(); }
-function g() { return 2; }
-f();
-""", "t.js")
-    dot = dot_call_graph(cpg)
-    assert dot.startswith('digraph "CPG"')
-    f_id = next(n.id for n in cpg.methods() if n.name == "f")
-    g_id = next(n.id for n in cpg.methods() if n.name == "g")
-    assert f'"{f_id}" -> "{g_id}" ' in dot
-    # dispatch-type labels with the _DISPATCH suffix stripped
-    assert 'label = "STATIC"' in dot or 'label = "DYNAMIC"' in dot
-    assert "subgraph cluster_" in dot
-
-
-# DotTypeHierarchyGenerator (TypeHierarchyGenerator.scala: supertype →
-# subtype TYPE edges, namespace clusters, external under <global>)
-def test_dot_type_hierarchy():
-    from joern_spark.query.dot import dot_type_hierarchy, type_hierarchy
-
-    cpg = build_cpg("""
-class Base { m() { return 1; } }
-class Derived extends Base { }
-""", "t.js")
-    g = type_hierarchy(cpg)
-    names = {(e.src.name, e.dst.name) for e in g.edges}
-    assert ("Base", "Derived") in names  # drawn supertype → subtype
-    dot = dot_type_hierarchy(cpg)
-    assert dot.startswith('digraph "CPG"')
-    assert "subgraph cluster_" in dot

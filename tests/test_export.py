@@ -1,5 +1,6 @@
 """joern-export format tests: graphml + graphson (JoernExport.scala:34-49
-representations via flatgraph GraphML/GraphSON exporter shapes)."""
+representations via flatgraph GraphML/GraphSON exporter shapes), and the
+`jobs/export.py` CLI end to end."""
 
 from __future__ import annotations
 
@@ -59,15 +60,44 @@ def test_graphson_valid_and_typed(spark, graph):
     assert isinstance(e0["@value"]["outV"]["@value"], int)
 
 
-def test_method_dot_frames(spark):
-    """Per-method dot export: one DotSerializer-format digraph per
-    internal method, rendered distributed."""
-    from joern_spark.query.export import method_dot_frames
-    from joern_spark.sources.corpus import make_pages
+def test_export_job_end_to_end(spark, tmp_path, monkeypatch, capsys):
+    """jobs/export.py on 32 pages: `--format dot` writes the per-method
+    DotSerializer digraphs `method_dot_frames` renders, and reports no
+    failed page; `--format graphml --repr all` writes one GraphML
+    document per page.  Neither run leaves a cached frame."""
+    import sys
 
-    pages = make_pages(spark, n_docs=16, n_partitions=2)
-    rows = method_dot_frames(pages, "cfg").collect()
-    assert len(rows) > 0
+    from jobs import export as export_job
+    from joern_spark.query.export import method_dot_frames
+
+    pages_dir = str(tmp_path / "pages")
+    make_pages(spark, n_docs=32).write.parquet(pages_dir)
+    pages = spark.read.parquet(pages_dir)
+    monkeypatch.setattr("joern_spark.session.get_spark", lambda **_: spark)
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(pinned().keys())
+
+    def run(fmt, representation):
+        out = str(tmp_path / fmt)
+        monkeypatch.setattr(sys, "argv", [
+            "export.py", "--pages", pages_dir, "--repr", representation,
+            "--format", fmt, "--out", out])
+        export_job.main()
+        return spark.read.parquet(out).collect()
+
+    dots = run("dot", "cfg")
+    assert "failed pages: 0" in capsys.readouterr().err
+    assert dots
     assert all(r.dot.startswith("digraph ") and r.dot.endswith("}\n")
-               for r in rows)
-    assert any(":program" in r.method_full_name for r in rows)
+               for r in dots)
+    assert any(":program" in r.method_full_name for r in dots)
+    want = method_dot_frames(pages, "cfg").collect()
+    assert sorted(map(tuple, dots)) == sorted(map(tuple, want))
+
+    docs = run("graphml", "all")
+    urls = [r.url for r in pages.select("url").collect()]
+    assert sorted(r.url for r in docs) == sorted(urls) and len(urls) == 32
+    ns = "{http://graphml.graphdrawing.org/xmlns}"
+    for r in docs:
+        assert ET.fromstring(r.graphml).find(f"{ns}graph").findall(f"{ns}node")
+    assert set(pinned().keys()) == before

@@ -4,8 +4,8 @@ BFS in its distributed, local and hybrid runs and under the hop cap, the
 connected-components hand-over from distributed rounds to the driver,
 release of every pinned block, the width and release of the results the
 loops hand back, cache ownership of caller inputs, the session conf no
-query may change, the one module that pins frames, and the spread-probe
-memo."""
+query may change, the one module that pins frames, the modules that only
+tests import, and the spread-probe memo."""
 
 from __future__ import annotations
 
@@ -203,6 +203,51 @@ def test_only_sparkutil_pins_frames():
                if any(call in p.read_text()
                       for call in (".persist(", ".cache(", "localCheckpoint("))}
     assert pinners == {"joern_spark/sparkutil.py"}
+
+
+# modules kept although only tests import them, each for a named next step
+TEST_ONLY_MODULES = {
+    # ROADMAP direction 10: the stateful join and the partial-CPG-fragment
+    # assembly are the stateful-join candidates its stream listener measures
+    "joern_spark/streaming/stateful.py",
+    # ROADMAP direction 11: the `CpgFrames` closures get a bench query
+    "joern_spark/query/frames.py",
+}
+
+
+def test_every_module_is_imported_outside_tests():
+    """A module of the library that no `.py` file outside `tests/`
+    imports is reached only by its tests: wire it into a job, stream,
+    bench query or tool, or delete it."""
+    import ast
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    imported = {}
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root)
+        if rel.parts[0] == "tests":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                names = [node.module, *(f"{node.module}.{a.name}"
+                                        for a in node.names)]
+            else:
+                continue
+            for name in names:
+                imported.setdefault(name, set()).add(rel)
+    unreached = set()
+    for path in (root / "joern_spark").rglob("*.py"):
+        rel = path.relative_to(root)
+        parts = rel.with_suffix("").parts
+        module = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        users = {f for name, files in imported.items()
+                 if name == module or name.startswith(module + ".")
+                 for f in files}
+        if not users - {rel}:
+            unreached.add(str(rel))
+    assert unreached == TEST_ONLY_MODULES
 
 
 def test_cached_releases_on_error(spark):

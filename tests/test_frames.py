@@ -1,5 +1,5 @@
 """Corpus-level DataFrame layer tests: CPGQL frame steps, iterative-join
-reachability vs the exact per-document engine, export, vectors."""
+reachability vs the exact per-document engine."""
 
 from __future__ import annotations
 
@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 
 from joern_spark.cpg.spark_build import build_cpg_tables
 from joern_spark.dataflow.reachable import reachable_pairs, walk
-from joern_spark.query.export import export_dot
 from joern_spark.query.frames import CpgFrames
-from joern_spark.query.vectors import bag_of_api_symbols
 from joern_spark.sources.corpus import make_pages, snippet_id_for
 from joern_spark.sparkutil import Rounds
 
@@ -56,22 +54,6 @@ def test_reachable_pairs_match_engine_counts(spark, graph):
     for url, n in per_url.items():
         assert n == 6, f"{url}: expected 6 reachable pairs, got {n}"
     assert per_url, "must find flows1 pairs"
-
-
-def test_export_dot(spark, graph):
-    nodes, edges = graph
-    dots = export_dot(nodes, edges, "ast").collect()
-    assert len(dots) == 40
-    assert all(r.dot.startswith("digraph g {") for r in dots)
-    assert all('[label="AST"]' in r.dot for r in dots)
-
-
-def test_vectors(spark, graph):
-    nodes, edges = graph
-    bag = bag_of_api_symbols(nodes, edges)
-    toks = {r.token for r in bag.select("token").distinct().collect()}
-    assert "read" in toks or "sink" in toks
-    assert not any(t.startswith("<operator>") for t in toks)
 
 
 def test_dataframe_closures_and_tags(spark, graph):

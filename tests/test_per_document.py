@@ -119,11 +119,12 @@ def test_flows_job_matches_reachable_by_flows(spark):
 
 def test_one_bad_page_costs_only_that_page(spark):
     """The nesting bomb raises RecursionError in the parser.  In one
-    partition beside valid pages: scan emits exactly one `<parse-error>`
-    row for it, the other paths drop it, and every valid page keeps the
-    rows it has without the bomb.  Alone, it leaves scan its one error
-    row and every other path no rows.  Evidence SARIF counts the bomb as
-    one failed-page notification and no result."""
+    partition beside valid pages: scan and the per-method dot export
+    each emit exactly one `<parse-error>` row for it, the other paths
+    drop it, and every valid page keeps the rows it has without the
+    bomb.  Alone, it leaves scan and dot their one error row and every
+    other path no rows.  Evidence SARIF counts the bomb as one
+    failed-page notification and no result."""
     from joern_spark.dataflow.slicing import data_flow_slices, usage_slices
     from joern_spark.query.export import method_dot_frames
     from joern_spark.query.sarif import scan_evidence_sarif
@@ -147,11 +148,14 @@ def test_one_bad_page_costs_only_that_page(spark):
     nodes, edges = _tables(mixed)
     assert (nodes, edges) == _tables(good)
     assert nodes
-    for frames in (lambda p: method_dot_frames(p, "cfg"), data_flow_slices,
-                   usage_slices):
+    for frames in (data_flow_slices, usage_slices):
         want = _rows(frames(good), "*")
         assert want
         assert _rows(frames(mixed), "*") == want
+    dot_error = (BOMB_URL, "<parse-error>", "RecursionError")
+    dots = _rows(method_dot_frames(good, "cfg"), "*")
+    assert dots and all(r[1] != "<parse-error>" for r in dots)
+    assert _rows(method_dot_frames(mixed, "cfg"), "*") == sorted([*dots, dot_error])
 
     results, ok, failed = _sarif(scan_evidence_sarif(good))
     assert results and ok and not failed
@@ -161,6 +165,7 @@ def test_one_bad_page_costs_only_that_page(spark):
     assert (_rows(scan_findings(bomb), "url", "query_name", "n_matches")
             == [(BOMB_URL, "<parse-error>", 1)])
     assert _tables(bomb) == ([], [])
+    assert _rows(method_dot_frames(bomb, "cfg"), "*") == [dot_error]
     for frames in (data_flow_slices, usage_slices):
         assert not frames(bomb).collect()
     assert _sarif(scan_evidence_sarif(bomb)) == ([], False, [BOMB_URL])

@@ -244,33 +244,6 @@ def test_windowed_counts_match_batch(spark, corpus_dir):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stateful_domain_stats(spark, corpus_dir):
-    """applyInPandasWithState: running per-domain totals; final state equals
-    the batch group-by."""
-    import tempfile
-    from joern_spark.streaming.stateful import domain_running_stats
-
-    base = tempfile.mkdtemp(prefix="state_")
-    stream = job.pages_stream(spark, corpus_dir)
-    out = domain_running_stats(stream)
-    results = {}
-
-    def sink(batch_df, batch_id):
-        for r in batch_df.collect():
-            results[r.domain] = r.n_pages  # update semantics: latest wins
-
-    q = (out.writeStream.outputMode("update")
-         .option("checkpointLocation", f"{base}/cp")
-         .foreachBatch(sink).trigger(availableNow=True).start())
-    q.awaitTermination(300)
-
-    batch = (spark.read.parquet(corpus_dir)
-             .groupBy(F.regexp_extract("url", r"https://([^/]+)/", 1).alias("domain"))
-             .count().collect())
-    expected = {r.domain: r["count"] for r in batch}
-    assert results == expected
-
-
 def test_stream_stream_join(spark, corpus_dir):
     """Watermarked stream-stream join: every page finds its (possibly late)
     metadata record exactly once."""

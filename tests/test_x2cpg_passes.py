@@ -1,14 +1,12 @@
 """Ported reference goldens: the x2cpg base-pass unit suites over
-synthetic graphs — CfgDominatorPassTests, CfgDominatorFrontierTests,
-ContainsEdgePassTest, NamespaceCreatorTests, MethodDecoratorPassTests
+synthetic graphs — CfgDominatorPassTests, ContainsEdgePassTest,
+NamespaceCreatorTests, MethodDecoratorPassTests
 (x2cpg/src/test/.../passes/*.scala)."""
 
 from __future__ import annotations
 
 from joern_spark.cpg.core import Cpg, Node
-from joern_spark.cpg.dominators import (
-    _DomGraph, _immediate_dominators, add_dominators, dominance_frontier,
-)
+from joern_spark.cpg.dominators import add_dominators
 from joern_spark.cpg.passes import (
     add_contains_edges, create_namespaces, create_parameter_outs,
 )
@@ -47,60 +45,6 @@ def test_cfg_dominator_pass():
     assert _out_set(cpg, v2, "POST_DOMINATE") == {v1.id}
     assert _out_set(cpg, v1, "POST_DOMINATE") == {v0.id}
     assert _out_set(cpg, v0, "POST_DOMINATE") == set()
-
-
-class _FwdGraph:
-    """TestCfgAdapter shape: forward CFG over a raw Cpg."""
-
-    def __init__(self, cpg, entry):
-        self.cpg = cpg
-        self.entry = entry
-
-    def succ(self, n):
-        return [e.dst for e in self.cpg.out(n, "CFG")]
-
-    def pred(self, n):
-        return [e.src for e in self.cpg.inn(n, "CFG")]
-
-
-# CfgDominatorFrontierTests.scala:29-78 (dominance frontier)
-def test_dominance_frontier():
-    cpg = Cpg()
-    vs = [cpg.add_node(Node("UNKNOWN")) for _ in range(7)]
-    v0, v1, v2, v3, v4, v5, v6 = vs
-    for a, b in ((v0, v1), (v1, v2), (v2, v3), (v2, v5), (v3, v4),
-                 (v4, v2), (v4, v5), (v5, v6)):
-        cpg.add_edge(a, b, "CFG")
-
-    g = _FwdGraph(cpg, v0)
-    idom = _immediate_dominators(g)
-    df = dominance_frontier(vs, g.pred, idom)
-
-    assert v0.id not in df
-    assert v1.id not in df
-    assert df[v2.id] == {v2.id}
-    assert df[v3.id] == {v2.id, v5.id}
-    assert df[v4.id] == {v2.id, v5.id}
-    assert v5.id not in df
-    assert v6.id not in df
-
-
-# CfgDominatorFrontierTests.scala:80-106 (frontier with dead code)
-def test_dominance_frontier_dead_code():
-    cpg = Cpg()
-    v0 = cpg.add_node(Node("UNKNOWN"))
-    v1 = cpg.add_node(Node("UNKNOWN"))  # unreachable from entry
-    v2 = cpg.add_node(Node("UNKNOWN"))
-    cpg.add_edge(v0, v2, "CFG")
-    cpg.add_edge(v1, v2, "CFG")
-
-    g = _FwdGraph(cpg, v0)
-    idom = _immediate_dominators(g)
-    df = dominance_frontier([v0, v1, v2], g.pred, idom)
-
-    assert v0.id not in df
-    assert df[v1.id] == {v2.id}
-    assert v2.id not in df
 
 
 # ContainsEdgePassTest.scala:16-40 (files/classes/methods containment)
