@@ -7,11 +7,12 @@ write one representation of every page's CPG as a parquet table.
         --format dot|graphml|graphson --out <dir>
 
 - dot: one row (url, method_full_name, dot) per internal method
-  (`method_dot_frames`); the count of pages that failed to build goes to
-  stderr, and their error rows stay out of the table.  `all` has no
-  per-method rendering.
+  (`method_dot_frames`); their error rows stay out of the table.  `all`
+  has no per-method rendering.
 - graphml / graphson: one row (url, graphml|graphson) per page, over one
   materialized build (`export_graphml` / `export_graphson`).
+
+Every format prints the count of pages that failed to build to stderr.
 """
 
 from __future__ import annotations
@@ -51,15 +52,16 @@ def main():
         with cached(dots):
             dots.where(~failed).write.mode("overwrite").parquet(args.out)
             n_failed = dots.where(failed).count()
-        print(f"failed pages: {n_failed}", file=sys.stderr)
     else:
         export = {"graphml": export_graphml,
                   "graphson": export_graphson}[args.format]
         tables = build_cpg_tables(pages)
         try:
             export(*tables, args.repr).write.mode("overwrite").parquet(args.out)
+            n_failed = tables.failed_pages()
         finally:
             tables.unpersist()
+    print(f"failed pages: {n_failed}", file=sys.stderr)
     rows = spark.read.parquet(args.out).count()
     print(f"{args.format} export written: {args.out} rows={rows}")
 

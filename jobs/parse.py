@@ -27,8 +27,11 @@ def main():
 
     spark = get_spark(app_name="joern-spark-parse")
     spark.sparkContext.setLogLevel("ERROR")
-    nodes, edges = build_cpg_tables(spark.read.parquet(args.pages))
-    save_cpg_tables(nodes, edges, args.out, mode=args.mode)
+    tables = build_cpg_tables(spark.read.parquet(args.pages))
+    try:
+        save_cpg_tables(*tables, args.out, mode=args.mode)
+    finally:
+        tables.unpersist()
     n, e = load_cpg_tables(spark, args.out)
     print(f"cpg store written: {args.out} nodes={n.count()} edges={e.count()}")
 

@@ -18,7 +18,8 @@ Scale notes (100 TB):
 - a document whose decode, extract, build or per-CPG body raises costs
   that document only (never the batch): `map_documents` drops it, or emits
   the caller's error row for it (scan's `<parse-error>`, crosspage's
-  `summarize_failed:<Exc>`).  `build_cpg_rows` drops it.
+  `summarize_failed:<Exc>`, `build_cpg_rows`' `kind = 'x'`, which
+  `CpgTables.failed_pages` counts).
 
 Schema scope: NODES_SCHEMA is the QUERYABLE SUBSET of the per-document
 node model — the 16 properties the corpus queries (frames.py), the
@@ -171,6 +172,7 @@ def cpg_rows_for_document(url: str, html: str | bytes):
 _N_PAD = (None, None, None)          # src, dst, variable on node rows
 # node-only fields after label (name..index) on edge rows:
 _E_PAD = tuple([None] * (len(NODES_SCHEMA.fields) - 3))
+_X_PAD = tuple([None] * (len(COMBINED_SCHEMA.fields) - 2))  # after kind, url
 
 
 def build_cpg_rows(pages: DataFrame, on_build=None) -> DataFrame:
@@ -178,7 +180,8 @@ def build_cpg_rows(pages: DataFrame, on_build=None) -> DataFrame:
 
     Every document is parsed and lowered exactly once; node and edge rows
     are emitted together with a `kind` tag and split by cheap filters in
-    `split_cpg_tables`.  `on_build(url)` is an optional per-document hook
+    `split_cpg_tables`; a page that fails to build emits one `kind = 'x'`
+    row with its url.  `on_build(url)` is an optional per-document hook
     (pickled into the worker closure) used by tests to assert the
     build-once invariant.
     """
@@ -194,7 +197,10 @@ def build_cpg_rows(pages: DataFrame, on_build=None) -> DataFrame:
                     for er in edge_rows)
         return rows
 
-    return map_documents(pages, COMBINED_SCHEMA, body)
+    def on_error(url, _exc):
+        return [("x", url) + _X_PAD]
+
+    return map_documents(pages, COMBINED_SCHEMA, body, on_error)
 
 
 def split_cpg_tables(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -206,13 +212,17 @@ def split_cpg_tables(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 class CpgTables(tuple):
-    """(nodes, edges) over one materialized build; unpacks as a pair, and
-    `unpersist()` releases the build both halves read."""
+    """(nodes, edges) over one materialized build; unpacks as a pair,
+    `failed_pages()` counts the pages that failed to build, and
+    `unpersist()` releases the build all three read."""
 
     def __new__(cls, combined: DataFrame):
         self = super().__new__(cls, split_cpg_tables(combined))
         self._combined = combined
         return self
+
+    def failed_pages(self) -> int:
+        return self._combined.where(self._combined["kind"] == "x").count()
 
     def unpersist(self, blocking: bool = False) -> None:
         self._combined.unpersist(blocking)

@@ -20,14 +20,14 @@ JoernScanResultToSarifConverter.scala, SarifExtension.scala):
 Branding deviation: tool.driver identifies this engine (joern-spark),
 not the reference's product strings.
 
-Corpus scale: findings are produced per document inside the scan UDF
-(`scan_evidence_sarif`); the driver only merges the report-sized
-per-document runs (the collect contract of findings_report in
-query/scan.py).  This is the engine's one SARIF writer.
+Corpus scale: the scan's one per-page pass (query/scan.py) builds each
+finding row's results as JSON; `sarif_from_findings` merges the rows on
+the driver.  This is the engine's one SARIF writer.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 
 from joern_spark.cpg.core import Cpg, Node
@@ -158,76 +158,33 @@ def findings_to_sarif(cpg: Cpg, findings: "list[Finding]") -> dict:
     }
 
 
-def document_findings(cpg: Cpg, bundle=None) -> "list[Finding]":
-    """Evidence-grade findings for one document: taint queries yield one
-    Finding per flow (evidence = the visible path, sink last — the shape
-    JoernScanResultToSarifConverter expects); pattern queries one Finding
-    per matched node."""
-    from joern_spark.query.cpgql import Q
-    from joern_spark.query.scan import default_bundle
-
-    queries = bundle if bundle is not None else default_bundle()
-    q = Q(cpg)
-    out: list[Finding] = []
-    for query in queries:
-        for ev in query.evidence_lists(cpg, q):
-            out.append(Finding(name=query.name, title=query.name,
-                               description=query.name, score=query.score,
-                               evidence=ev))
-    return out
+def page_error_notification(url: str, exc: BaseException) -> dict:
+    """The error `toolExecutionNotification` of a page whose build or
+    scan raised: the exception class, with the url as its location."""
+    return {"level": "error",
+            "message": {"text": f"{type(exc).__name__}: page not scanned"},
+            "locations": [{"physicalLocation": {
+                "artifactLocation": {"uri": url}}}]}
 
 
-def scan_evidence_sarif(pages, bundle=None) -> dict:
-    """Corpus scan → ONE SARIF document with per-match locations and code
-    flows.  The expensive part (build + query + evidence extraction +
-    per-document SARIF conversion) runs distributed in one mapInArrow
-    pass; the driver only merges the (report-sized) per-document result
-    lists — same collect contract as findings_report.
-
-    A page whose build or scan fails adds no result: it becomes one
-    error-level `toolExecutionNotifications` entry (the exception class,
-    the url as location) of the run's invocation, and the invocation's
-    `executionSuccessful` is false."""
-    import json
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from joern_spark.cpg.spark_build import map_documents
-
-    schema = StructType([StructField("url", StringType()),
-                         StructField("doc", StringType()),
-                         StructField("error", StringType())])
-
-    def body(url, cpg):
-        findings = document_findings(cpg, bundle)
-        if findings:
-            run_doc = findings_to_sarif(cpg, findings)["runs"][0]
-            yield url, json.dumps(run_doc), None
-
-    def on_error(url, exc):
-        return [(url, None, type(exc).__name__)]
-
-    merged_rules: dict[str, dict] = {}
-    results: list[dict] = []
-    notifications: list[dict] = []
-    for row in map_documents(pages, schema, body, on_error).collect():
-        if row.error is not None:
-            notifications.append({
-                "level": "error",
-                "message": {"text": f"{row.error}: page not scanned"},
-                "locations": [{"physicalLocation": {
-                    "artifactLocation": {"uri": row.url}}}],
-            })
-            continue
-        run_doc = json.loads(row.doc)
-        for rule in run_doc["tool"]["driver"]["rules"]:
-            merged_rules.setdefault(rule["id"], rule)
-        results.extend(run_doc["results"])
-
-    base = findings_to_sarif(Cpg(), [])
-    run = base["runs"][0]
-    run["tool"]["driver"]["rules"] = list(merged_rules.values())
-    run["results"] = results
-    run["invocations"] = [{"executionSuccessful": not notifications,
-                           "toolExecutionNotifications": notifications}]
-    return base
+def sarif_from_findings(findings) -> dict:
+    """A findings frame (query/scan.py `FINDINGS_SCHEMA`) → ONE SARIF
+    document: one rule per query name in first-seen order, the results
+    each finding row's `sarif` holds, and the error notification each
+    `<parse-error>` row's holds, any of which makes the invocation's
+    `executionSuccessful` false.  The driver collects report-sized JSON
+    rows only, the collect contract of `findings_report`."""
+    rows = findings.select("query_name", "sarif").collect()
+    failed = [json.loads(r.sarif) for r in rows
+              if r.query_name == "<parse-error>"]
+    found = [r for r in rows if r.query_name != "<parse-error>"]
+    # evidence-free Findings give the rules; their placeholder results
+    # are replaced by the rows' results
+    names = dict.fromkeys(r.query_name for r in found)
+    doc = findings_to_sarif(Cpg(), [Finding(name=n, title=n, description=n)
+                                    for n in names])
+    run = doc["runs"][0]
+    run["results"] = [res for r in found for res in json.loads(r.sarif)]
+    run["invocations"] = [{"executionSuccessful": not failed,
+                           "toolExecutionNotifications": failed}]
+    return doc

@@ -3,13 +3,16 @@
 The Spark form of joern-scan (SURVEY.md §3c / §A20): each Query descriptor
 mirrors querydb `Query.make` (name, score, a traversal); the scan maps each
 document's CPG through every query inside ONE `mapInArrow` pass and emits
-finding rows `(url, warc_ts, query_name, n_matches, score)` — the per-window
-match counts the streaming job aggregates must equal the reference
-suite's counts on the same corpus slice (BASELINE.json north_star).
+finding rows `(url, warc_ts, query_name, n_matches, score, sarif)` — the
+per-window match counts the streaming job aggregates must equal the
+reference suite's counts on the same corpus slice (BASELINE.json
+north_star).  As ScanPass's FINDING nodes do, the rows serve both the
+report and SARIF (`sarif` holds the row's SARIF results as JSON).
 """
 
 from __future__ import annotations
 
+import json
 import re
 from collections.abc import Callable, Iterator
 from datetime import datetime, timezone
@@ -24,14 +27,17 @@ from joern_spark.cpg.core import Cpg
 from joern_spark.cpg.spark_build import document_batch, map_documents
 from joern_spark.dataflow.engine import reachable_by_flows
 from joern_spark.query.cpgql import Q
+from joern_spark.query.sarif import (
+    Finding, finding_to_result, page_error_notification,
+)
 
 
 class Query:
     """querydb-style descriptor (DangerousFunctions.scala:14-52 shape): like
     `Query.make`, one traversal, ``find(cpg, q)``, which returns one
-    evidence node list per match.  The scan's count (`matcher`) and the
-    SARIF results with their code flows (`evidence_lists`, query/sarif.py)
-    both come from that list, so they cannot disagree."""
+    evidence node list per match.  The scan's count and the SARIF results
+    with their code flows (query/sarif.py) both come from one call's list,
+    so they cannot disagree."""
 
     def __init__(self, name: str, score: float,
                  find: Callable[[Cpg, Q], list[list]]):
@@ -41,9 +47,6 @@ class Query:
 
     def matcher(self, cpg: Cpg, q: Q) -> int:
         return len(self.find(cpg, q))
-
-    def evidence_lists(self, cpg: Cpg, q: Q) -> list[list]:
-        return self.find(cpg, q)
 
 
 def _flows(sources, sinks) -> Callable[[Cpg, Q], list]:
@@ -227,23 +230,29 @@ FINDINGS_SCHEMA = StructType([
     StructField("query_name", StringType()),
     StructField("n_matches", IntegerType()),
     StructField("score", DoubleType()),
+    StructField("sarif", StringType()),
 ])
 
 
 def _scan_page(queries: list[Query]):
-    """Per-page scan body and error row for `map_documents`: one finding
-    row per query with n_matches > 0; a page that fails emits one
-    `<parse-error>` row."""
+    """The per-page scan body and error row for `map_documents`: one
+    finding row per query with n_matches > 0, `sarif` its results; a page
+    that fails emits one `<parse-error>` row, `sarif` its notification."""
 
     def body(url, cpg, ts):
         q = Q(cpg)
         for query in queries:
-            n = int(query.matcher(cpg, q))
-            if n > 0:
-                yield url, ts, query.name, n, query.score
+            matches = query.find(cpg, q)
+            if matches:
+                results = [finding_to_result(cpg, Finding(
+                    name=query.name, title=query.name, score=query.score,
+                    evidence=ev)) for ev in matches]
+                yield (url, ts, query.name, len(matches), query.score,
+                       json.dumps(results))
 
-    def on_error(url, _exc, ts):
-        return [(url, ts, "<parse-error>", 1, 0.0)]
+    def on_error(url, exc, ts):
+        return [(url, ts, "<parse-error>", 1, 0.0,
+                 json.dumps(page_error_notification(url, exc)))]
 
     return body, on_error
 

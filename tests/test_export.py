@@ -64,8 +64,12 @@ def test_export_job_end_to_end(spark, tmp_path, monkeypatch, capsys):
     """jobs/export.py on 32 pages: `--format dot` writes the per-method
     DotSerializer digraphs `method_dot_frames` renders, and reports no
     failed page; `--format graphml --repr all` writes one GraphML
-    document per page.  Neither run leaves a cached frame."""
+    document per page.  With a nesting bomb among the pages, `--format
+    graphson` writes the 32 good pages and counts the bomb as one failed
+    page.  No run leaves a cached frame."""
     import sys
+
+    from pyspark.sql import functions as F
 
     from jobs import export as export_job
     from joern_spark.query.export import method_dot_frames
@@ -77,7 +81,7 @@ def test_export_job_end_to_end(spark, tmp_path, monkeypatch, capsys):
     pinned = spark.sparkContext._jsc.getPersistentRDDs
     before = set(pinned().keys())
 
-    def run(fmt, representation):
+    def run(fmt, representation, pages_dir=pages_dir):
         out = str(tmp_path / fmt)
         monkeypatch.setattr(sys, "argv", [
             "export.py", "--pages", pages_dir, "--repr", representation,
@@ -100,4 +104,17 @@ def test_export_job_end_to_end(spark, tmp_path, monkeypatch, capsys):
     ns = "{http://graphml.graphdrawing.org/xmlns}"
     for r in docs:
         assert ET.fromstring(r.graphml).find(f"{ns}graph").findall(f"{ns}node")
+    assert "failed pages: 0" in capsys.readouterr().err
+
+    mixed_dir = str(tmp_path / "mixed")
+    bomb = spark.createDataFrame(
+        [("https://a.example.com/bomb",
+          bytearray(b"<script>" + b"(" * 8000 + b"</script>"))],
+        "url string, html binary").select(
+            "url", F.current_timestamp().alias("warc_ts"), "html")
+    pages.select("url", "warc_ts", "html").unionByName(bomb) \
+        .write.parquet(mixed_dir)
+    docs = run("graphson", "ast", mixed_dir)
+    assert "failed pages: 1" in capsys.readouterr().err
+    assert sorted(r.url for r in docs) == sorted(urls)
     assert set(pinned().keys()) == before

@@ -123,11 +123,11 @@ def test_one_bad_page_costs_only_that_page(spark):
     each emit exactly one `<parse-error>` row for it, the other paths
     drop it, and every valid page keeps the rows it has without the
     bomb.  Alone, it leaves scan and dot their one error row and every
-    other path no rows.  Evidence SARIF counts the bomb as one
-    failed-page notification and no result."""
+    other path no rows.  The SARIF merge of the scan's rows counts the
+    bomb as one failed-page notification and no result."""
     from joern_spark.dataflow.slicing import data_flow_slices, usage_slices
     from joern_spark.query.export import method_dot_frames
-    from joern_spark.query.sarif import scan_evidence_sarif
+    from joern_spark.query.sarif import sarif_from_findings
     from joern_spark.query.scan import scan_findings
 
     good = make_pages(spark, n_docs=8).select("url", "warc_ts", "html")
@@ -157,9 +157,10 @@ def test_one_bad_page_costs_only_that_page(spark):
     assert dots and all(r[1] != "<parse-error>" for r in dots)
     assert _rows(method_dot_frames(mixed, "cfg"), "*") == sorted([*dots, dot_error])
 
-    results, ok, failed = _sarif(scan_evidence_sarif(good))
+    results, ok, failed = _sarif(sarif_from_findings(scan_findings(good)))
     assert results and ok and not failed
-    assert _sarif(scan_evidence_sarif(mixed)) == (results, False, [BOMB_URL])
+    assert (_sarif(sarif_from_findings(scan_findings(mixed)))
+            == (results, False, [BOMB_URL]))
 
     # a batch whose every page fails: the error row, or an empty batch
     assert (_rows(scan_findings(bomb), "url", "query_name", "n_matches")
@@ -168,7 +169,8 @@ def test_one_bad_page_costs_only_that_page(spark):
     assert _rows(method_dot_frames(bomb, "cfg"), "*") == [dot_error]
     for frames in (data_flow_slices, usage_slices):
         assert not frames(bomb).collect()
-    assert _sarif(scan_evidence_sarif(bomb)) == ([], False, [BOMB_URL])
+    assert (_sarif(sarif_from_findings(scan_findings(bomb)))
+            == ([], False, [BOMB_URL]))
 
 
 def test_pass_timing_sees_every_pass():

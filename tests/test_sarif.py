@@ -12,9 +12,7 @@ from collections import Counter
 
 from joern_spark.cpg.build import build_cpg
 from joern_spark.cpg.core import Cpg, Node
-from joern_spark.query.sarif import (
-    Finding, cvss_to_level, document_findings, findings_to_sarif,
-)
+from joern_spark.query.sarif import Finding, cvss_to_level, findings_to_sarif
 
 
 def _valid_finding(cpg):
@@ -113,40 +111,47 @@ def test_cvss_to_level():
     assert cvss_to_level(11.0) == "warning"
 
 
-# end-to-end: the scan bundle yields evidence-grade findings whose SARIF
-# carries real locations and code flows
-def test_document_findings_end_to_end():
+# end-to-end: the scan's per-page body (the one the Spark path runs) yields
+# finding rows whose SARIF results carry real locations and code flows
+def test_scan_page_sarif_end_to_end():
+    import json
+
+    from joern_spark.query.scan import _scan_page, default_bundle
+
     cpg = build_cpg("var x = source(); sink(x); eval('1');", "page.js")
-    findings = document_findings(cpg)
-    names = {f.name for f in findings}
+    body, _on_error = _scan_page(default_bundle())
+    rows = list(body("page.js", cpg, None))
+    names = {r[2] for r in rows}
     assert "source-to-sink" in names
     assert "eval-like-call" in names
-    sarif = findings_to_sarif(cpg, findings)
-    results = sarif["runs"][0]["results"]
+    results = [res for r in rows for res in json.loads(r[5])]
+    assert all(len(json.loads(r[5])) == r[3] for r in rows)
     taint = next(r for r in results if r["ruleId"] == "source-to-sink")
     # sink is the result location, the flow walks source → sink
     flow_locs = taint["codeFlows"][0]["threadFlows"][0]["locations"]
     assert len(flow_locs) >= 2
+    assert flow_locs[-1]["location"] == taint["locations"][0]
     assert taint["level"] == "error"
     ev = next(r for r in results if r["ruleId"] == "eval-like-call")
     snippet = ev["locations"][0]["physicalLocation"]["region"]["snippet"]
     assert "eval" in snippet["text"]
 
 
-def test_scan_evidence_sarif_spark():
-    """Distributed evidence SARIF: one mapInArrow pass builds+scans+
-    converts per document; the driver merges runs."""
+def test_sarif_from_findings_spark():
+    """Distributed evidence SARIF: the scan's one mapInArrow pass builds,
+    scans and converts per document; the driver merges the rows."""
     import pytest
     spark = pytest.importorskip("pyspark.sql").SparkSession.getActiveSession()
     if spark is None:
         from joern_spark.session import get_spark
         spark = get_spark(app_name="sarif-test", master="local[2]",
                           shuffle_partitions=2)
-    from joern_spark.query.sarif import scan_evidence_sarif
-    from joern_spark.sources.corpus import make_pages
+    from joern_spark.query.sarif import sarif_from_findings
+    from joern_spark.query.scan import scan_findings, web_taint_bundle
+    from joern_spark.sources.corpus import make_pages, make_taint_pages
 
     pages = make_pages(spark, n_docs=32, n_partitions=2)
-    doc = scan_evidence_sarif(pages)
+    doc = sarif_from_findings(scan_findings(pages))
     assert doc["version"] == "2.1.0"
     results = doc["runs"][0]["results"]
     assert len(results) > 0
@@ -162,13 +167,10 @@ def test_scan_evidence_sarif_spark():
         {"executionSuccessful": True, "toolExecutionNotifications": []}]
 
     # the scan's count and the SARIF results come from one match list
-    from joern_spark.query.scan import scan_findings, web_taint_bundle
-    from joern_spark.sources.corpus import make_taint_pages
-
     assert _sarif_counts(doc) == _scan_counts(scan_findings(pages))
     taint_pages = make_taint_pages(spark, n_docs=32, n_partitions=2)
     bundle = web_taint_bundle()
-    assert (_sarif_counts(scan_evidence_sarif(taint_pages, bundle))
+    assert (_sarif_counts(sarif_from_findings(scan_findings(taint_pages, bundle)))
             == _scan_counts(scan_findings(taint_pages, bundle)))
 
 
@@ -215,3 +217,45 @@ def test_scan_job_end_to_end(spark, tmp_path, monkeypatch, capsys):
     assert results
     for r in results:
         assert r["level"] == cvss_to_level(score[r["ruleId"]]), r["ruleId"]
+
+
+def test_scan_job_builds_each_page_once(spark, tmp_path, monkeypatch, capsys):
+    """jobs/scan.py --sarif builds and scans each page once: a bundle query
+    that counts its calls on a Spark accumulator sees one call per page,
+    and the report and the SARIF file agree per (url, rule)."""
+    import json
+    import re
+    import sys
+
+    from jobs import scan as scan_job
+    from joern_spark.query.scan import Query, default_bundle
+    from joern_spark.sources.corpus import make_pages
+
+    calls = spark.sparkContext.accumulator(0)
+    bundle = default_bundle()
+    taint = next(q for q in bundle if q.name == "source-to-sink")
+
+    def counted(cpg, q, find=taint.find):
+        calls.add(1)
+        return find(cpg, q)
+
+    bundle.append(Query("counted-source-to-sink", taint.score, counted))
+    monkeypatch.setattr("joern_spark.query.scan.default_bundle",
+                        lambda: bundle)
+
+    n_pages = 128
+    pages_dir, sarif_path = str(tmp_path / "pages"), tmp_path / "out.sarif"
+    make_pages(spark, n_docs=n_pages).write.parquet(pages_dir)
+    monkeypatch.setattr("joern_spark.session.get_spark", lambda **_: spark)
+    monkeypatch.setattr(sys, "argv", ["scan.py", "--pages", pages_dir,
+                                      "--sarif", str(sarif_path)])
+    scan_job.main()
+    assert calls.value == n_pages
+
+    line = re.compile(r"Result: \S+ : (\S+): (\d+) match\(es\) in (\S+)$")
+    report = {}
+    for ln in capsys.readouterr().out.splitlines():
+        rule, n, url = line.match(ln).groups()
+        report[(url, rule)] = int(n)
+    assert any(rule == "counted-source-to-sink" for _, rule in report)
+    assert _sarif_counts(json.loads(sarif_path.read_text())) == report

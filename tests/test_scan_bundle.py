@@ -216,5 +216,5 @@ def test_web_bundle_has_evidence():
     for name, query in WEB_BUNDLE.items():
         snippet = WEB_CASES[name]["positive"][0]
         cpg = build_cpg(snippet)
-        ev = query.evidence_lists(cpg, Q(cpg))
+        ev = query.find(cpg, Q(cpg))
         assert ev and all(len(path) >= 1 for path in ev), name

@@ -37,3 +37,27 @@ def test_save_resave_load_round_trip(spark):
         got_keys = {(r.url, r.node_id) for r in merged_n.select("url", "node_id").collect()}
         assert got_keys == want_keys
     tables.unpersist()
+
+
+def test_parse_job_releases_its_build(spark, tmp_path, monkeypatch, capsys):
+    """jobs/parse.py writes the store the build gives and leaves no
+    persistent RDD behind."""
+    import sys
+
+    from jobs import parse as parse_job
+
+    pages_dir, out = str(tmp_path / "pages"), str(tmp_path / "store")
+    make_pages(spark, n_docs=8).write.parquet(pages_dir)
+    monkeypatch.setattr("joern_spark.session.get_spark", lambda **_: spark)
+    monkeypatch.setattr(sys, "argv", ["parse.py", "--pages", pages_dir,
+                                      "--out", out])
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = pinned().size()
+    parse_job.main()
+    assert pinned().size() == before
+
+    tables = build_cpg_tables(spark.read.parquet(pages_dir))
+    want = _counts(*tables)
+    tables.unpersist()
+    assert want[0] > 0
+    assert f"nodes={want[0]} edges={want[1]}" in capsys.readouterr().out
